@@ -379,9 +379,13 @@ def _lsh_jaccard_fused(
 ) -> DataFrame:
     """Single-pass MinHash-LSH near-dup pipeline: shingle-hash ->
     minhash -> band buckets (hash arrays carried along) -> within-
-    bucket pairs with exact Jaccard verify. One text scan, two
-    shuffles (bucket groupBy + final distinct), zero caching, zero
-    joins.
+    bucket pairs with exact Jaccard verify. One text scan, zero
+    caching, zero joins. Past ``_parallelize`` (which repartitions
+    only an under-split input), the default uncapped path has one
+    shuffle, the bucket groupBy: each pair is emitted only from the
+    first band its two docs share, so the pair stream is already
+    unique. Only a ``max_bucket`` cap adds a final distinct() shuffle
+    (see the comment below).
 
     The verify intersects the DISTINCT token-hash shingle hashes, not
     the shingle strings: |hash(A) ∩ hash(B)| / |hash(A) ∪ hash(B)|
@@ -527,8 +531,6 @@ def _banded_signature_kernel(
     BFMT = ",".join(["%d"] * rows_per_band)
 
     def run(batches):
-        from rio_toa_spark.operators.batching import coalesce_batches
-
         md5 = hashlib.md5
         cache: dict = {}
         bcache: dict = {}
@@ -542,7 +544,7 @@ def _banded_signature_kernel(
 
         import itertools
 
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             keys_in = pdf[key].to_numpy()
             texts = pdf["_nt"].tolist()
             doc_keys = []
@@ -741,9 +743,7 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
             out_j.append(jv[keep])
 
     def run(batches):
-        from rio_toa_spark.operators.batching import coalesce_batches
-
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             out_a: list = []
             out_b: list = []
             out_j: list = []

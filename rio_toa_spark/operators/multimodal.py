@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rio_toa_spark.operators.dedup import _parse_bytes
+
 try:  # pragma: no cover - not present in this container
     from PIL import Image  # noqa: F401
 
@@ -167,19 +169,37 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
                 pass
         return _fake_decode(p), "stub"
 
+    # decoding multiplies bytes (a few-KB JPEG becomes ~100 KB of
+    # pixels), so the input batch's byte bound says nothing about the
+    # output's. Cut output frames at the same conf that bounds the
+    # input, read once here on the driver.
+    max_bytes = _parse_bytes(
+        df.sparkSession.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
+    )
+
+    def _frame(keys: pd.Series, decoded: list) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                key: keys.reset_index(drop=True),
+                "height": [d.shape[0] for d, _ in decoded],
+                "width": [d.shape[1] for d, _ in decoded],
+                "channels": [d.shape[2] for d, _ in decoded],
+                "pixels": [d.tobytes() for d, _ in decoded],
+                "decode_status": [s for _, s in decoded],
+            }
+        )
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [_decode_one(p) for p in pdf[payload]]
-            yield pd.DataFrame(
-                {
-                    key: pdf[key],
-                    "height": [d.shape[0] for d, _ in decoded],
-                    "width": [d.shape[1] for d, _ in decoded],
-                    "channels": [d.shape[2] for d, _ in decoded],
-                    "pixels": [d.tobytes() for d, _ in decoded],
-                    "decode_status": [s for _, s in decoded],
-                }
-            )
+            start, size, decoded = 0, 0, []
+            for p in pdf[payload]:
+                decoded.append(_decode_one(p))
+                size += decoded[-1][0].nbytes
+                if size >= max_bytes:
+                    yield _frame(pdf[key].iloc[start : start + len(decoded)], decoded)
+                    start, size, decoded = start + len(decoded), 0, []
+            if decoded:
+                yield _frame(pdf[key].iloc[start:], decoded)
 
     return df.mapInPandas(run, schema)
 

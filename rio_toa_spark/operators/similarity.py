@@ -166,13 +166,11 @@ def cosine_topk(
     def score(batches):
         import pandas as pd
 
-        from rio_toa_spark.operators.batching import coalesce_batches
-
         q_ids_l, Q_l, qn_l = bc.value
         if not q_ids_l:
             return
         qid_arr = np.array(q_ids_l)
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             if not len(pdf):
                 continue
             vecs = pdf[vec].to_numpy()
@@ -295,19 +293,16 @@ def cosine_topk_ivf(
     def assign_and_score(batches):
         import pandas as pd
 
-        from rio_toa_spark.operators.batching import coalesce_batches
-
         q_ids_l, Q_l, qn_l, probes_l, C_l = bc.value
         if not q_ids_l:
             return
         qid_arr = np.array(q_ids_l)
-        # embedding rows are small: coalesce the 256-row Arrow batches
-        # so BLAS sees efficient matrix shapes and per-batch overhead
-        # amortizes. Safe for the exact ann_ivf oracle: batch-shape-
-        # dependent BLAS summation variation is bounded far below the
-        # >=1e-6 assignment margin the fixture asserts at generation
-        # (sources/truth.py).
-        for pdf in coalesce_batches(batches):
+        # the list assignment below is a BLAS matmul over a whole Arrow
+        # batch, so its float sums depend on the batch's shape. Safe
+        # for the exact ann_ivf oracle: that variation is bounded far
+        # below the >=1e-6 assignment margin the fixture asserts at
+        # generation (sources/truth.py).
+        for pdf in batches:
             if not len(pdf):
                 continue
             V32 = np.vstack(pdf[vec].to_numpy())

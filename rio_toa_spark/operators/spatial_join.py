@@ -215,13 +215,8 @@ def _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat):
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rio_toa_spark.operators.batching import coalesce_batches
-
         index, fp_payload = bc.value
-        # page rows are tiny: coalesce the session's 256-row Arrow
-        # batches so the per-batch pandas/Arrow overhead amortizes
-        # (see operators/batching.py; row-independent, result-neutral)
-        for pdf in coalesce_batches(batches):
+        for pdf in batches:
             pt_idx, box_ids = index.query_points(pdf[lon].to_numpy(), pdf[lat].to_numpy())
             left = pdf.iloc[pt_idx].reset_index(drop=True)
             for j, col in enumerate(fp_id_cols):
@@ -362,32 +357,21 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
                     svals[risky] = np.take_along_axis(d2[risky], full, axis=1)
             return order, svals
 
-        # input accumulation: the session caps Arrow batches at 256
-        # rows (sized for half-MB binary TILE rows, session.py) — for
-        # tiny page rows that is ~25k python batches per 6.4M points,
-        # and per-batch pandas/Arrow overhead (~ms) dwarfs the ~100µs
-        # of numpy compute. Coalesce incoming batches to ~8k-point
-        # chunks before running the blocked kernel; outputs flush at
-        # chunk granularity. Order within a partition is preserved and
-        # per-row results are independent, so accumulation is
-        # result-neutral.
-        target = max(bs, 8192)
-        buf: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        buffered = 0
-
-        def flush():
-            keys = np.concatenate([b[0] for b in buf])
-            px = np.concatenate([b[1] for b in buf])
-            py = np.concatenate([b[2] for b in buf])
+        for pdf in batches:
+            keys = pdf[point_key].to_numpy()
+            px = pdf[lon].to_numpy()
+            py = pdf[lat].to_numpy()
             n = len(px)
+            if not n:
+                continue
             orders, sv = [], []
             for s in range(0, n, bs):
                 o, v = topk_block(px[s : s + bs], py[s : s + bs])
                 orders.append(o)
                 sv.append(v)
-            order = np.concatenate(orders) if orders else np.empty((0, kk), np.int64)
-            svals = np.concatenate(sv) if sv else np.empty((0, kk))
-            return pd.DataFrame(
+            order = np.concatenate(orders)
+            svals = np.concatenate(sv)
+            yield pd.DataFrame(
                 {
                     point_key: np.repeat(keys, kk),
                     "tile_id": tid_arr[order].ravel(),
@@ -395,17 +379,6 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
                     "rank": np.tile(np.arange(1, kk + 1), n),
                 }
             )
-
-        for pdf in batches:
-            buf.append(
-                (pdf[point_key].to_numpy(), pdf[lon].to_numpy(), pdf[lat].to_numpy())
-            )
-            buffered += len(pdf)
-            if buffered >= target:
-                yield flush()
-                buf, buffered = [], 0
-        if buf:
-            yield flush()
 
     return points_df.mapInPandas(run, out_schema)
 

@@ -1,14 +1,17 @@
 """SparkSession factory with scale-oriented defaults.
 
 The settings below are the ones that matter at 100 TB just as much as
-on local[32]:
+on a single host:
 
 * AQE on (runtime coalescing + skew-join splitting backstops the
   explicit salting done by the spatial layer).
-* Arrow execution for every pandas-UDF / mapInPandas boundary, with a
-  bounded batch size so a pixel-heavy batch (binary tile payloads)
-  cannot blow executor memory — this replaces the reference's
-  riomucho window streaming (rio_toa/radiance.py:122-128).
+* Arrow execution for every pandas-UDF / mapInPandas boundary. Batch
+  size is left to Spark's own two defaults, 10,000 records and 64 MiB
+  (``spark.sql.execution.arrow.maxBytesPerBatch``) per batch: the byte
+  bound binds first on half-MiB binary tile rows, the record bound on
+  small page/embedding rows. This replaces the reference's riomucho
+  window streaming (rio_toa/radiance.py:122-128);
+  ``tests/test_plans.py`` pins both bounds.
 * shuffle partition count sized by the caller (cores on local mode,
   2-3x total cores on a cluster).
 """
@@ -20,9 +23,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
-# Tile rows carry ~0.5 MiB binary payloads; 256 rows/batch keeps an
-# Arrow batch near 128 MiB worst-case, far under executor headroom.
-ARROW_MAX_RECORDS_PER_BATCH = 256
 
 
 def get_spark(
@@ -32,7 +32,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
     )
@@ -45,10 +45,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
         # Tile/page parquet files are written small at test SF; on a
         # real cluster this bound splits 100 TB into ~128 MiB tasks.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -34,7 +34,12 @@ PARSEMTL_GOLDEN = {
     }
 }
 
+needs_ref_data = pytest.mark.skipif(
+    not os.path.isdir(REF_DATA), reason="rio-toa reference test data not present"
+)
 
+
+@needs_ref_data
 def test_parsemtl_stdin_golden(monkeypatch, capsys):
     with open(os.path.join(REF_DATA, "mtltest_LC80100202015018LGN00_MTL.txt")) as fh:
         monkeypatch.setattr("sys.stdin", io.StringIO(fh.read()))
@@ -42,6 +47,7 @@ def test_parsemtl_stdin_golden(monkeypatch, capsys):
     assert json.loads(capsys.readouterr().out) == PARSEMTL_GOLDEN
 
 
+@needs_ref_data
 def test_parsemtl_file_arg(capsys):
     cli.main(["parsemtl", os.path.join(REF_DATA, "LC80100202015018LGN00_MTL.txt")])
     parsed = json.loads(capsys.readouterr().out)

@@ -132,6 +132,47 @@ def test_decode_image_real_png_path(spark):
     assert (got[2].height, got[2].width, got[2].channels) == (32, 32, 3)
 
 
+def test_decode_image_output_bounded_by_arrow_bytes(spark, monkeypatch):
+    """Decoding multiplies bytes, so decode_image cuts its output frames
+    at spark.sql.execution.arrow.maxBytesPerBatch. Lowering that conf
+    splits one input batch into frames of at most three decoded images
+    and changes no output row."""
+    import pandas as pd
+    import pyspark.sql.classic.dataframe as df_mod
+
+    from rio_toa_spark.functions.png import encode_png
+
+    rng = np.random.default_rng(5)
+    rows = [
+        (i, encode_png(rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)))
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "media_id int, payload binary")
+    default = mm.decode_image(df).collect()
+
+    kernels = []
+    orig = df_mod.DataFrame.mapInPandas
+
+    def spy(self, fn, schema, *args, **kwargs):
+        kernels.append(fn)
+        return orig(self, fn, schema, *args, **kwargs)
+
+    monkeypatch.setattr(df_mod.DataFrame, "mapInPandas", spy)
+    conf = "spark.sql.execution.arrow.maxBytesPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(3 * 16 * 16 * 3))
+    try:
+        lowered = mm.decode_image(df).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert lowered == default
+
+    # the kernel, run on one 40-row batch in this process
+    frames = list(kernels[0](iter([pd.DataFrame(rows, columns=["media_id", "payload"])])))
+    assert [len(f) for f in frames] == [3] * 13 + [1]
+    assert pd.concat(frames, ignore_index=True)["media_id"].tolist() == list(range(40))
+
+
 def test_decode_status_provenance(spark):
     # decode provenance: genuine codec paths vs stub fallback must be
     # distinguishable downstream (a 100TB pipeline needs to quantify

@@ -4,7 +4,8 @@
 * column pruning keeps unused payloads out of ReadSchema,
 * dimension joins broadcast (no shuffle on the fact side),
 * TOA pipelines contain no hash-partition exchange at all,
-* relational queries run inside WholeStageCodegen.
+* relational queries run inside WholeStageCodegen,
+* Python kernels see Spark's default Arrow batch bounds.
 
 These are regression guards: a future edit that silently breaks one of
 them (e.g. a join that stops broadcasting) fails here, not at 100 TB.
@@ -196,3 +197,39 @@ def test_media_pipelines_shuffle_free(spark):
     for chain in (img_chain, audio_chain, frames_chain):
         plan = _plan(chain)
         assert "Exchange" not in plan, plan
+
+
+def _arrow_batch_shapes(df):
+    """(rows, bytes) of every Arrow batch a Python kernel receives."""
+    import pyarrow as pa
+
+    def probe(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"rows": [b.num_rows], "nbytes": [b.nbytes]})
+
+    return [(r.rows, r.nbytes) for r in df.mapInArrow(probe, "rows long, nbytes long").collect()]
+
+
+def test_arrow_batch_byte_bound_tile_rows(spark):
+    """The engine sets no Arrow batch size: on half-MiB tile rows the
+    64 MiB default (spark.sql.execution.arrow.maxBytesPerBatch) bounds
+    every batch. Spark closes a batch at the row that reaches the
+    bound, so the check allows one row over it."""
+    row = 1 << 19
+    limit = 64 << 20
+    assert spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch") == "%db" % limit
+    tiles = spark.range(200, numPartitions=1).select(
+        F.expr("cast(repeat('x', %d) as binary)" % row).alias("payload")
+    )
+    shapes = _arrow_batch_shapes(tiles)
+    assert sum(r for r, _ in shapes) == 200
+    assert len(shapes) > 1
+    assert max(b for _, b in shapes) <= limit + row + 1024
+
+
+def test_arrow_batch_record_bound_small_rows(spark):
+    """On small rows the 10,000-record default binds, so page- and
+    embedding-sized kernels get large numpy batches without any
+    coalescing of their own."""
+    shapes = _arrow_batch_shapes(spark.range(25_000, numPartitions=1))
+    assert max(r for r, _ in shapes) == 10_000

@@ -21,6 +21,10 @@ from rio_toa_spark.functions.mtl import bounds_from_metadata, mtl_key, parse_mtl
 
 REF_DATA = "/root/reference/tests/data"
 
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF_DATA), reason="rio-toa reference test data not present"
+)
+
 REAL_SCENES = ["LC80100202015018LGN00", "LC81060712016134LGN00"]
 
 
