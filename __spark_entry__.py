@@ -365,7 +365,7 @@ def _simhash_sql() -> str:
 # portable md5 bucket hash -> distinct candidates -> exact Jaccard
 # verify at 0.5. Mirrors dedup._lsh_jaccard_fused exactly.
 # Shingle hashes are the token-hash polynomial combine of
-# dedup.shingle_hashes_from_tokens: one md5 per token folded to
+# dedup._banded_signature_kernel: one md5 per token folded to
 # [0, M31), then sum_j(th[i+j] * base^(j+1)) mod M31 per trigram
 # (single fold hash for docs under 3 tokens) — identical int64
 # arithmetic in both engines.

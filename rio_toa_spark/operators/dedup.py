@@ -1,15 +1,15 @@
 """Deduplication operators for training-data pipelines.
 
-All variants are expressed with native Spark SQL (codegen'd, shuffles
-only on the grouping keys) and use the cross-engine md5 hash primitive
-so every one of them has an exact DuckDB oracle twin:
+Every variant uses the cross-engine md5 hash primitive, so each one
+has an exact DuckDB oracle twin:
 
 * exact_dedup           — hash-groupBy on normalized text
-* minhash_signatures    — k permutations via (a*h + b) mod p over
-                          shingle hashes; LSH banding + bucket join
+* ngram_jaccard_pairs   — MinHash-LSH near-dup pairs: one numpy kernel
+                          (token-hash shingles, k permutations, band
+                          buckets), the bucket groupBy, then one exact
+                          Jaccard verify kernel; or exact Jaccard on
+                          caller-given candidate pairs
 * simhash               — 32-bit weighted-majority bit signature
-* ngram_jaccard_pairs   — exact Jaccard on shingle sets for candidate
-                          pairs (the verify step after LSH)
 * embedding_near_dups   — cosine near-duplicate pairs over embeddings
 
 Scale notes: candidate generation is always (band, bucket-hash) or
@@ -115,11 +115,10 @@ def shingles(text_col: Column, n: int = 3) -> Column:
 
 
 def shingle_hashes(text_col: Column, n: int = 3) -> Column:
-    """Distinct 60-bit hashes of the shingle set (legacy one-expression
-    form: builds the n-word strings then md5s each). The minhash/LSH
-    pipelines use token_hash_expr + shingle_hashes_from_tokens instead
-    — one md5 per TOKEN and pure int64 arithmetic per shingle, measured
-    ~5x faster at bench scale with identical set semantics."""
+    """Distinct 60-bit hashes of the shingle set (builds the n-word
+    strings then md5s each). The MinHash-LSH path hashes per TOKEN
+    instead, inside _banded_signature_kernel — one md5 per token and
+    pure int64 arithmetic per shingle, with identical set semantics."""
     return F.transform(shingles(text_col, n), lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
 
 
@@ -133,191 +132,38 @@ def shingle_weights(n: int) -> list[int]:
     return [pow(_SHINGLE_BASE, j + 1, MERSENNE31) for j in range(n)]
 
 
-def token_hash_expr(text_col: Column) -> Column:
-    """Per-token 31-bit portable hashes (md5 of the token, folded into
-    [0, M31)). One md5 per token — the only string hashing the minhash
-    pipeline pays."""
-    tokens = F.split(normalized_text(text_col), " ")
-    return F.transform(tokens, lambda t: portable_hash64(t) % MERSENNE31)
-
-
-def shingle_hashes_from_tokens(th: Column, n: int = 3) -> Column:
-    """Distinct shingle-set hashes from a token-hash array column:
-    shingle_i = sum_j(th[i+j] * w_j) mod M31 (all int64, no overflow:
-    each product < 2^62, the running sum < n * M31).
-
-    ``th`` MUST be a bound column (materialized by a previous
-    projection), NOT the token_hash_expr expression itself — Spark
-    higher-order-function lambdas re-evaluate expression inputs per
-    outer element (the documented 16x pitfall; measured 11x slower
-    here when inlined)."""
-    w = shingle_weights(n)
-    c = F.size(th)
-    m = F.lit(MERSENNE31)
-
-    def gram(i: Column) -> Column:
-        acc = (F.element_at(th, i + 1) * F.lit(w[0])) % m
-        for j in range(1, n):
-            acc = acc + (F.element_at(th, i + j + 1) * F.lit(w[j])) % m
-        return acc % m
-
-    grams = F.transform(F.sequence(F.lit(0), c - n), gram)
-    # short docs (< n tokens): one fold hash over every token
-    fold = F.array(
-        F.aggregate(
-            th,
-            F.lit(0).cast("long"),
-            lambda acc, h: (acc * _SHINGLE_BASE + h) % m,
-        )
-    )
-    return F.array_distinct(F.when(c >= n, grams).otherwise(fold))
-
-
-def shingle_hash_sets(
-    df: DataFrame, text: str = "text", key: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """(key, sh) with sh = the doc's distinct shingle-hash set. Two
-    projections on purpose: the token-hash array materializes first so
-    the shingle combine reads it as a bound column (see
-    shingle_hashes_from_tokens)."""
-    th_df = _parallelize(df).select(F.col(key), token_hash_expr(F.col(text)).alias("_th"))
-    return th_df.select(F.col(key), shingle_hashes_from_tokens(F.col("_th"), n).alias("sh"))
-
-
-def minhash_from_hashes(hashes: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature from a shingle-hash array column: sig_i = min
-    over shingles of ((a_i * (h mod M31) + b_i) mod M31), with a_i/b_i
-    derived deterministically from i — reproducible in ANSI SQL.
-
-    Evaluation shape matters — two pitfalls, both measured:
-    * ``hashes`` must be a BOUND column (the md5 pipeline materialized
-      by a previous projection); referencing the hash expression here
-      would re-evaluate it per permutation (16x pitfall).
-    * given a bound input, k independent transform+array_min passes of
-      plain int arithmetic beat the single elementwise-min fold whose
-      zip_with allocates a fresh k-array per shingle (measured 4.0 s
-      -> 3.1 s on the sf1.0 bench corpus end-to-end).
-    least(M31, ...) reproduces the fold's init exactly: an empty array
-    yields array_min = NULL, which least skips, returning M31."""
-    outs = []
-    m = F.lit(MERSENNE31)
-    for i in range(num_hashes):
-        a = F.lit(_MINHASH_A * (i + 1) % MERSENNE31)
-        b = F.lit(_MINHASH_B * (i + 1) % MERSENNE31)
-        perm = F.array_min(F.transform(hashes, lambda h: (a * (h % m) + b) % m))
-        outs.append(F.least(F.lit(MERSENNE31).cast("long"), perm))
-    return F.array(*outs)
-
-
-def minhash_signatures(
-    df: DataFrame, text: str = "text", key: str = "doc_id", num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signature per doc (see minhash_from_hashes), over
-    token-hash shingles (see shingle_hash_sets)."""
-    sh = shingle_hash_sets(df, text, key, shingle_n)
-    return sh.select(F.col(key), minhash_from_hashes(F.col("sh"), num_hashes).alias("minhash"))
-
-
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    key: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """LSH banding: split each signature into bands, hash each band to
-    a bucket, then emit all intra-bucket pairs. Output: distinct
-    candidate (a, b) pairs with a < b (deterministic order).
-
-    The bucket hash is the portable md5-60bit hash of the band slice
-    (comma-joined) — identical in DuckDB, so the whole candidate step
-    has an exact SQL oracle twin.
-
-    Shape: the signature pipeline runs ONCE — groupBy(band, bucket) +
-    sorted collect_list + within-bucket pair expansion. A bucket
-    self-join would either recompute the signatures for both sides
-    (Spark's self-join attribute dedup defeats ReusedExchange) or
-    require caching them; the group form needs neither, costs one
-    shuffle, and the quadratic expansion stays inside buckets, which
-    LSH keeps small w.h.p. (run exact_dedup first so identical docs
-    don't form a degenerate giant bucket)."""
-
-    banded = sig_df.select(
-        F.col(key),
-        F.explode(_band_buckets("minhash", bands, rows_per_band)).alias("bb"),
-    ).select(key, "bb.band", "bb.bucket")
-    return _bucket_pairs(
-        banded, ["band", "bucket"], key, max_bucket=max_bucket
-    ).distinct()
-
-
-def _band_buckets(sig_col: str, bands: int, rows_per_band: int) -> Column:
-    """Array of (band, bucket) structs for a signature column; bucket
-    is the portable md5-60bit hash of the comma-joined band slice."""
-
-    def band_bucket(b: int) -> Column:
-        slice_str = F.array_join(
-            F.transform(
-                F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        )
-        return F.struct(F.lit(b).alias("band"), portable_hash64(slice_str).alias("bucket"))
-
-    return F.array(*[band_bucket(b) for b in range(bands)])
-
-
 def _bucket_pairs(
     banded: DataFrame,
     group_cols: list[str],
     key: str,
-    payload: str | None = None,
-    payload_a: str = "pa",
-    payload_b: str = "pb",
-    max_bucket: int | None = None,
+    payload: str,
+    payload_a: str,
+    payload_b: str,
 ) -> DataFrame:
-    """Shared candidate-pair expansion for every LSH family:
-    groupBy(group_cols) -> sorted collect_list -> all within-bucket
-    (a, b[, payload_a, payload_b]) pairs with a < b.
+    """Candidate-pair expansion for the simhash and embedding LSH
+    families: groupBy(group_cols) -> sorted collect_list -> all
+    within-bucket (a, b, payload_a, payload_b) pairs with a < b.
 
     One shuffle; the signature/payload pipeline feeding ``banded`` runs
     exactly once (no self-join, no cache). The explicit repartition
     pins parallelism for the quadratic expansion stage — AQE's
     size-based coalescing sees tiny bytes and would serialize the
     work-heavy stage to ~1 task (measured 4x end-to-end regression).
-
-    ``max_bucket`` (optional) SKIPS buckets larger than the cap: a
-    degenerate giant bucket (a huge exact-duplicate class) would
-    otherwise collect into one row and expand O(n^2) pairs inside it —
-    an executor-memory hazard. Run exact_dedup first so such classes
-    never form; the cap is the belt-and-braces bound for callers that
-    don't, at the documented cost of recall inside skipped buckets.
     """
     spark = banded.sparkSession
-    item = (
-        F.struct(F.col(key).alias("a"), F.col(payload).alias("s"))
-        if payload
-        else F.col(key)
-    )
+    item = F.struct(F.col(key).alias("a"), F.col(payload).alias("s"))
     buckets = (
         banded.groupBy(*group_cols)
         .agg(F.sort_array(F.collect_list(item)).alias("_ms"))
         .where(F.size("_ms") >= 2)
+        .repartition(spark.sparkContext.defaultParallelism)
     )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("_ms") <= max_bucket)
-    buckets = buckets.repartition(spark.sparkContext.defaultParallelism)
 
-    if payload:
-        def pair(x, y):
-            return F.struct(
-                x["a"].alias("a"), y["a"].alias("b"),
-                x["s"].alias(payload_a), y["s"].alias(payload_b),
-            )
-    else:
-        def pair(x, y):
-            return F.struct(x.alias("a"), y.alias("b"))
+    def pair(x, y):
+        return F.struct(
+            x["a"].alias("a"), y["a"].alias("b"),
+            x["s"].alias(payload_a), y["s"].alias(payload_b),
+        )
 
     pair_structs = F.flatten(
         F.transform(
@@ -328,8 +174,9 @@ def _bucket_pairs(
             ),
         )
     )
-    out_cols = ["p.a", "p.b"] + (["p.%s" % payload_a, "p.%s" % payload_b] if payload else [])
-    return buckets.select(F.explode(pair_structs).alias("p")).select(*out_cols)
+    return buckets.select(F.explode(pair_structs).alias("p")).select(
+        "p.a", "p.b", "p.%s" % payload_a, "p.%s" % payload_b
+    )
 
 
 def ngram_jaccard_pairs(
@@ -339,7 +186,6 @@ def ngram_jaccard_pairs(
     key: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.8,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs (or LSH candidates when
     ``pairs`` is None): |A ∩ B| / |A ∪ B| >= threshold.
@@ -349,11 +195,19 @@ def ngram_jaccard_pairs(
     candidates emerge with both shingle sets attached and the Jaccard
     verifies in place. The corpus text is read and shingled exactly
     once (the join-back form re-shingles it twice more — measured 2x
-    slower end-to-end at bench scale), and nothing is cached."""
+    slower end-to-end at bench scale), and nothing is cached.
+
+    Precondition of the LSH form: ``key`` is unique per row. Each pair
+    is emitted once, from the first band its two docs share, which
+    holds only when a key names one doc. A bucket that holds the same
+    key twice raises ValueError naming that key (checked inside the
+    verify kernel, no extra Spark job); rows with a repeated key whose
+    texts never share a bucket go unnoticed and are each paired
+    independently."""
     inter_ab = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union_ab = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
     if pairs is None:
-        return _lsh_jaccard_fused(df, text, key, shingle_n, threshold, max_bucket=max_bucket)
+        return _lsh_jaccard_fused(df, text, key, shingle_n, threshold)
     sh = _parallelize(df).select(F.col(key), shingles(F.col(text), shingle_n).alias("sh"))
     a = sh.select(F.col(key).alias("a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(key).alias("b"), F.col("sh").alias("sh_b"))
@@ -375,17 +229,15 @@ def _lsh_jaccard_fused(
     num_hashes: int = 16,
     bands: int = 4,
     rows_per_band: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Single-pass MinHash-LSH near-dup pipeline: shingle-hash ->
     minhash -> band buckets (hash arrays carried along) -> within-
     bucket pairs with exact Jaccard verify. One text scan, zero
     caching, zero joins. Past ``_parallelize`` (which repartitions
-    only an under-split input), the default uncapped path has one
-    shuffle, the bucket groupBy: each pair is emitted only from the
-    first band its two docs share, so the pair stream is already
-    unique. Only a ``max_bucket`` cap adds a final distinct() shuffle
-    (see the comment below).
+    only an under-split input), there is one shuffle, the bucket
+    groupBy: each pair is emitted only from the first band its two
+    docs share, so the pair stream is already unique and needs no
+    distinct().
 
     The verify intersects the DISTINCT token-hash shingle hashes, not
     the shingle strings: |hash(A) ∩ hash(B)| / |hash(A) ∪ hash(B)|
@@ -411,59 +263,50 @@ def _lsh_jaccard_fused(
     # tokenize -> md5 token hash -> shingle combine -> distinct ->
     # minhash -> band bucket, all fused in one numpy/hashlib kernel
     # over the Spark-normalized text (normalization stays JVM-side so
-    # Java regex/lowercase semantics are preserved). Arithmetic is the
-    # exact integer pipeline of token_hash_expr /
-    # shingle_hashes_from_tokens / minhash_from_hashes / _band_buckets
-    # (md5 is md5, int64 mod arithmetic is engine-independent; shingle
-    # sets are emitted SORTED, which no consumer observes: minhash and
-    # Jaccard are order-free and the bucket sort key is the doc key).
-    # A per-task token->hash cache exploits vocabulary repetition the
-    # JVM expression path cannot see; measured 3.5 s -> 1.1 s for the
-    # banded stage at bench sf1.0.
+    # Java regex/lowercase semantics are preserved); see
+    # _banded_signature_kernel for the integer pipeline the DuckDB
+    # twin reproduces. A per-task token->hash cache exploits
+    # vocabulary repetition; measured 3.5 s -> 1.1 s for the banded
+    # stage at bench sf1.0 against the JVM expression form.
     #
-    # When no max_bucket cap is set, each member additionally carries
-    # its packed ALL-band bucket hashes ("hb", bands x int64 = 32 B on
-    # top of the ~hundreds-of-bytes shingle payload) so the verify
-    # kernel can emit each pair only from its FIRST shared band: a doc
-    # sits in exactly one bucket per band and one bucket row exists
-    # per (band, bucket), so first-shared-band emission makes the pair
-    # stream globally unique and the trailing distinct() exchange is
-    # dropped outright. With a max_bucket cap the invariant breaks (a
-    # skipped band-0 bucket must not suppress the band-1 emission), so
-    # that path keeps the generic emit + distinct().
-    first_band_dedup = max_bucket is None
+    # Each member also carries its packed ALL-band bucket hashes ("hb",
+    # bands x int64 = 32 B on top of the ~hundreds-of-bytes shingle
+    # payload) so the verify kernel can emit each pair only from its
+    # FIRST shared band: a doc sits in exactly one bucket per band and
+    # one bucket row exists per (band, bucket), so first-shared-band
+    # emission makes the pair stream globally unique.
     nt = _parallelize(df).select(F.col(key), normalized_text(F.col(text)).alias("_nt"))
     key_dt = df.schema[key].dataType
-    banded_fields = [
-        T.StructField(key, key_dt),
-        T.StructField("sh", T.BinaryType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("bucket", T.LongType()),
-    ]
-    if first_band_dedup:
-        banded_fields.append(T.StructField("hb", T.BinaryType()))
     banded = nt.mapInPandas(
-        _banded_signature_kernel(
-            key, shingle_n, num_hashes, bands, rows_per_band, emit_hb=first_band_dedup
+        _banded_signature_kernel(key, shingle_n, num_hashes, bands, rows_per_band),
+        T.StructType(
+            [
+                T.StructField(key, key_dt),
+                T.StructField("sh", T.BinaryType()),
+                T.StructField("band", T.IntegerType()),
+                T.StructField("bucket", T.LongType()),
+                T.StructField("hb", T.BinaryType()),
+            ]
         ),
-        T.StructType(banded_fields),
     )
 
     # same bucket-collect shape as _bucket_pairs: sort_array fixes the
     # deterministic a < b member order; key/set columns are extracted
     # from the SAME sorted struct array so they stay aligned (keys are
-    # unique within a bucket — one bucket per doc per band — so the
-    # extra struct fields never affect the sort order)
-    item_fields = [F.col(key).alias("a"), F.col("sh").alias("s")]
-    if first_band_dedup:
-        item_fields.append(F.col("hb").alias("h"))
+    # unique within a bucket — one bucket per doc per band, and the
+    # verify kernel raises on a repeated key — so the extra struct
+    # fields never affect the sort order)
     buckets = (
         banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(F.struct(*item_fields))).alias("_ms"))
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col(key).alias("a"), F.col("sh").alias("s"), F.col("hb").alias("h"))
+                )
+            ).alias("_ms")
+        )
         .where(F.size("_ms") >= 2)
     )
-    if max_bucket is not None:
-        buckets = buckets.where(F.size("_ms") <= max_bucket)
     # NO explicit repartition here (unlike _bucket_pairs): the bucket
     # rows carry the sh payloads, so a parallelism-pinning repartition
     # re-shuffles the full payload a second time (~340 MB / 0.4 s at
@@ -472,11 +315,12 @@ def _lsh_jaccard_fused(
     # ~minPartitionSize x parallelism (32 MB at defaults) — below
     # that, the kernel work a coalesced partition holds is small by
     # the same byte bound.
-    bucket_out = [F.col("_ms.a").alias("ks"), F.col("_ms.s").alias("ss")]
-    if first_band_dedup:
-        bucket_out = [F.col("band")] + bucket_out + [F.col("_ms.h").alias("hs")]
-    bucket_cols = buckets.select(*bucket_out)
-
+    bucket_cols = buckets.select(
+        F.col("band"),
+        F.col("_ms.a").alias("ks"),
+        F.col("_ms.s").alias("ss"),
+        F.col("_ms.h").alias("hs"),
+    )
     out_schema = T.StructType(
         [
             T.StructField("a", key_dt),
@@ -484,12 +328,7 @@ def _lsh_jaccard_fused(
             T.StructField("jaccard", T.DoubleType()),
         ]
     )
-    out = bucket_cols.mapInPandas(
-        _bucket_jaccard_verify(threshold, band_dedup=first_band_dedup), out_schema
-    )
-    # first-band dedup makes the pair stream provably unique (see
-    # above), so distinct() would be an identity shuffle — skip it
-    return out if first_band_dedup else out.distinct()
+    return bucket_cols.mapInPandas(_bucket_jaccard_verify(threshold), out_schema)
 
 
 def _banded_signature_kernel(
@@ -498,15 +337,15 @@ def _banded_signature_kernel(
     num_hashes: int,
     bands: int,
     rows_per_band: int,
-    emit_hb: bool = False,
 ):
     """Kernel factory for the fused signature+banding stage: rows of
     (key, _nt normalized text) -> ``bands`` rows of (key, sh, band,
-    bucket) per doc — plus, when ``emit_hb``, the doc's packed
-    all-band bucket hashes (bands x native int64 bytes) for the verify
-    kernel's first-shared-band pair dedup.
+    bucket, hb) per doc, where hb is the doc's packed all-band bucket
+    hashes (bands x native int64 bytes) for the verify kernel's
+    first-shared-band pair dedup.
 
-    Bit-exact replay of the SQL pipeline it replaces (see call site):
+    Integer pipeline, reproduced exactly by the DuckDB twin of
+    ``minhash_lsh_pairs`` (__spark_entry__._MINHASH_LSH_SQL):
     * token hash = int64(md5(token)[:15 hex]) % M31, one md5 per
       DISTINCT token thanks to the per-task cache;
     * shingle_i = sum_j(th[i+j] * w_j % M31) % M31 over a flat
@@ -514,11 +353,9 @@ def _banded_signature_kernel(
       sequential (acc * base + h) % M31 fold in python ints);
     * per-doc distinct via one flat sort of (doc_idx << 31 | gram);
     * minhash sig_i = min((a_i * h + b_i) % M31) via minimum.reduceat;
-    * bucket = int64(md5(",".join(band slice as decimal))[:15]) —
-      identical strings, identical md5.
-    Docs with NULL text are skipped: the SQL form carries them to the
-    verify step where every jaccard involving a NULL set is NULL and
-    filtered — no output either way."""
+    * bucket = int64(md5(",".join(band slice as decimal))[:15]).
+    Docs with NULL text are skipped: in SQL every jaccard involving a
+    NULL set is NULL and filtered, so no output either way."""
     import hashlib
 
     import numpy as np
@@ -654,34 +491,35 @@ def _banded_signature_kernel(
             sh_arrays = [
                 shb[int(e - c * 4) : int(e)] for c, e in zip(ucounts, ends)
             ]
+            # packed per-doc all-band bucket hashes (native int64
+            # bytes — produced and consumed python-side only)
+            hrows = np.ascontiguousarray(bucket.T)
+            hb_list = [hrows[d].tobytes() for d in range(n_docs)]
             dk = np.asarray(doc_keys)
-            out = {
-                key: np.tile(dk, bands),
-                "sh": pd.Series(
-                    [sh_arrays[d] for _ in range(bands) for d in range(n_docs)],
-                    dtype=object,
-                ),
-                "band": np.repeat(np.arange(bands, dtype=np.int32), n_docs),
-                "bucket": bucket.reshape(-1),
-            }
-            if emit_hb:
-                # packed per-doc all-band bucket hashes (native int64
-                # bytes — produced and consumed python-side only)
-                hrows = np.ascontiguousarray(bucket.T)
-                hb_list = [hrows[d].tobytes() for d in range(n_docs)]
-                out["hb"] = pd.Series(
-                    [hb_list[d] for _ in range(bands) for d in range(n_docs)],
-                    dtype=object,
-                )
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    key: np.tile(dk, bands),
+                    "sh": pd.Series(
+                        [sh_arrays[d] for _ in range(bands) for d in range(n_docs)],
+                        dtype=object,
+                    ),
+                    "band": np.repeat(np.arange(bands, dtype=np.int32), n_docs),
+                    "bucket": bucket.reshape(-1),
+                    "hb": pd.Series(
+                        [hb_list[d] for _ in range(bands) for d in range(n_docs)],
+                        dtype=object,
+                    ),
+                }
+            )
 
     return run
 
 
-def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
-    """Kernel factory: per bucket row (ks = member keys sorted, ss =
-    aligned shingle-hash sets), emit every member pair (a, b, jaccard)
-    with a before b in bucket order and jaccard >= threshold.
+def _bucket_jaccard_verify(threshold: float):
+    """Kernel factory: per bucket row (band, ks = member keys sorted,
+    ss = aligned shingle-hash sets, hs = aligned packed all-band bucket
+    hashes), emit every member pair (a, b, jaccard) with a before b in
+    bucket order and jaccard >= threshold.
 
     Exactness: identical sets are collapsed to one representative
     class first (byte-equality — conservative: only arrays with equal
@@ -690,19 +528,16 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
     members; class-level jaccards are then fanned back out to member
     pairs by pure index arithmetic. J(A,A) = |A|/|A| = 1.0 exactly in
     both engines (0/0 -> NaN fails the threshold, also both engines).
-    A null set (null text upstream) makes every jaccard involving it
-    NULL in the SQL form, which the >= filter drops — the kernel skips
-    such members for the same result.
 
-    ``band_dedup``: bucket rows additionally carry (band, hs = packed
-    per-member all-band bucket hashes); a passing pair is emitted ONLY
-    when no band before this row's band is also shared by both members
-    (equal band slice <=> equal bucket hash — the md5 is a pure
-    function of the slice, and candidate grouping keys on that same
-    hash). Each pair then leaves the kernel exactly once globally —
-    from its first shared band — so the caller can drop its distinct()
-    exchange. The jaccard value is band-independent, so WHICH band
-    emits is unobservable in the result."""
+    First-shared-band emission: a passing pair is emitted ONLY when no
+    band before this row's band is also shared by both members (equal
+    band slice <=> equal bucket hash — the md5 is a pure function of
+    the slice, and candidate grouping keys on that same hash). Each
+    pair then leaves the kernel exactly once globally — from its first
+    shared band — so no distinct() exchange follows. The jaccard value
+    is band-independent, so WHICH band emits is unobservable in the
+    result. That uniqueness needs one doc per key: a bucket holding
+    the same key twice raises ValueError."""
     import numpy as np
     import pandas as pd
 
@@ -749,11 +584,16 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
             out_j: list = []
             ks_col = pdf["ks"].to_numpy()
             ss_col = pdf["ss"].to_numpy()
-            if band_dedup:
-                band_col = pdf["band"].to_numpy()
-                hs_col = pdf["hs"].to_numpy()
+            band_col = pdf["band"].to_numpy()
+            hs_col = pdf["hs"].to_numpy()
             for r in range(len(ks_col)):
                 ks = np.asarray(ks_col[r])
+                dup = ks[1:] == ks[:-1]
+                if dup.any():
+                    raise ValueError(
+                        "duplicate doc key %s in ngram_jaccard_pairs input: "
+                        "the LSH path needs one row per key" % ks[1:][dup][0]
+                    )
                 ss = ss_col[r]
                 idx_i: list = []
                 idx_x: list = []
@@ -761,16 +601,15 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
                 # big buckets go through the identical-set-collapse
                 # path (it bounds the matmul by R distinct sets — the
                 # degenerate giant-bucket case it exists for); small
-                # buckets take the lean path unless a NULL set needs
-                # the guarded handling
-                if len(ks) <= 64 and all(s is not None for s in ss):
+                # buckets take the lean path
+                if len(ks) <= 64:
                     _emit_bucket_lean(len(ks), ss, threshold, idx_i, idx_x, jtmp)
                 else:
                     _emit_bucket(len(ks), ss, threshold, idx_i, idx_x, jtmp)
                 if not idx_i:
                     continue
                 hmat = None
-                if band_dedup and band_col[r]:
+                if band_col[r]:
                     hmat = np.frombuffer(
                         b"".join(hs_col[r]), np.int64
                     ).reshape(len(ks), -1)[:, : int(band_col[r])]
@@ -810,9 +649,6 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
         reps: list = []
         cls_idx = np.empty(n, np.int64)
         for i, s in enumerate(ss):
-            if s is None:
-                cls_idx[i] = -1  # null set: every pair involving it drops
-                continue
             kb = bytes(s)  # packed <i4 bytes ARE the class key
             c = class_of.get(kb)
             if c is None:
@@ -821,8 +657,6 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
                 reps.append(np.frombuffer(kb, np.int32).astype(np.int64))
             cls_idx[i] = c
         R = len(reps)
-        if R == 0:
-            return
         lens = np.array([r.size for r in reps], dtype=np.int64)
         if R == 1:
             inter = lens.reshape(1, 1).astype(np.float64)
@@ -841,9 +675,8 @@ def _bucket_jaccard_verify(threshold: float, band_dedup: bool = False):
         passing = jacm >= thr  # NaN (0/0) compares False, like SQL NULL/NaN
         # member positions per class, in sorted bucket order
         order = np.argsort(cls_idx, kind="stable")
-        counts = np.bincount(cls_idx[cls_idx >= 0], minlength=R)
-        n_null = int((cls_idx < 0).sum())
-        starts = np.concatenate(([n_null], n_null + np.cumsum(counts)))
+        counts = np.bincount(cls_idx, minlength=R)
+        starts = np.concatenate(([0], np.cumsum(counts)))
         members = [order[starts[c] : starts[c + 1]] for c in range(R)]
         singles = counts == 1
         # vectorized case: both classes singleton, p < q passing
@@ -939,7 +772,6 @@ def simhash_near_dups(
     bits: int = 32,
     max_hamming: int = 3,
     shingle_n: int = 3,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs sharing at least one identical SimHash byte-band,
     verified exactly with bit_count(xor) <= max_hamming.
@@ -953,9 +785,8 @@ def simhash_near_dups(
     condition, so the correctness gate checks the implemented
     semantics, not full-radius recall.
 
-    Same single-pass groupBy(bucket) + within-bucket expansion shape
-    as lsh_candidate_pairs — one shuffle, no cache, no signature
-    recompute."""
+    Single-pass groupBy(bucket) + within-bucket expansion
+    (_bucket_pairs) — one shuffle, no cache, no signature recompute."""
     n_bands = 4
     band_width = bits // n_bands
     sig_df = _parallelize(df).select(
@@ -980,7 +811,7 @@ def simhash_near_dups(
     return (
         _bucket_pairs(
             banded, ["band", "bucket"], key,
-            payload="sig", payload_a="sa", payload_b="sb", max_bucket=max_bucket,
+            payload="sig", payload_a="sa", payload_b="sb",
         )
         .where(hamming <= max_hamming)
         .select("a", "b", hamming.alias("hamming"))
@@ -994,7 +825,6 @@ def embedding_near_dups(
     vec: str = "embedding",
     threshold: float = 0.95,
     n_planes: int = 8,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
@@ -1057,7 +887,7 @@ def embedding_near_dups(
     return (
         _bucket_pairs(
             bucketed, ["_sig"], key,
-            payload="_v", payload_a="va", payload_b="vb", max_bucket=max_bucket,
+            payload="_v", payload_a="va", payload_b="vb",
         )
         .withColumn("cosine", cos)
         .where(F.col("cosine") >= threshold)

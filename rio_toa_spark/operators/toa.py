@@ -83,10 +83,6 @@ def _nodata_of(value) -> int | None:
     return None if value is None or (isinstance(value, float) and np.isnan(value)) else int(value)
 
 
-def _decode(dn_bytes: bytes, height: int, width: int) -> np.ndarray:
-    return np.frombuffer(dn_bytes, dtype="<u2").reshape(int(height), int(width))
-
-
 def _arrow_toa_op(src: DataFrame, dst_dtype: str, compute) -> DataFrame:
     """Shared mapInArrow runner: per row, hand ``compute`` the
     zero-copy uint16 DN array plus a scalar-accessor, collect the

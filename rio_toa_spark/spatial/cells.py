@@ -85,18 +85,6 @@ def cover_bbox(w: float, s: float, e: float, n: float, level: int = DEFAULT_LEVE
     return morton_encode(gx.ravel(), gy.ravel())
 
 
-def ring_cells(cell: int, radius: int, level: int = DEFAULT_LEVEL) -> np.ndarray:
-    """All cells within Chebyshev distance ``radius`` of ``cell``
-    (the (2r+1)^2 block), clipped to the grid — the kNN candidate
-    neighborhood."""
-    n = 1 << level
-    x, y = morton_decode(np.asarray([cell]))
-    xs = np.arange(max(0, int(x[0]) - radius), min(n - 1, int(x[0]) + radius) + 1)
-    ys = np.arange(max(0, int(y[0]) - radius), min(n - 1, int(y[0]) + radius) + 1)
-    gx, gy = np.meshgrid(xs, ys)
-    return morton_encode(gx.ravel(), gy.ravel())
-
-
 def cell_parent(cell, levels: int = 1) -> np.ndarray:
     """Ancestor cell id ``levels`` up the hierarchy. Morton interleave
     commutes with per-axis shifts, so the level-(L-k) parent of a
@@ -109,18 +97,6 @@ def cell_children(cell: int) -> np.ndarray:
     """The four level-(L+1) children of a level-L cell."""
     base = np.int64(cell) << np.int64(2)
     return base + np.arange(4, dtype=np.int64)
-
-
-def cell_bounds(cell: int, level: int = DEFAULT_LEVEL) -> tuple[float, float, float, float]:
-    """(w, s, e, n) bounds of a cell."""
-    n = 1 << level
-    west, south, east, north = _WORLD
-    dx = (east - west) / n
-    dy = (north - south) / n
-    x, y = morton_decode(np.asarray([cell]))
-    w = west + float(x[0]) * dx
-    s = south + float(y[0]) * dy
-    return (w, s, w + dx, s + dy)
 
 
 def cell_size_degrees(level: int = DEFAULT_LEVEL) -> tuple[float, float]:

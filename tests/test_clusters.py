@@ -44,14 +44,12 @@ def test_clusters_match_union_find(spark):
 
 
 def test_clusters_on_lsh_output(spark):
-    # end-to-end: the minhash-LSH pair list of the sf0.001 corpus
-    from rio_toa_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    # end-to-end: every minhash-LSH candidate pair of the sf0.001
+    # corpus (threshold 0 keeps each candidate the verify sees)
+    from rio_toa_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pairs = lsh_candidate_pairs(minhash_signatures(docs)).select("a", "b")
+    pairs = ngram_jaccard_pairs(docs, threshold=0.0).select("a", "b")
     rows = [(r.a, r.b) for r in pairs.collect()]
     got = {r.node: r.label for r in duplicate_clusters(pairs).collect()}
     assert got == _union_find(rows) and len(got) > 0

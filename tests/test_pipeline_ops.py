@@ -184,41 +184,101 @@ def test_embedding_near_dups_planted(spark, embs):
     assert planted <= got
 
 
-def test_lsh_max_bucket_skips_degenerate_buckets(spark, docs):
-    """A giant exact-duplicate class would expand O(n^2) inside one
-    bucket row; max_bucket skips it (recall trade documented)."""
+def test_lsh_identical_class_buckets_exact_count(spark, docs):
+    """A giant exact-duplicate class collects into one bucket row per
+    band. Four identical-text classes of 70 members each give buckets
+    above 64 members, which the verify kernel runs through its
+    identical-set-collapse path: every C(70,2) pair of each class comes
+    out exactly once, at jaccard 1.0."""
     base = docs.limit(4)
-    clones = base
-    for i in range(1, 30):
-        clones = clones.unionByName(base.withColumn("doc_id", F.col("doc_id") + 1000 * i))
-    # 4 duplicate classes of size 30 -> capped run finds none of those
-    # pairs, uncapped finds all C(30,2)*4
-    capped = dedup.ngram_jaccard_pairs(clones, threshold=0.9, max_bucket=10)
-    full = dedup.ngram_jaccard_pairs(clones, threshold=0.9)
-    assert capped.count() == 0
-    assert full.count() == 4 * (30 * 29) // 2
+    clones = (
+        base.crossJoin(spark.range(70).withColumnRenamed("id", "clone"))
+        .withColumn("doc_id", F.col("doc_id") + 1000 * F.col("clone"))
+        .drop("clone")
+    )
+    rows = dedup.ngram_jaccard_pairs(clones, threshold=0.9).collect()
+    assert len(rows) == 4 * (70 * 69) // 2
+    assert len({(r.a, r.b) for r in rows}) == len(rows)
+    assert all(r.a < r.b and r.jaccard == 1.0 for r in rows)
 
 
 def test_lsh_first_band_dedup_equivalent(spark, docs):
-    """The uncapped fused path emits each pair only from its FIRST
-    shared band and drops the distinct() exchange; the capped path
-    (max_bucket set, here effectively uncapped at 10^9) keeps the
-    generic every-band emission + distinct. Both must produce the
-    identical pair multiset, and the first-band stream must already be
-    duplicate-free (that is the invariant that justified removing
-    distinct())."""
+    """The fused path emits each pair only from its FIRST shared band
+    and runs no distinct(). Brute-force reference: the signature kernel
+    run in-process gives every doc's (band, bucket) memberships and
+    shingle-hash set; every pair sharing a bucket whose set Jaccard is
+    >= 0.5 must come out, with the identical jaccard, and the stream
+    must already be duplicate-free (the invariant that lets the path
+    skip distinct())."""
+    import pandas as pd
+
     base = docs.limit(40)
     dups = base.withColumn("doc_id", F.col("doc_id") + 100000).withColumn(
         "text", F.concat(F.col("text"), F.lit(" tail"))
     )
     corpus = base.unionByName(dups)
     fused = dedup.ngram_jaccard_pairs(corpus, threshold=0.5)
-    generic = dedup.ngram_jaccard_pairs(corpus, threshold=0.5, max_bucket=10**9)
     got = sorted((r.a, r.b, r.jaccard) for r in fused.collect())
-    ref = sorted((r.a, r.b, r.jaccard) for r in generic.collect())
-    assert got == ref
+
+    batch = corpus.select(
+        "doc_id", dedup.normalized_text(F.col("text")).alias("_nt")
+    ).toPandas()
+    kernel = dedup._banded_signature_kernel(
+        "doc_id", shingle_n=3, num_hashes=16, bands=4, rows_per_band=4
+    )
+    banded = pd.concat(list(kernel(iter([batch]))))
+    members: dict = {}
+    sets: dict = {}
+    for k, sh, band, bucket in zip(
+        banded["doc_id"], banded["sh"], banded["band"], banded["bucket"]
+    ):
+        members.setdefault((band, bucket), []).append(int(k))
+        sets[int(k)] = set(np.frombuffer(sh, "<i4").tolist())
+    ref = set()
+    for ks in members.values():
+        for i, x in enumerate(ks):
+            for y in ks[i + 1 :]:
+                a, b = min(x, y), max(x, y)
+                jac = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if jac >= 0.5:
+                    ref.add((a, b, jac))
+    assert got == sorted(ref)
     assert got, "planted near-dups must yield pairs"
     assert len(got) == len({(a, b) for a, b, _ in got})
+
+
+def test_lsh_duplicate_doc_key_raises(spark, docs):
+    """First-band emission needs one row per key: two rows sharing a
+    doc_id with identical text land in every bucket together, and the
+    verify kernel refuses the input, naming the key."""
+    from pyspark.errors import PythonException
+
+    base = docs.limit(5)
+    k = base.agg(F.min("doc_id")).first()[0]
+    corpus = base.unionByName(base.where(F.col("doc_id") == k))
+    with pytest.raises(PythonException, match="duplicate doc key %d in" % k):
+        dedup.ngram_jaccard_pairs(corpus, threshold=0.5).collect()
+
+
+def test_lsh_null_text_yields_no_pairs(spark, docs):
+    """Docs with NULL text have no shingle set: they pair with nothing,
+    raise nothing, and leave every other pair unchanged."""
+    base = docs.limit(20)
+    dups = base.withColumn("doc_id", F.col("doc_id") + 100000)  # identical text
+    nulls = base.withColumn("doc_id", F.col("doc_id") + 200000).withColumn(
+        "text", F.lit(None).cast("string")
+    )
+    corpus = base.unionByName(dups)
+    got = {(r.a, r.b, r.jaccard) for r in dedup.ngram_jaccard_pairs(
+        corpus.unionByName(nulls), threshold=0.5
+    ).collect()}
+    ref = {(r.a, r.b, r.jaccard) for r in dedup.ngram_jaccard_pairs(
+        corpus, threshold=0.5
+    ).collect()}
+    assert got == ref
+    assert all(a < 200000 and b < 200000 for a, b, _ in got)
+    planted = {(r.doc_id, r.doc_id + 100000) for r in base.collect()}
+    assert planted <= {(a, b) for a, b, _ in got}
 
 
 def test_detect_language_known_snippets(spark):

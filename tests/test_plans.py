@@ -107,34 +107,19 @@ def test_rgb_stack_single_shuffle(spark, tiles_df, scenes_df):
 
 
 def test_lsh_candidates_single_pass_uncached(spark):
-    """The LSH candidate step must not cache (no InMemoryRelation) and
-    must not self-join the signature pipeline: one groupBy shuffle for
-    bucketing + one for the final distinct."""
+    """The MinHash-LSH near-dup path must not cache (no
+    InMemoryRelation), must not self-join the signature pipeline, and
+    must not end in a distinct(): first-shared-band emission leaves the
+    bucket groupBy as the ONLY hash-partition exchange."""
     from rio_toa_spark.operators import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = dedup.minhash_signatures(docs, num_hashes=8)
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    plan = _plan(pairs)
+    plan = _plan(dedup.ngram_jaccard_pairs(docs))
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
     # only ONE signature computation feeds the plan: a self-join would
     # show two parquet scans of documents
     assert plan.count("Scan parquet") == 1, plan
-
-
-def test_token_hash_projection_not_inlined(spark):
-    """shingle_hash_sets materializes the per-token md5 array in its
-    own projection; if CollapseProject ever inlines it, the shingle
-    combine's higher-order lambdas would re-evaluate the md5 transform
-    per outer element (measured 11x slower). Guard: exactly one md5 in
-    the optimized plan."""
-    from rio_toa_spark.operators.dedup import shingle_hash_sets
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sh = shingle_hash_sets(docs)
-    plan = sh._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("md5") == 1, plan
 
 
 def test_zonal_partials_single_shuffle(spark, tiles_df, scenes_df):
