@@ -212,20 +212,6 @@ def _q_pip_broadcast(spark, sf_dir):
     return out.select("doc_id", "p_partkey")
 
 
-def _q_pip_salted(spark, sf_dir):
-    from rio_toa_spark.operators.spatial_join import pip_join
-
-    out = pip_join(_doc_points(spark, sf_dir), _part_boxes(spark, sf_dir), level=6, strategy="salted", salt=8)
-    return out.select("doc_id", "p_partkey")
-
-
-def _q_pip_index(spark, sf_dir):
-    from rio_toa_spark.operators.spatial_join import pip_join
-
-    out = pip_join(_doc_points(spark, sf_dir), _part_boxes(spark, sf_dir), strategy="index")
-    return out.select("doc_id", "p_partkey")
-
-
 _PIP_SQL = (
     "SELECT d.doc_id, b.p_partkey FROM (%s) d JOIN (%s) b ON "
     "d.lon >= b.fw AND d.lon <= b.fe AND d.lat >= b.fs AND d.lat <= b.fn"
@@ -269,12 +255,6 @@ _KNN_SQL = (
     "  ) AS rank FROM (%s) d CROSS JOIN (%s) c"
     ") WHERE rank <= 3" % (_DOC_POINTS_SQL, _SUPPLIER_CENTROIDS_SQL)
 )
-
-
-def _q_cell_assign(spark, sf_dir):
-    from rio_toa_spark.operators.spatial_join import with_cell
-
-    return with_cell(_doc_points(spark, sf_dir), level=8).select("doc_id", "cell")
 
 
 def _q_cell_rollup(spark, sf_dir):
@@ -336,13 +316,6 @@ FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
       / len(list_distinct(list_concat(a.shingles, b.shingles))) >= 0.05
 """ % (_SHINGLES_SQL, _TOKS_SQL)
-
-
-def _q_simhash(spark, sf_dir):
-    from rio_toa_spark.operators.dedup import simhash
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", simhash(F.col("text"), bits=32, shingle_n=3).alias("sig"))
 
 
 def _simhash_sql() -> str:
@@ -707,34 +680,6 @@ _TOKEN_SQL = (
 )
 
 
-def _q_lang_scores(spark, sf_dir):
-    from rio_toa_spark.operators.textstats import LANG_PROFILES, language_scores
-
-    d = _t(spark, sf_dir, "documents")
-    scores = language_scores(F.col("text"))
-    return d.select(
-        "doc_id",
-        *[scores[lang].alias("score_%s" % lang) for lang in sorted(LANG_PROFILES)],
-    )
-
-
-def _lang_sql() -> str:
-    from rio_toa_spark.operators.textstats import LANG_PROFILES
-
-    cols = []
-    for lang in sorted(LANG_PROFILES):
-        vocab = ", ".join("'%s'" % w for w in LANG_PROFILES[lang])
-        cols.append(
-            "CAST(len(list_filter(__toks2, t -> list_contains([%s], t))) AS DOUBLE)"
-            " / GREATEST(len(__toks2), 1) AS score_%s" % (vocab, lang)
-        )
-    return (
-        "SELECT doc_id, %s FROM (SELECT doc_id, "
-        "regexp_extract_all(lower(text), '[A-Za-z0-9]+') AS __toks2 FROM documents)"
-        % ", ".join(cols)
-    )
-
-
 def _q_lang_detect(spark, sf_dir):
     # argmax language pick over the stopword-hit scores; Spark's
     # array_max-on-struct tie-break (largest lang name wins on equal
@@ -985,14 +930,6 @@ def _q_join_revenue(spark, sf_dir):
     )
 
 
-_REVENUE_SQL = """
-SELECT n_name, round(SUM(o_totalprice), 4) AS revenue, COUNT(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
 def _q_region_revenue(spark, sf_dir):
     # TPC-H Q5-flavored 5-way join: lineitem facts against a broadcast
     # dimension chain region <- nation <- customer <- orders. The fact
@@ -1060,22 +997,6 @@ SELECT o_custkey, o_orderkey, CAST(rnk AS INTEGER) AS rnk FROM (
     row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
   FROM orders
 ) WHERE rnk <= 3
-"""
-
-
-def _q_events_rollup(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-_EVENTS_SQL = """
-SELECT event_type, COUNT(*) AS n, round(SUM(value), 4) AS total_value,
-  COUNT(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type
 """
 
 
@@ -1806,14 +1727,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # EXACTLY 50 entries: the r02 driver recorded correctness rows for
     # the first 50 dict entries only, so the registry is capped at 50
     # and the queries that never got a row in r02 sit near the front.
-    # Operators trimmed to fit remain implemented + tested and are
-    # verified transitively by the pipeline queries that compose them:
+    # Operators trimmed to fit have no entry function of their own;
+    # the pipeline queries that compose them verify them transitively:
     # minhash/simhash (inside {minhash,simhash}_lsh full-pipeline
     # twins), lang_scores (inside lang_detect), cell_assign (inside
-    # cell_rollup), events_rollup/join_revenue (cube_events /
-    # region_revenue cover the same operator shapes), png_decode +
-    # thumbnail (folded into media_pipeline: PNG encode -> genuine
-    # decode -> resize -> features).
+    # cell_rollup), pip salted/index (result-identical to
+    # pip_broadcast, tests/test_spatial.py), png_decode + thumbnail
+    # (folded into media_pipeline: PNG encode -> genuine decode ->
+    # resize -> features). _q_join_revenue is outside the registry:
+    # bench.py times it.
     return {
         # TOA kernel family (scalar SQL twins; binary-tile pipelines below)
         "radiance_scalar": _q_radiance_scalar,

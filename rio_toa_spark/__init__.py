@@ -4,8 +4,9 @@ Reimplements the query/data-processing capabilities of mapbox/rio-toa
 (reference at /root/reference) on Apache Spark:
 
 * TOA kernels (radiance, reflectance, brightness temperature) as
-  vectorized numpy inside Arrow-batched ``mapInPandas`` operators over
-  tiles stored as binary raster chunks
+  vectorized numpy over zero-copy Arrow record batches
+  (``operators.map_arrow``, one ``mapInArrow`` per kernel) of tiles
+  stored as binary raster chunks
   (reference: rio_toa/radiance.py:8-42, reflectance.py:11-74,
   brightness_temp.py:14-62).
 * MTL metadata parsing as a Spark-side struct extractor

@@ -21,7 +21,7 @@ pre-encode contract). The decoder sniffs each frame chunk's own
 signature rather than trusting the declared fourcc, which is how
 tolerant real-world players treat MJPEG streams.
 
-Scale note: container parsing runs inside mapInPandas batches, one
+Scale note: container parsing runs inside Arrow batch kernels, one
 payload per row — the binary never shuffles and the parse is O(bytes)
 with no Python-per-pixel work (pixel decode is the numpy codecs).
 """

@@ -1,6 +1,6 @@
 """TOA pixel kernels — vectorized numpy, float32-parity with rio-toa.
 
-These run INSIDE Arrow batches on executors (mapInPandas); they are the
+These run INSIDE Arrow batches on executors (mapInArrow); they are the
 engine's equivalent of rio-toa's riomucho workers. Operation order and
 numpy dtype behavior are kept identical to the reference so outputs are
 bitwise-equal float32:

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rio_toa_spark.operators import map_arrow
 from rio_toa_spark.operators.textstats import portable_hash64
 
 # Mersenne prime 2^31-1: (a * (h % p) + b) stays < 2^62, so the mix
@@ -277,6 +278,9 @@ def _lsh_jaccard_fused(
     # emission makes the pair stream globally unique.
     nt = _parallelize(df).select(F.col(key), normalized_text(F.col(text)).alias("_nt"))
     key_dt = df.schema[key].dataType
+    # the one kernel still on mapInPandas:
+    # perfbench/tests/test_minhash_defect.py feeds it a pandas frame,
+    # so it moves onto map_arrow together with that test
     banded = nt.mapInPandas(
         _banded_signature_kernel(key, shingle_n, num_hashes, bands, rows_per_band),
         T.StructType(
@@ -328,7 +332,7 @@ def _lsh_jaccard_fused(
             T.StructField("jaccard", T.DoubleType()),
         ]
     )
-    return bucket_cols.mapInPandas(_bucket_jaccard_verify(threshold), out_schema)
+    return map_arrow(bucket_cols, _bucket_jaccard_verify(threshold), out_schema)
 
 
 def _banded_signature_kernel(
@@ -539,7 +543,6 @@ def _bucket_jaccard_verify(threshold: float):
     result. That uniqueness needs one doc per key: a bucket holding
     the same key twice raises ValueError."""
     import numpy as np
-    import pandas as pd
 
     # cached upper-triangle index pairs per bucket size (bucket sizes
     # repeat heavily; np.triu_indices is ~40% of the lean path's cost)
@@ -577,24 +580,30 @@ def _bucket_jaccard_verify(threshold: float):
             out_x.append(ju[keep])
             out_j.append(jv[keep])
 
+    def _flat(col):
+        """Flat member values of a (null-free) list column plus each
+        bucket row's [start, end) offsets into them."""
+        offs = col.offsets.to_numpy()
+        return col.flatten().to_numpy(zero_copy_only=False), offs - offs[0]
+
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             out_a: list = []
             out_b: list = []
             out_j: list = []
-            ks_col = pdf["ks"].to_numpy()
-            ss_col = pdf["ss"].to_numpy()
-            band_col = pdf["band"].to_numpy()
-            hs_col = pdf["hs"].to_numpy()
-            for r in range(len(ks_col)):
-                ks = np.asarray(ks_col[r])
+            ks_flat, ks_off = _flat(batch.column("ks"))
+            ss_flat, ss_off = _flat(batch.column("ss"))
+            hs_flat, hs_off = _flat(batch.column("hs"))
+            band_col = batch.column("band").to_pylist()
+            for r in range(batch.num_rows):
+                ks = ks_flat[ks_off[r] : ks_off[r + 1]]
                 dup = ks[1:] == ks[:-1]
                 if dup.any():
                     raise ValueError(
                         "duplicate doc key %s in ngram_jaccard_pairs input: "
                         "the LSH path needs one row per key" % ks[1:][dup][0]
                     )
-                ss = ss_col[r]
+                ss = ss_flat[ss_off[r] : ss_off[r + 1]]
                 idx_i: list = []
                 idx_x: list = []
                 jtmp: list = []
@@ -611,8 +620,8 @@ def _bucket_jaccard_verify(threshold: float):
                 hmat = None
                 if band_col[r]:
                     hmat = np.frombuffer(
-                        b"".join(hs_col[r]), np.int64
-                    ).reshape(len(ks), -1)[:, : int(band_col[r])]
+                        b"".join(hs_flat[hs_off[r] : hs_off[r + 1]]), np.int64
+                    ).reshape(len(ks), -1)[:, : band_col[r]]
                 # map positions to keys segment-by-segment (lean
                 # buckets emit exactly one segment; class buckets may
                 # emit many — per-segment mapping avoids a per-bucket
@@ -629,18 +638,11 @@ def _bucket_jaccard_verify(threshold: float):
                     out_b.append(ks[ib])
                     out_j.append(jv)
             if out_a:
-                yield pd.DataFrame(
-                    {
-                        "a": np.concatenate(out_a),
-                        "b": np.concatenate(out_b),
-                        "jaccard": np.concatenate(out_j),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {"a": pd.Series(dtype=object), "b": pd.Series(dtype=object),
-                     "jaccard": pd.Series(dtype=np.float64)}
-                )
+                yield {
+                    "a": np.concatenate(out_a),
+                    "b": np.concatenate(out_b),
+                    "jaccard": np.concatenate(out_j),
+                }
 
     def _emit_bucket(n, ss, thr, out_i, out_x, out_j):
         # collapse byte-identical sets into classes; emits POSITIONS

@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column handling.
 
 Media payloads are opaque ``binary`` columns plus a typed metadata
-struct — the same tile pattern the TOA core uses. Heavy decode is a
-batch Arrow UDF over ``mapInPandas``. PNG, baseline JPEG, and
+struct — the same tile pattern the TOA core uses. Heavy decode is an
+Arrow batch kernel (``map_arrow``). PNG, baseline JPEG, and
 MJPG/MPNG-in-AVI video are decoded GENUINELY through the pure-numpy
 codecs (functions/{png,jpeg,avi}.py); formats those can't parse fall
 back to a clearly marked deterministic stub (seeded from the payload
@@ -24,14 +24,12 @@ Operators:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rio_toa_spark.operators import binary_rows, map_arrow
 from rio_toa_spark.operators.dedup import _parse_bytes
 
 try:  # pragma: no cover - not present in this container
@@ -102,6 +100,14 @@ _DECODED_FIELDS = [
 _STATUS_FIELD = T.StructField("decode_status", T.StringType())
 
 
+def _with_status(batch, cols: dict) -> dict:
+    """Let ``decode_status`` provenance, when the input batch has it,
+    ride through into the output columns."""
+    if "decode_status" in batch.schema.names:
+        cols["decode_status"] = batch.column("decode_status")
+    return cols
+
+
 def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id") -> DataFrame:
     """binary -> decoded uint8 HWC buffer + decode provenance.
 
@@ -110,7 +116,7 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
     payloads take GENUINE decodes through the pure-numpy codecs in
     functions/{png,jpeg}.py, signature-sniffed; other formats fall
     back to the documented deterministic stub (PIL plugs into the same
-    mapInPandas shape when importable). Video payloads go through
+    kernel when importable). Video payloads go through
     ``sample_video_frames``; audio through ``decode_audio``.
 
     Every row carries ``decode_status`` ('genuine_png' / 'genuine_jpeg'
@@ -132,7 +138,7 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
     # huff/qt table id), IndexError (bad AC run), struct.error
     # (truncated segment), zlib.error (corrupt IDAT stream). All must
     # fall through to PIL/stub — one bad payload must never kill the
-    # whole mapInPandas batch (fuzz-tested in tests/test_multimodal.py)
+    # whole Arrow batch (fuzz-tested in tests/test_multimodal.py)
     _PARSE_ERRORS = (ValueError, KeyError, IndexError, _struct.error, _zlib.error)
 
     def _decode_one(p: bytes) -> tuple[np.ndarray, str]:
@@ -177,31 +183,30 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
         df.sparkSession.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
     )
 
-    def _frame(keys: pd.Series, decoded: list) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                key: keys.reset_index(drop=True),
-                "height": [d.shape[0] for d, _ in decoded],
-                "width": [d.shape[1] for d, _ in decoded],
-                "channels": [d.shape[2] for d, _ in decoded],
-                "pixels": [d.tobytes() for d, _ in decoded],
-                "decode_status": [s for _, s in decoded],
-            }
-        )
+    def _frame(keys, decoded: list) -> dict:
+        return {
+            key: keys,
+            "height": [d.shape[0] for d, _ in decoded],
+            "width": [d.shape[1] for d, _ in decoded],
+            "channels": [d.shape[2] for d, _ in decoded],
+            "pixels": [d.tobytes() for d, _ in decoded],
+            "decode_status": [s for _, s in decoded],
+        }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
+            keys = batch.column(key)
             start, size, decoded = 0, 0, []
-            for p in pdf[payload]:
+            for p in batch.column(payload).to_pylist():
                 decoded.append(_decode_one(p))
                 size += decoded[-1][0].nbytes
                 if size >= max_bytes:
-                    yield _frame(pdf[key].iloc[start : start + len(decoded)], decoded)
+                    yield _frame(keys.slice(start, len(decoded)), decoded)
                     start, size, decoded = start + len(decoded), 0, []
             if decoded:
-                yield _frame(pdf[key].iloc[start:], decoded)
+                yield _frame(keys.slice(start), decoded)
 
-    return df.mapInPandas(run, schema)
+    return map_arrow(df, run, schema)
 
 
 def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str = "media_id") -> DataFrame:
@@ -215,28 +220,26 @@ def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str
         + ([_STATUS_FIELD] if has_status else [])
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             out = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.pixels, dtype=np.uint8).reshape(
-                    row.height, row.width, row.channels
+            for row, buf in binary_rows(batch):
+                arr = np.frombuffer(buf, dtype=np.uint8).reshape(
+                    row["height"], row["width"], row["channels"]
                 )
-                ys = (np.arange(out_h) * row.height // out_h).astype(int)
-                xs = (np.arange(out_w) * row.width // out_w).astype(int)
+                ys = (np.arange(out_h) * row["height"] // out_h).astype(int)
+                xs = (np.arange(out_w) * row["width"] // out_w).astype(int)
                 out.append(arr[np.ix_(ys, xs)].tobytes())
             cols = {
-                key: pdf[key],
-                "height": out_h,
-                "width": out_w,
-                "channels": pdf["channels"],
+                key: batch.column(key),
+                "height": [out_h] * len(out),
+                "width": [out_w] * len(out),
+                "channels": batch.column("channels"),
                 "pixels": out,
             }
-            if has_status:
-                cols["decode_status"] = pdf["decode_status"]
-            yield pd.DataFrame(cols)
+            yield _with_status(batch, cols)
 
-    return decoded_df.mapInPandas(run, schema)
+    return map_arrow(decoded_df, run, schema)
 
 
 def image_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
@@ -250,22 +253,19 @@ def image_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
         + ([_STATUS_FIELD] if has_status else [])
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             feats = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.pixels, dtype=np.uint8).reshape(
-                    row.height, row.width, row.channels
+            for row, buf in binary_rows(batch):
+                arr = np.frombuffer(buf, dtype=np.uint8).reshape(
+                    row["height"], row["width"], row["channels"]
                 ).astype(np.float32)
                 feats.append(
                     np.concatenate([arr.mean(axis=(0, 1)), arr.std(axis=(0, 1))]).tolist()
                 )
-            cols = {key: pdf[key], "features": feats}
-            if has_status:
-                cols["decode_status"] = pdf["decode_status"]
-            yield pd.DataFrame(cols)
+            yield _with_status(batch, {key: batch.column(key), "features": feats})
 
-    return decoded_df.mapInPandas(run, schema)
+    return map_arrow(decoded_df, run, schema)
 
 
 _AUDIO_FIELDS = [
@@ -312,21 +312,19 @@ def decode_audio(df: DataFrame, payload: str = "payload", key: str = "media_id")
         samples, rate = _fake_audio(p)
         return samples, rate, "stub"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_decode_one(p) for p in pdf[payload]]
-            yield pd.DataFrame(
-                {
-                    key: pdf[key],
-                    "n_samples": [s.shape[0] for s, _, _ in decoded],
-                    "n_channels": [s.shape[1] for s, _, _ in decoded],
-                    "sample_rate": [r for _, r, _ in decoded],
-                    "samples": [s.astype("<i2").tobytes() for s, _, _ in decoded],
-                    "decode_status": [st for _, _, st in decoded],
-                }
-            )
+    def run(batches):
+        for batch in batches:
+            decoded = [_decode_one(p) for p in batch.column(payload).to_pylist()]
+            yield {
+                key: batch.column(key),
+                "n_samples": [s.shape[0] for s, _, _ in decoded],
+                "n_channels": [s.shape[1] for s, _, _ in decoded],
+                "sample_rate": [r for _, r, _ in decoded],
+                "samples": [s.astype("<i2").tobytes() for s, _, _ in decoded],
+                "decode_status": [st for _, _, st in decoded],
+            }
 
-    return df.mapInPandas(run, schema)
+    return map_arrow(df, run, schema)
 
 
 def audio_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
@@ -343,40 +341,38 @@ def audio_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
         + ([_STATUS_FIELD] if has_status else [])
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             durs, feats = [], []
-            for row in pdf.itertuples(index=False):
-                s = np.frombuffer(row.samples, dtype="<i2").reshape(
-                    row.n_samples, row.n_channels
-                ).astype(np.float64)
-                durs.append(row.n_samples / float(row.sample_rate))
-                if row.n_samples:
+            for row, buf in binary_rows(batch, "samples"):
+                n_samples, n_channels = row["n_samples"], row["n_channels"]
+                s = np.frombuffer(buf, dtype="<i2").reshape(n_samples, n_channels).astype(np.float64)
+                durs.append(n_samples / float(row["sample_rate"]))
+                if n_samples:
                     rms = np.sqrt((s**2).mean(axis=0))
                     peak = np.abs(s).max(axis=0)
                 else:
-                    rms = peak = np.zeros(row.n_channels)
+                    rms = peak = np.zeros(n_channels)
                 zcr = (
                     np.abs(np.diff(np.signbit(s).astype(np.int8), axis=0)).mean(axis=0)
-                    if row.n_samples > 1
-                    else np.zeros(row.n_channels)
+                    if n_samples > 1
+                    else np.zeros(n_channels)
                 )
                 feats.append(
                     np.concatenate([rms, peak, zcr]).astype(np.float32).tolist()
                 )
-            cols = {key: pdf[key], "duration_s": durs, "features": feats}
-            if has_status:
-                cols["decode_status"] = pdf["decode_status"]
-            yield pd.DataFrame(cols)
+            yield _with_status(
+                batch, {key: batch.column(key), "duration_s": durs, "features": feats}
+            )
 
-    return decoded_df.mapInPandas(run, schema)
+    return map_arrow(decoded_df, run, schema)
 
 
 def sample_video_frames(
     df: DataFrame, n_frames: int = 4, payload: str = "payload", key: str = "media_id"
 ) -> DataFrame:
     """binary video -> one row per sampled frame (UDTF-style expansion
-    inside mapInPandas).
+    inside an Arrow batch kernel).
 
     RIFF/AVI payloads take a GENUINE path: the container is parsed
     (functions/avi.py — pure struct RIFF walking), ``n_frames`` frames
@@ -426,11 +422,12 @@ def sample_video_frames(
                 raise ValueError("AVI frame with unknown codec signature")
         return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             keys, idxs, hs, ws, cs, bufs, stats = [], [], [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                payload_bytes = getattr(row, payload)
+            for media_key, payload_bytes in zip(
+                batch.column(key).to_pylist(), batch.column(payload).to_pylist()
+            ):
                 decoded = None
                 if _avi.is_avi(bytes(payload_bytes)):
                     try:
@@ -443,23 +440,21 @@ def sample_video_frames(
                         for fi in range(n_frames)
                     ]
                 for src, arr, status in decoded:
-                    keys.append(getattr(row, key))
+                    keys.append(media_key)
                     idxs.append(src)
                     hs.append(arr.shape[0])
                     ws.append(arr.shape[1])
                     cs.append(arr.shape[2])
                     bufs.append(arr.tobytes())
                     stats.append(status)
-            yield pd.DataFrame(
-                {
-                    key: keys,
-                    "frame_idx": idxs,
-                    "height": hs,
-                    "width": ws,
-                    "channels": cs,
-                    "pixels": bufs,
-                    "decode_status": stats,
-                }
-            )
+            yield {
+                key: keys,
+                "frame_idx": idxs,
+                "height": hs,
+                "width": ws,
+                "channels": cs,
+                "pixels": bufs,
+                "decode_status": stats,
+            }
 
-    return df.mapInPandas(run, schema)
+    return map_arrow(df, run, schema)

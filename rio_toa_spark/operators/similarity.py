@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from rio_toa_spark.operators import map_arrow
+
 
 def dot(a: Column, b: Column) -> Column:
     # cast BEFORE multiplying: float32*float32 rounds to float32, while
@@ -101,22 +103,31 @@ def _batch_topk_scores(V32, keys, Q, qn, k, per_query_rows=None):
     return out_q, out_k, out_c
 
 
+def _list_matrix(col) -> np.ndarray:
+    """(rows x dim) matrix of an Arrow list column, one reshape of its
+    flat values instead of an np.vstack over per-row arrays (measured
+    0.44 s vs ~0.1 s at 80k x 64). Every row must hold the same number
+    of values: the row lengths come from the list offsets, so a ragged
+    column raises instead of being re-cut into equal rows."""
+    lens = np.diff(col.offsets.to_numpy())
+    if lens.size and (lens != lens[0]).any():
+        raise ValueError(
+            "ragged embedding column: row lengths %d..%d" % (lens.min(), lens.max())
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(len(col), lens[0] if lens.size else 0)
+
+
 def _vectors_to_matrix(df: DataFrame, vec: str) -> np.ndarray:
     """Driver-side (rows x dim) float64 matrix of an embedding column,
-    via the Arrow path: one flat buffer reshape instead of the row
-    collect (or an np.vstack over 10^5 tiny arrays — measured 1.4 s
-    and 0.44 s respectively vs ~0.1 s here at 80k x 64). Values and
-    row order identical: Arrow float32 -> float64 is the same exact
-    widening as the per-row python-float conversion."""
-    tbl = df.toArrow()
-    col = tbl.column(vec).combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    n = len(col)
-    if n == 0:
+    via the Arrow path instead of the row collect (measured 1.4 s vs
+    ~0.1 s at 80k x 64). Values and row order identical: Arrow
+    float32 -> float64 is the same exact widening as the per-row
+    python-float conversion."""
+    col = df.toArrow().column(vec).combine_chunks()
+    if len(col) == 0:
         return np.zeros((0, 0))
-    if flat.size % n:
-        raise ValueError("ragged embedding column %r" % vec)
-    return flat.reshape(n, flat.size // n).astype(np.float64)
+    return _list_matrix(col).astype(np.float64)
 
 
 def _collect_queries(queries_df: DataFrame, q_key: str, q_vec: str):
@@ -164,36 +175,28 @@ def cosine_topk(
     )
 
     def score(batches):
-        import pandas as pd
-
         q_ids_l, Q_l, qn_l = bc.value
         if not q_ids_l:
             return
         qid_arr = np.array(q_ids_l)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = pdf[vec].to_numpy()
-            keys = pdf[key].to_numpy()
-            ok = np.array([v is not None for v in vecs])
-            if not ok.all():
+        for batch in batches:
+            if batch.column(vec).null_count:
                 # a NULL vector scores NULL cosine in the SQL form and
                 # never outranks a real candidate; drop it here
-                vecs, keys = vecs[ok], keys[ok]
-                if not len(vecs):
-                    continue
-            V32 = np.vstack(vecs)
+                batch = batch.filter(batch.column(vec).is_valid())
+            if not batch.num_rows:
+                continue
+            V32 = _list_matrix(batch.column(vec))
+            keys = batch.column(key).to_numpy(zero_copy_only=False)
             out_q, out_k, out_c = _batch_topk_scores(V32, keys, Q_l, qn_l, k)
             if out_q:
-                yield pd.DataFrame(
-                    {
-                        q_key: qid_arr[np.concatenate(out_q)],
-                        key: np.concatenate(out_k),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+                yield {
+                    q_key: qid_arr[np.concatenate(out_q)],
+                    key: np.concatenate(out_k),
+                    "cosine": np.concatenate(out_c),
+                }
 
-    scored = emb_df.select(key, vec).mapInPandas(score, out_schema)
+    scored = map_arrow(emb_df.select(key, vec), score, out_schema)
     w = Window.partitionBy(q_key).orderBy(F.col("cosine").desc(), F.col(key).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -291,8 +294,6 @@ def cosine_topk_ivf(
     )
 
     def assign_and_score(batches):
-        import pandas as pd
-
         q_ids_l, Q_l, qn_l, probes_l, C_l = bc.value
         if not q_ids_l:
             return
@@ -302,11 +303,11 @@ def cosine_topk_ivf(
         # for the exact ann_ivf oracle: that variation is bounded far
         # below the >=1e-6 assignment margin the fixture asserts at
         # generation (sources/truth.py).
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V32 = np.vstack(pdf[vec].to_numpy())
-            keys = pdf[key].to_numpy()
+            V32 = _list_matrix(batch.column(vec))
+            keys = batch.column(key).to_numpy(zero_copy_only=False)
             # argmax of dot products; ties -> lowest list id (argmax
             # first-occurrence), matching a deterministic assignment
             assign = np.argmax(V32 @ C_l, axis=1)
@@ -318,15 +319,13 @@ def cosine_topk_ivf(
                 V32, keys, Q_l, qn_l, k, per_query_rows=rows_per_q
             )
             if out_q:
-                yield pd.DataFrame(
-                    {
-                        q_key: qid_arr[np.concatenate(out_q)],
-                        key: np.concatenate(out_k),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
+                yield {
+                    q_key: qid_arr[np.concatenate(out_q)],
+                    key: np.concatenate(out_k),
+                    "cosine": np.concatenate(out_c),
+                }
 
-    scored = emb_df.select(key, vec).mapInPandas(assign_and_score, out_schema)
+    scored = map_arrow(emb_df.select(key, vec), assign_and_score, out_schema)
     w = Window.partitionBy(q_key).orderBy(F.col("cosine").desc(), F.col(key).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -18,8 +18,8 @@ Design:
       pmod(xxhash64(url), S) and the footprint side replicated S ways.
       The explicit skew treatment for hot cells when the footprint
       side outgrows broadcast; AQE skew-join remains on as backstop.
-    - 'index': mapInPandas with a broadcast RectIndex (the STRtree
-      analogue) — pure map, candidate+refine fused in numpy.
+    - 'index': an Arrow batch kernel with a broadcast RectIndex (the
+      STRtree analogue) — pure map, candidate+refine fused in numpy.
 * kNN page->tile: broadcast tile centroids into an Arrow batch kernel
   (exact, vectorized) or cell-ring candidate expansion + windowed
   row_number for the non-broadcastable case. Deterministic
@@ -33,14 +33,12 @@ the expression.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rio_toa_spark.operators import map_arrow
 from rio_toa_spark.spatial import cells as cell_mod
 from rio_toa_spark.spatial.index import RectIndex
 
@@ -194,8 +192,9 @@ def pip_join(
 
 
 def _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat):
-    """Broadcast-RectIndex refine inside mapInPandas (the STRtree-style
-    plan): candidate search + exact containment fused, zero shuffle."""
+    """Broadcast-RectIndex refine inside an Arrow batch kernel (the
+    STRtree-style plan): candidate search + exact containment fused,
+    zero shuffle."""
     spark = points_df.sparkSession
     fps = footprints_df.select("fw", "fs", "fe", "fn", *fp_id_cols).collect()
     idx = RectIndex(
@@ -214,16 +213,20 @@ def _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat):
         + [footprints_df.schema[c] for c in fp_id_cols]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         index, fp_payload = bc.value
-        for pdf in batches:
-            pt_idx, box_ids = index.query_points(pdf[lon].to_numpy(), pdf[lat].to_numpy())
-            left = pdf.iloc[pt_idx].reset_index(drop=True)
+        for batch in batches:
+            pt_idx, box_ids = index.query_points(
+                batch.column(lon).to_numpy(zero_copy_only=False),
+                batch.column(lat).to_numpy(zero_copy_only=False),
+            )
+            left = batch.take(pt_idx)
+            cols = {name: left.column(name) for name in left.schema.names}
             for j, col in enumerate(fp_id_cols):
-                left[col] = [fp_payload[int(b)][j] for b in box_ids]
-            yield left
+                cols[col] = [fp_payload[int(b)][j] for b in box_ids]
+            yield cols
 
-    return points_df.mapInPandas(run, out_schema)
+    return map_arrow(points_df, run, out_schema)
 
 
 # ------------------------------------------------------------------ kNN
@@ -284,7 +287,7 @@ def knn_centroids(
 def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     spark = points_df.sparkSession
     # project BEFORE the opaque kernel: Spark cannot see which columns
-    # mapInPandas touches and would ship (and scan) every page column —
+    # a Python kernel touches and would ship (and scan) every page column —
     # including the ~0.5 KB html payloads — through Arrow into Python
     # (guide rule; measured 2.1 s -> 1.0 s on the 400k-page bench)
     points_df = points_df.select(point_key, lon, lat)
@@ -303,7 +306,7 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         tids, tx, ty = bc.value
         tid_arr = np.array(tids)
         T = len(tids)
@@ -357,10 +360,10 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
                     svals[risky] = np.take_along_axis(d2[risky], full, axis=1)
             return order, svals
 
-        for pdf in batches:
-            keys = pdf[point_key].to_numpy()
-            px = pdf[lon].to_numpy()
-            py = pdf[lat].to_numpy()
+        for batch in batches:
+            keys = batch.column(point_key).to_numpy(zero_copy_only=False)
+            px = batch.column(lon).to_numpy(zero_copy_only=False)
+            py = batch.column(lat).to_numpy(zero_copy_only=False)
             n = len(px)
             if not n:
                 continue
@@ -371,16 +374,14 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
                 sv.append(v)
             order = np.concatenate(orders)
             svals = np.concatenate(sv)
-            yield pd.DataFrame(
-                {
-                    point_key: np.repeat(keys, kk),
-                    "tile_id": tid_arr[order].ravel(),
-                    "dist": np.sqrt(svals).ravel(),
-                    "rank": np.tile(np.arange(1, kk + 1), n),
-                }
-            )
+            yield {
+                point_key: np.repeat(keys, kk),
+                "tile_id": tid_arr[order].ravel(),
+                "dist": np.sqrt(svals).ravel(),
+                "rank": np.tile(np.arange(1, kk + 1), n),
+            }
 
-    return points_df.mapInPandas(run, out_schema)
+    return map_arrow(points_df, run, out_schema)
 
 
 def _knn_cells(points_df, tiles, k, level, radius, lon, lat, point_key):

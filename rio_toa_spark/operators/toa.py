@@ -35,16 +35,14 @@ Scalability notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rio_toa_spark.functions import kernels, sun
 from rio_toa_spark.functions.mtl import mtl_band_value, with_parsed_mtl
+from rio_toa_spark.operators import binary_rows, map_arrow
 
 TILE_KEY = ["scene_id", "band", "tile_row", "tile_col"]
 
@@ -84,38 +82,22 @@ def _nodata_of(value) -> int | None:
 
 
 def _arrow_toa_op(src: DataFrame, dst_dtype: str, compute) -> DataFrame:
-    """Shared mapInArrow runner: per row, hand ``compute`` the
-    zero-copy uint16 DN array plus a scalar-accessor, collect the
-    output buffer bytes, and emit the TOA output batch."""
-    import pyarrow as pa
+    """Shared TOA runner: per tile, hand ``compute`` the zero-copy
+    uint16 DN array plus the row's scalar columns, and emit the output
+    buffer bytes under the tile key."""
 
     def run(batches):
         for batch in batches:
-            cols = {name: batch.column(name) for name in batch.schema.names}
-            n = batch.num_rows
-            out = []
-            for i in range(n):
-                height = cols["height"][i].as_py()
-                width = cols["width"][i].as_py()
-                dn = np.frombuffer(cols["pixels"][i].as_buffer(), dtype="<u2").reshape(
-                    int(height), int(width)
-                )
-                get = lambda name: cols[name][i].as_py()  # noqa: B023
-                out.append(compute(dn, get))
-            yield pa.record_batch(
-                {
-                    "scene_id": cols["scene_id"],
-                    "band": cols["band"],
-                    "tile_row": cols["tile_row"],
-                    "tile_col": cols["tile_col"],
-                    "width": cols["width"],
-                    "height": cols["height"],
-                    "dtype": pa.array([dst_dtype] * n),
-                    "pixels": pa.array(out, pa.binary()),
-                }
-            )
+            out = [
+                compute(np.frombuffer(buf, "<u2").reshape(row["height"], row["width"]), row)
+                for row, buf in binary_rows(batch)
+            ]
+            cols = {c: batch.column(c) for c in TILE_KEY + ["width", "height"]}
+            cols["dtype"] = [dst_dtype] * batch.num_rows
+            cols["pixels"] = out
+            yield cols
 
-    return src.mapInArrow(run, TOA_OUT_SCHEMA)
+    return map_arrow(src, run, TOA_OUT_SCHEMA)
 
 
 def radiance_tiles(
@@ -139,9 +121,9 @@ def radiance_tiles(
     src = tiles_df.filter(F.col("band") == band).join(F.broadcast(dim), "scene_id")
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, get):
+    def compute(dn, row):
         arr = np.empty(dn.shape, dtype=np_dtype)
-        ml, al, nodata = get("c_ml"), get("c_al"), _nodata_of(get("nodata"))
+        ml, al, nodata = row["c_ml"], row["c_al"], _nodata_of(row["nodata"])
         for r0, r1 in _strips(dn.shape[0]):
             arr[r0:r1] = kernels.rescale(
                 kernels.radiance(dn[r0:r1], ml, al, nodata), factor, np_dtype, clip=clip
@@ -192,16 +174,16 @@ def reflectance_tiles(
 
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, get):
+    def compute(dn, row):
         rows_, cols_ = dn.shape
-        nodata = _nodata_of(get("nodata"))
-        ml, al = get("c_ml"), get("c_al")
+        nodata = _nodata_of(row["nodata"])
+        ml, al = row["c_ml"], row["c_al"]
         arr = np.empty((1, rows_, cols_), dtype=np_dtype)
         if per_pixel_sun:
-            bbox = [get("bounds_w"), get("bounds_s"), get("bounds_e"), get("bounds_n")]
-            date_s, time_s = get("c_date"), get("c_time")
+            bbox = [row["bounds_w"], row["bounds_s"], row["bounds_e"], row["bounds_n"]]
+            date_s, time_s = row["c_date"], row["c_time"]
         else:
-            e_scene = get("c_e")
+            e_scene = row["c_e"]
         for r0, r1 in _strips(rows_):
             data = dn[r0:r1].astype(np.float32)[np.newaxis, :, :]
             if per_pixel_sun:
@@ -247,9 +229,9 @@ def brightness_temp_tiles(
 
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, get):
+    def compute(dn, row):
         arr = np.empty(dn.shape, dtype=np_dtype)
-        ml, al, k1, k2 = get("c_ml"), get("c_al"), get("c_k1"), get("c_k2")
+        ml, al, k1, k2 = row["c_ml"], row["c_al"], row["c_k1"], row["c_k2"]
         for r0, r1 in _strips(dn.shape[0]):
             arr[r0:r1] = kernels.temp_rescale(
                 kernels.brightness_temp(dn[r0:r1], ml, al, k1, k2, src_nodata),
@@ -346,11 +328,11 @@ def tile_stats(toa_df: DataFrame) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             mins, maxs, means = [], [], []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.pixels, dtype=np.dtype(row.dtype))
+            for row, buf in binary_rows(batch):
+                arr = np.frombuffer(buf, dtype=np.dtype(row["dtype"]))
                 # isfinite works on integer and float dtypes alike for
                 # masking; only a bool mask is materialized (no upcast)
                 finite = (
@@ -361,22 +343,11 @@ def tile_stats(toa_df: DataFrame) -> DataFrame:
                 mins.append(float(finite.min()) if finite.size else float("nan"))
                 maxs.append(float(finite.max()) if finite.size else float("nan"))
                 means.append(float(finite.mean()) if finite.size else float("nan"))
-            yield pd.DataFrame(
-                {
-                    "scene_id": pdf["scene_id"],
-                    "band": pdf["band"],
-                    "tile_row": pdf["tile_row"],
-                    "tile_col": pdf["tile_col"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "dtype": pdf["dtype"],
-                    "px_min": mins,
-                    "px_max": maxs,
-                    "px_mean": means,
-                }
-            )
+            cols = {f.name: batch.column(f.name) for f in _OUT_FIELDS if f.name != "pixels"}
+            cols.update(px_min=mins, px_max=maxs, px_mean=means)
+            yield cols
 
-    return toa_df.mapInPandas(run, schema)
+    return map_arrow(toa_df, run, schema)
 
 
 _HIST_PARTIAL_SCHEMA = T.StructType(
@@ -413,18 +384,11 @@ def value_histogram(toa_df: DataFrame, bucket_scale: float = 1.0 / 64) -> DataFr
     """
     scale = float(bucket_scale)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = {
-            "scene_id": pd.Series([], dtype=object),
-            "band": pd.Series([], dtype="int32"),
-            "bucket": pd.Series([], dtype="int32"),
-            "value": pd.Series([], dtype="float64"),
-            "n": pd.Series([], dtype="int64"),
-        }
-        for pdf in batches:
-            cols = {k: [] for k in empty}
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.pixels, dtype=np.dtype(row.dtype)).ravel()
+    def run(batches):
+        for batch in batches:
+            cols = {f.name: [] for f in _HIST_PARTIAL_SCHEMA}
+            for row, buf in binary_rows(batch):
+                arr = np.frombuffer(buf, dtype=np.dtype(row["dtype"]))
                 if np.issubdtype(arr.dtype, np.floating):
                     arr = arr[np.isfinite(arr)]
                 vals, counts = np.unique(arr, return_counts=True)
@@ -432,23 +396,19 @@ def value_histogram(toa_df: DataFrame, bucket_scale: float = 1.0 / 64) -> DataFr
                 f32 = vals.astype(np.float32, copy=False)
                 k = len(vals)
                 cols["scene_id"].append(
-                    np.repeat(np.array([row.scene_id], dtype=object), k)
+                    np.repeat(np.array([row["scene_id"]], dtype=object), k)
                 )
-                cols["band"].append(np.full(k, row.band, dtype=np.int32))
+                cols["band"].append(np.full(k, row["band"], dtype=np.int32))
                 cols["bucket"].append(
                     np.floor(f32 * scale).astype(np.int32)
                 )
                 cols["value"].append(f32.astype(np.float64))
                 cols["n"].append(counts.astype(np.int64))
-            if not cols["scene_id"]:
-                yield pd.DataFrame(empty)
-                continue
-            yield pd.DataFrame(
-                {k: np.concatenate(v) for k, v in cols.items()}
-            )
+            if cols["scene_id"]:
+                yield {k: np.concatenate(v) for k, v in cols.items()}
 
     per_value = (
-        toa_df.mapInPandas(run, _HIST_PARTIAL_SCHEMA)
+        map_arrow(toa_df, run, _HIST_PARTIAL_SCHEMA)
         .groupBy("scene_id", "band", "bucket", "value")
         .agg(F.sum("n").alias("n"))
     )
@@ -488,24 +448,30 @@ def mosaic_scene(tiles_like_df: DataFrame) -> DataFrame:
         ]
     )
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        scene_id, band = key
-        dtype = pdf["dtype"].iloc[0] if has_dtype else "uint16"
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_out = to_arrow_schema(out_schema)
+
+    def assemble(key, tbl):
+        import pyarrow as pa
+
+        scene_id, band = (k.as_py() for k in key)
+        tiles = list(binary_rows(tbl))
+        dtype = tiles[0][0]["dtype"] if has_dtype else "uint16"
         np_dtype = np.dtype(dtype)
-        pdf = pdf.sort_values(["tile_row", "tile_col"])
         # the grid is anchored at the group's own min indices (a
         # subsetted input need not start at tile 0,0), and a HOLE in
         # the grid is a hard error — np.block on a None cell would
         # otherwise die with an opaque executor TypeError
-        r0 = int(pdf["tile_row"].min())
-        c0 = int(pdf["tile_col"].min())
-        n_rows = int(pdf["tile_row"].max()) - r0 + 1
-        n_cols = int(pdf["tile_col"].max()) - c0 + 1
+        r0 = min(row["tile_row"] for row, _ in tiles)
+        c0 = min(row["tile_col"] for row, _ in tiles)
+        n_rows = max(row["tile_row"] for row, _ in tiles) - r0 + 1
+        n_cols = max(row["tile_col"] for row, _ in tiles) - c0 + 1
         grid = [[None] * n_cols for _ in range(n_rows)]
-        for row in pdf.itertuples(index=False):
-            grid[int(row.tile_row) - r0][int(row.tile_col) - c0] = np.frombuffer(
-                row.pixels, dtype=np_dtype
-            ).reshape(row.height, row.width)
+        for row, buf in tiles:
+            grid[row["tile_row"] - r0][row["tile_col"] - c0] = np.frombuffer(
+                buf, dtype=np_dtype
+            ).reshape(row["height"], row["width"])
         missing = [
             (r + r0, c + c0)
             for r in range(n_rows)
@@ -518,19 +484,24 @@ def mosaic_scene(tiles_like_df: DataFrame) -> DataFrame:
                 "cannot assemble a contiguous raster" % (scene_id, band, missing[:8])
             )
         full = np.block(grid)
-        return pd.DataFrame(
+
+        def bound(name, agg):
+            return agg(row[name] for row, _ in tiles) if has_bounds else None
+
+        return pa.Table.from_pydict(
             {
                 "scene_id": [scene_id],
                 "band": [band],
                 "height": [full.shape[0]],
                 "width": [full.shape[1]],
                 "dtype": [dtype],
-                "bounds_w": [float(pdf["bounds_w"].min()) if has_bounds else None],
-                "bounds_s": [float(pdf["bounds_s"].min()) if has_bounds else None],
-                "bounds_e": [float(pdf["bounds_e"].max()) if has_bounds else None],
-                "bounds_n": [float(pdf["bounds_n"].max()) if has_bounds else None],
+                "bounds_w": [bound("bounds_w", min)],
+                "bounds_s": [bound("bounds_s", min)],
+                "bounds_e": [bound("bounds_e", max)],
+                "bounds_n": [bound("bounds_n", max)],
                 "pixels": [full.tobytes()],
-            }
+            },
+            schema=pa_out,
         )
 
-    return tiles_like_df.groupBy("scene_id", "band").applyInPandas(assemble, out_schema)
+    return tiles_like_df.groupBy("scene_id", "band").applyInArrow(assemble, out_schema)

@@ -17,22 +17,21 @@ Scale design:
   pair is kept only in the ONE cell containing the SW corner of the
   bbox intersection — that cell is in both covers by construction, so
   each pair survives exactly once, join-local.
-* The pixel kernel is an Arrow-batched mapInPandas that emits
-  per-(tile, zone) PARTIALS (count, sum, min, max) — the map-side
-  combine. The final groupBy merges a few doubles per pair; the pixel
-  binary never crosses a shuffle.
+* The pixel kernel runs over Arrow record batches (``map_arrow``,
+  zero-copy pixel buffers) and emits per-(tile, zone) PARTIALS
+  (count, sum, min, max) — the map-side combine. The final groupBy
+  merges a few doubles per pair; the pixel binary never crosses a
+  shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rio_toa_spark.operators import binary_rows, map_arrow
 from rio_toa_spark.operators.spatial_join import (
     DEFAULT_LEVEL,
     _explode_cover,
@@ -92,25 +91,24 @@ def dn_histogram(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches):
+        for batch in batches:
             sid, band, bucket, n = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.pixels, dtype=np.uint16)
+            for row, buf in binary_rows(batch):
+                arr = np.frombuffer(buf, dtype=np.uint16)
+                # a null nodata keeps every pixel (`!= None` is all-True)
                 if drop_nodata:
-                    arr = arr[arr != row.nodata]
+                    arr = arr[arr != row["nodata"]]
                 counts = np.bincount(arr >> shift, minlength=n_buckets)
                 nz = np.nonzero(counts)[0]
-                sid.extend([row.scene_id] * len(nz))
-                band.extend([row.band] * len(nz))
+                sid.extend([row["scene_id"]] * len(nz))
+                band.extend([row["band"]] * len(nz))
                 bucket.extend(nz.tolist())
                 n.extend(counts[nz].tolist())
-            yield pd.DataFrame(
-                {"scene_id": sid, "band": band, "bucket": bucket, "n": n}
-            )
+            yield {"scene_id": sid, "band": band, "bucket": bucket, "n": n}
 
     return (
-        tiles_df.mapInPandas(run, schema)
+        map_arrow(tiles_df, run, schema)
         .groupBy("scene_id", "band", "bucket")
         .agg(F.sum("n").alias("n"))
     )
@@ -156,39 +154,18 @@ def zonal_stats(
     joined = tcover.join(F.broadcast(zcover), "cell").where(overlap & canonical)
 
     out_schema = T.StructType([zones_df.schema[zone_key]] + _PARTIAL_FIELDS)
-    has_dtype = "dtype" in tiles_df.columns
-    has_nodata = "nodata" in tiles_df.columns
 
-    # mapInArrow, not mapInPandas: the pandas conversion materializes
-    # every 0.5 MB pixel cell as a python bytes copy before the kernel
-    # can wrap it; Arrow record batches hand the kernel zero-copy
-    # buffer slices instead (same pattern as the TOA strip kernels).
-    # Arithmetic is untouched — identical numpy ops over identical
-    # buffers — so partials stay bitwise-equal.
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    pa_out = to_arrow_schema(out_schema)
-
+    # Nodata pixels drop only when the input has a non-null ``nodata``;
+    # a ``dtype`` column (TOA output rows) overrides the raw uint16
+    # payload type.
     def run(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            cols = {name: batch.column(name) for name in batch.schema.names}
-            zcol = cols[zone_key]
             zid, band, cnt, tot, mn, mx = [], [], [], [], [], []
-            for i in range(batch.num_rows):
-                height = int(cols["height"][i].as_py())
-                width = int(cols["width"][i].as_py())
-                np_dtype = (
-                    np.dtype(cols["dtype"][i].as_py()) if has_dtype else np.dtype(np.uint16)
-                )
-                arr = np.frombuffer(
-                    cols["pixels"][i].as_buffer(), dtype=np_dtype
-                ).reshape(height, width)
-                bw = cols["bounds_w"][i].as_py()
-                be = cols["bounds_e"][i].as_py()
-                bs = cols["bounds_s"][i].as_py()
-                bn = cols["bounds_n"][i].as_py()
+            for row, buf in binary_rows(batch):
+                height, width = row["height"], row["width"]
+                arr = np.frombuffer(buf, dtype=row.get("dtype", "uint16")).reshape(height, width)
+                bw, be = row["bounds_w"], row["bounds_e"]
+                bs, bn = row["bounds_s"], row["bounds_n"]
                 dx = (be - bw) / width
                 dy = (bn - bs) / height
                 # pixel-center coordinates; raster row 0 is the north edge
@@ -198,39 +175,33 @@ def zonal_stats(
                 # contiguous block (cx ascending, cy descending):
                 # compute slice bounds and take a VIEW, not the
                 # boolean-mask copy np.ix_ would make
-                x0 = np.searchsorted(cx, cols["fw"][i].as_py(), side="left")
-                x1 = np.searchsorted(cx, cols["fe"][i].as_py(), side="left")
+                x0 = np.searchsorted(cx, row["fw"], side="left")
+                x1 = np.searchsorted(cx, row["fe"], side="left")
                 asc = -cy  # ascending; cy < fn <=> -cy > -fn
-                y0 = np.searchsorted(asc, -cols["fn"][i].as_py(), side="right")
-                y1 = np.searchsorted(asc, -cols["fs"][i].as_py(), side="right")
+                y0 = np.searchsorted(asc, -row["fn"], side="right")
+                y1 = np.searchsorted(asc, -row["fs"], side="right")
                 sub = arr[y0:y1, x0:x1]
-                nodata_v = cols["nodata"][i].as_py() if has_nodata else None
-                # a null nodata keeps every pixel — same outcome as the
-                # old pandas path, where a NaN-ified nodata made the
-                # `!=` mask all-True
+                nodata_v = row.get("nodata")
                 vals = sub[sub != nodata_v] if nodata_v is not None else sub.ravel()
-                zid.append(zcol[i].as_py())
-                band.append(cols["band"][i].as_py())
+                zid.append(row[zone_key])
+                band.append(row["band"])
                 cnt.append(int(vals.size))
                 tot.append(float(vals.sum(dtype=np.float64)) if vals.size else 0.0)
                 mn.append(float(vals.min()) if vals.size else float("inf"))
                 mx.append(float(vals.max()) if vals.size else float("-inf"))
-            yield pa.RecordBatch.from_pydict(
-                {
-                    zone_key: zid,
-                    "band": band,
-                    "px_count": cnt,
-                    "px_sum": tot,
-                    "px_min": mn,
-                    "px_max": mx,
-                },
-                schema=pa_out,
-            )
+            yield {
+                zone_key: zid,
+                "band": band,
+                "px_count": cnt,
+                "px_sum": tot,
+                "px_min": mn,
+                "px_max": mx,
+            }
 
     extra_zone_cols = [
         c for c in zones_df.columns if c not in (zone_key, "fw", "fs", "fe", "fn")
     ]
-    partials = joined.drop("cell", *extra_zone_cols).mapInArrow(run, out_schema)
+    partials = map_arrow(joined.drop("cell", *extra_zone_cols), run, out_schema)
     return (
         partials.groupBy(zone_key, "band")
         .agg(

@@ -5,9 +5,11 @@ on a single host:
 
 * AQE on (runtime coalescing + skew-join splitting backstops the
   explicit salting done by the spatial layer).
-* Arrow execution for every pandas-UDF / mapInPandas boundary. Batch
-  size is left to Spark's own two defaults, 10,000 records and 64 MiB
-  (``spark.sql.execution.arrow.maxBytesPerBatch``) per batch: the byte
+* Arrow execution for every Python boundary (the ``mapInArrow``
+  kernels of ``operators.map_arrow`` and the few remaining pandas
+  UDFs). Batch size is left to Spark's own two defaults, 10,000
+  records and 64 MiB (``spark.sql.execution.arrow.maxBytesPerBatch``)
+  per batch: the byte
   bound binds first on half-MiB binary tile rows, the record bound on
   small page/embedding rows. This replaces the reference's riomucho
   window streaming (rio_toa/radiance.py:122-128);

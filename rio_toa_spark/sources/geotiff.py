@@ -26,6 +26,9 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from rio_toa_spark.operators import map_arrow
 
 TILE_SCHEMA = (
     "scene_id string, band int, tile_row int, tile_col int, "
@@ -96,21 +99,17 @@ def geotiff_to_tiles(
     # 2-file straggler task at N=10).
     spec_df = spec_df.repartitionByRange(max(len(specs), 1), "idx").drop("idx")
 
-    def read_windows(batches):
-        import numpy as np  # noqa: F401
-        import pandas as pd
+    tile_schema = StructType.fromDDL(TILE_SCHEMA)
 
+    def read_windows(batches):
         import rasterio
         from rasterio.warp import transform_bounds
         from rasterio.windows import Window
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "scene_id", "band", "tile_row", "tile_col", "width", "height",
-                "nodata", "bounds_w", "bounds_s", "bounds_e", "bounds_n", "pixels",
-            )}
-            for spec in pdf.itertuples(index=False):
-                with rasterio.open(spec.path) as src:
+        for batch in batches:
+            rows = {k: [] for k in tile_schema.names}
+            for spec in batch.to_pylist():
+                with rasterio.open(spec["path"]) as src:
                     nodata = int(src.nodata) if src.nodata is not None else 0
                     for tr, r0 in enumerate(range(0, src.height, tile_size)):
                         for tc, c0 in enumerate(range(0, src.width, tile_size)):
@@ -124,8 +123,8 @@ def geotiff_to_tiles(
                                 src.crs, "EPSG:4326",
                                 *rasterio.windows.bounds(win, src.transform),
                             )
-                            rows["scene_id"].append(spec.scene_id)
-                            rows["band"].append(spec.band)
+                            rows["scene_id"].append(spec["scene_id"])
+                            rows["band"].append(spec["band"])
                             rows["tile_row"].append(tr)
                             rows["tile_col"].append(tc)
                             rows["width"].append(int(win.width))
@@ -136,9 +135,9 @@ def geotiff_to_tiles(
                             rows["bounds_e"].append(wgs[2])
                             rows["bounds_n"].append(wgs[3])
                             rows["pixels"].append(arr.tobytes())
-            yield pd.DataFrame(rows)
+            yield rows
 
-    return spec_df.mapInPandas(read_windows, TILE_SCHEMA)
+    return map_arrow(spec_df, read_windows, tile_schema)
 
 
 def ingest_cli(spark: SparkSession, src_paths: list[str], dst: str, tile_size: int = 512) -> None:

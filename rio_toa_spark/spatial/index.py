@@ -6,7 +6,7 @@ max lat] at rio_toa/toa_utils.py:111-118), so the exact refine step of
 the spatial join is rectangle containment. This index plays the role a
 broadcast STRtree would play for general polygons: built once on the
 driver from the (small) footprint side, broadcast to executors, and
-queried vectorized per Arrow batch inside mapInPandas.
+queried vectorized per Arrow batch inside a ``map_arrow`` kernel.
 
 The structure is a sort-tile-recursive-flavored packing without the
 tree: rectangles sorted by west edge, with a running max of east edges

@@ -176,7 +176,7 @@ def stream_media_features(
     """Incremental multimodal curation: media-payload drops (new crawl
     shards landing) stream through the UNCHANGED batch decode ->
     resize -> features operators via foreachBatch — row-local
-    mapInPandas chains, so a micro-batch is exactly the batch plan on
+    Arrow kernel chains, so a micro-batch is exactly the batch plan on
     fewer rows, decode_status provenance included. Same idempotence
     scheme as stream_toa_radiance: each micro-batch OVERWRITES its own
     batch_id=<id> directory, so an at-least-once replay after a crash

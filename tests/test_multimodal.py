@@ -3,6 +3,7 @@ decodes with labeled stub fallback, resize, features, frame sampling —
 plus the PNG codec's palette / sub-8-bit / Adam7 / 16-bit fixtures."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,7 +138,6 @@ def test_decode_image_output_bounded_by_arrow_bytes(spark, monkeypatch):
     at spark.sql.execution.arrow.maxBytesPerBatch. Lowering that conf
     splits one input batch into frames of at most three decoded images
     and changes no output row."""
-    import pandas as pd
     import pyspark.sql.classic.dataframe as df_mod
 
     from rio_toa_spark.functions.png import encode_png
@@ -151,13 +151,13 @@ def test_decode_image_output_bounded_by_arrow_bytes(spark, monkeypatch):
     default = mm.decode_image(df).collect()
 
     kernels = []
-    orig = df_mod.DataFrame.mapInPandas
+    orig = df_mod.DataFrame.mapInArrow
 
     def spy(self, fn, schema, *args, **kwargs):
         kernels.append(fn)
         return orig(self, fn, schema, *args, **kwargs)
 
-    monkeypatch.setattr(df_mod.DataFrame, "mapInPandas", spy)
+    monkeypatch.setattr(df_mod.DataFrame, "mapInArrow", spy)
     conf = "spark.sql.execution.arrow.maxBytesPerBatch"
     old = spark.conf.get(conf)
     spark.conf.set(conf, str(3 * 16 * 16 * 3))
@@ -168,9 +168,13 @@ def test_decode_image_output_bounded_by_arrow_bytes(spark, monkeypatch):
     assert lowered == default
 
     # the kernel, run on one 40-row batch in this process
-    frames = list(kernels[0](iter([pd.DataFrame(rows, columns=["media_id", "payload"])])))
-    assert [len(f) for f in frames] == [3] * 13 + [1]
-    assert pd.concat(frames, ignore_index=True)["media_id"].tolist() == list(range(40))
+    batch = pa.RecordBatch.from_pydict(
+        {"media_id": [k for k, _ in rows], "payload": [p for _, p in rows]},
+        schema=pa.schema([("media_id", pa.int32()), ("payload", pa.binary())]),
+    )
+    frames = list(kernels[0](iter([batch])))
+    assert [f.num_rows for f in frames] == [3] * 13 + [1]
+    assert pa.Table.from_batches(frames).column("media_id").to_pylist() == list(range(40))
 
 
 def test_decode_status_provenance(spark):
@@ -220,7 +224,7 @@ def test_decode_image_corrupt_jpeg_falls_back(spark):
     # payloads that merely START with the JPEG signature must fall
     # through to the deterministic stub whatever parse error the codec
     # hits (KeyError/IndexError/struct.error, not just ValueError) —
-    # one bad payload must never kill the mapInPandas batch
+    # one bad payload must never kill the Arrow batch
     payloads = [
         b"\xff\xd8\xff" + bytes(range(64)),
         b"\xff\xd8\xff\xe0\x00",

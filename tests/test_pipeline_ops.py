@@ -154,6 +154,17 @@ def test_cosine_topk_matches_numpy(spark, embs):
         assert got == expected
 
 
+def test_ragged_embeddings_raise(spark):
+    """Row lengths come from the list offsets: a ragged column raises
+    instead of being re-cut into equal rows ([[1], [2, 3, 4]] has 4
+    values, which would also reshape to 2 x 2)."""
+    df = spark.createDataFrame(
+        [(1, [1.0]), (2, [2.0, 3.0, 4.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        similarity._vectors_to_matrix(df, "embedding")
+
+
 def test_ivf_recall_reasonable(spark, embs):
     corpus = embs.limit(300).cache()
     q_rows = corpus.limit(5).collect()

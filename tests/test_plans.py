@@ -11,7 +11,9 @@ These are regression guards: a future edit that silently breaks one of
 them (e.g. a join that stops broadcasting) fails here, not at 100 TB.
 """
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rio_toa_spark.operators import spatial_join as sj
 from rio_toa_spark.operators import toa
@@ -170,7 +172,7 @@ def test_value_histogram_partials_before_shuffle(spark, tiles_df, scenes_df):
 def test_media_pipelines_shuffle_free(spark):
     """The multimodal chains (decode -> resize -> features; decode ->
     audio features; container -> frame sampling) are pure row-local
-    mapInPandas stages: their physical plans must contain NO exchange
+    Arrow kernel stages: their physical plans must contain NO exchange
     of any kind — the property that lets the media path scale linearly
     with input splits at 100 TB (binary payloads never shuffle)."""
     from rio_toa_spark.operators import multimodal as mm
@@ -182,6 +184,69 @@ def test_media_pipelines_shuffle_free(spark):
     for chain in (img_chain, audio_chain, frames_chain):
         plan = _plan(chain)
         assert "Exchange" not in plan, plan
+
+
+def test_kernels_cross_into_python_as_arrow(spark, tiles_df, scenes_df, pages_df):
+    """Every operator kernel runs over mapInArrow (or applyInArrow):
+    no physical plan holds a pandas map or grouped-map node. The one
+    exception is the MinHash signature stage of ngram_jaccard_pairs,
+    which stays on mapInPandas."""
+    from rio_toa_spark.operators import dedup, similarity
+    from rio_toa_spark.operators import multimodal as mm
+    from rio_toa_spark.operators.zonal import dn_histogram, zonal_stats
+
+    pandas_nodes = ("MapInPandas", "FlatMapGroupsInPandas")
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = emb.limit(2).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    media = spark.createDataFrame([(1, b"\x00payload")], "media_id long, payload binary")
+    rad = toa.radiance_tiles(tiles_df, scenes_df, band=5)
+    zones = sj.scene_footprints(scenes_df).select(
+        F.col("scene_id").alias("zone_id"), "fw", "fs", "fe", "fn"
+    )
+    arrow_plans = {
+        "knn broadcast": sj.knn_join(pages_df, tiles_df, k=2),
+        "pip index": sj.pip_join(pages_df, sj.scene_footprints(scenes_df), strategy="index"),
+        "cosine_topk": similarity.cosine_topk(emb, queries, k=3),
+        "cosine_topk_ivf": similarity.cosine_topk_ivf(emb, queries, k=3, n_centroids=2, n_probe=1),
+        "image chain": mm.image_features(mm.resize_image(mm.decode_image(media))),
+        "audio chain": mm.audio_features(mm.decode_audio(media)),
+        "frames chain": mm.sample_video_frames(media, n_frames=2),
+        "tile_stats": toa.tile_stats(rad),
+        "value_histogram": toa.value_histogram(rad),
+        "dn_histogram": dn_histogram(tiles_df),
+        "zonal_stats": zonal_stats(tiles_df, zones),
+        "mosaic_scene": toa.mosaic_scene(tiles_df),
+    }
+    for name, df in arrow_plans.items():
+        plan = _plan(df)
+        assert "InArrow" in plan, (name, plan)
+        assert not any(n in plan for n in pandas_nodes), (name, plan)
+
+    docs = spark.createDataFrame(
+        [(i, "the quick brown fox %d jumps" % i) for i in range(8)], "doc_id long, text string"
+    )
+    plan = _plan(dedup.ngram_jaccard_pairs(docs))
+    assert plan.count("MapInPandas") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
+def test_map_arrow_cast_raises_on_overflow(spark):
+    """map_arrow casts each yielded dict to the Spark schema with a
+    checked cast: an int64 value that does not fit an IntegerType
+    column fails the job instead of wrapping."""
+    from rio_toa_spark.operators import map_arrow
+
+    def kernel(batches):
+        for b in batches:
+            yield {"x": b.column("id").to_numpy() + (1 << 40)}
+
+    with pytest.raises(Exception, match="ArrowInvalid"):
+        map_arrow(spark.range(3, numPartitions=1), kernel, T.StructType.fromDDL("x int")).collect()
+    ok = map_arrow(spark.range(3, numPartitions=1), kernel, T.StructType.fromDDL("x long"))
+    assert sorted(r.x for r in ok.collect()) == [(1 << 40) + i for i in range(3)]
 
 
 def _arrow_batch_shapes(df):

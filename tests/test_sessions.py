@@ -3,6 +3,7 @@ emits closed sessions with correct bounds/counts."""
 
 import datetime
 import os
+import time
 
 import duckdb
 import pyarrow as pa
@@ -86,7 +87,18 @@ def test_stream_sessionize_emits_closed_sessions(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # under ProcessingTimeTimeout the stateful operator asks for a
+    # no-data batch after every batch (the idle-timeout flush needs
+    # them), so an availableNow query never terminates on its own:
+    # wait for the data batch to commit, then stop the query
+    try:
+        deadline = time.monotonic() + 120
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
+            assert time.monotonic() < deadline, "no data batch committed in 120 s"
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert not q.isActive
 
     got = spark.read.parquet(out_dir).collect()
     # the first (closed) session must be emitted: 3 events over 10 min
