@@ -34,6 +34,11 @@ from rio_toa_spark.operators.textstats import portable_hash64
 MERSENNE31 = (1 << 31) - 1
 _MINHASH_A = 1103515245
 _MINHASH_B = 12345
+# 16 minhashes in 4 bands of 4 rows; the DuckDB twin
+# (__spark_entry__._MINHASH_LSH_SQL) hard-codes the same shape
+_MINHASH_HASHES = 16
+_LSH_BANDS = 4
+_LSH_ROWS_PER_BAND = 4
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -227,9 +232,6 @@ def _lsh_jaccard_fused(
     key: str,
     shingle_n: int,
     threshold: float,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """Single-pass MinHash-LSH near-dup pipeline: shingle-hash ->
     minhash -> band buckets (hash arrays carried along) -> within-
@@ -255,10 +257,8 @@ def _lsh_jaccard_fused(
     a JVM array_intersect + array_union hash-set build (25.4M
     candidates / ~21 s at bench sf1.0), while the kernel computes the
     same intersection counts with one factorize + 0/1-matrix matmul
-    per bucket and never materializes non-passing pairs. Identical
-    results: integer intersection counts are exact, |A∪B| =
-    |A|+|B|-|A∩B| for distinct arrays, and the float64 division
-    matches Spark's double division bit-for-bit."""
+    per bucket, whatever its size, and emits only passing pairs as
+    rows (exactness: see _bucket_jaccard_verify)."""
     from pyspark.sql import types as T
 
     # tokenize -> md5 token hash -> shingle combine -> distinct ->
@@ -282,7 +282,9 @@ def _lsh_jaccard_fused(
     # perfbench/tests/test_minhash_defect.py feeds it a pandas frame,
     # so it moves onto map_arrow together with that test
     banded = nt.mapInPandas(
-        _banded_signature_kernel(key, shingle_n, num_hashes, bands, rows_per_band),
+        _banded_signature_kernel(
+            key, shingle_n, _MINHASH_HASHES, _LSH_BANDS, _LSH_ROWS_PER_BAND
+        ),
         T.StructType(
             [
                 T.StructField(key, key_dt),
@@ -488,8 +490,7 @@ def _banded_signature_kernel(
             # little-endian int32 bytes: the payload crosses the band
             # shuffle as one binary cell instead of a nested int array
             # (smaller UnsafeRow, far cheaper Arrow->pandas on the
-            # bucket side), and byte-equality class dedup gets its key
-            # for free
+            # bucket side)
             shb = uval.astype("<i4").tobytes()
             ends = ucounts.cumsum() * 4
             sh_arrays = [
@@ -525,13 +526,15 @@ def _bucket_jaccard_verify(threshold: float):
     hashes), emit every member pair (a, b, jaccard) with a before b in
     bucket order and jaccard >= threshold.
 
-    Exactness: identical sets are collapsed to one representative
-    class first (byte-equality — conservative: only arrays with equal
-    element ORDER collapse, which is exactly the identical-text case),
-    so the intersection matmul runs over R distinct sets, not b
-    members; class-level jaccards are then fanned back out to member
-    pairs by pure index arithmetic. J(A,A) = |A|/|A| = 1.0 exactly in
-    both engines (0/0 -> NaN fails the threshold, also both engines).
+    Per bucket, whatever its size: factorize the bucket's shingle
+    hashes, build its 0/1 member x shingle matrix, and one float32
+    matmul gives every exact integer intersection count (exact below
+    2^24; set sizes are far smaller). |A∪B| = |A|+|B|-|A∩B| for
+    distinct arrays, and the float64 division matches Spark's
+    int->double cast + double divide bit-for-bit. J(A,A) = |A|/|A| =
+    1.0 exactly in both engines (0/0 -> NaN fails the threshold, also
+    both engines). A bucket of n members costs O(n^2) here; a bucket
+    of n identical docs emits n(n-1)/2 pairs whatever the kernel does.
 
     First-shared-band emission: a passing pair is emitted ONLY when no
     band before this row's band is also shared by both members (equal
@@ -545,7 +548,7 @@ def _bucket_jaccard_verify(threshold: float):
     import numpy as np
 
     # cached upper-triangle index pairs per bucket size (bucket sizes
-    # repeat heavily; np.triu_indices is ~40% of the lean path's cost)
+    # repeat heavily; np.triu_indices is ~40% of the kernel's cost)
     _triu_cache: dict = {}
 
     def _triu(b):
@@ -555,18 +558,15 @@ def _bucket_jaccard_verify(threshold: float):
             _triu_cache[b] = iu
         return iu
 
-    def _emit_bucket_lean(n, ss, thr, out_i, out_x, out_j):
-        """Fast path for ordinary buckets: no identical-set collapse
-        (measured: 99.8% of bench buckets have zero byte-identical
-        members, so the class machinery is pure per-bucket overhead),
-        one factorize + one matmul + one vectorized triu emission.
-        Arithmetic identical to the class path: exact integer
-        intersection counts, float64 division. Emits POSITIONS (i < j
-        in sorted bucket order); the caller maps them to keys."""
+    def _passing_pairs(ss):
+        """Positions (i < j in sorted bucket order) and jaccards of the
+        member pairs at or above the threshold. A function of its own
+        so the n x n temporaries are freed before the caller maps
+        positions to keys."""
+        n = len(ss)
         arrs = [np.frombuffer(s, np.int32) for s in ss]
         lens = np.fromiter((a.size for a in arrs), np.int64, n)
-        allv = np.concatenate(arrs)
-        uniq, inv = np.unique(allv, return_inverse=True)
+        uniq, inv = np.unique(np.concatenate(arrs), return_inverse=True)
         M = np.zeros((n, uniq.size), np.float32)
         M[np.repeat(np.arange(n), lens), inv] = 1.0
         inter = (M @ M.T).astype(np.float64)
@@ -574,11 +574,8 @@ def _bucket_jaccard_verify(threshold: float):
             jac = inter / (lens[:, None] + lens[None, :] - inter)
         iu, ju = _triu(n)
         jv = jac[iu, ju]
-        keep = jv >= thr  # NaN (0/0) compares False, like SQL NULL/NaN
-        if keep.any():
-            out_i.append(iu[keep])
-            out_x.append(ju[keep])
-            out_j.append(jv[keep])
+        keep = jv >= threshold  # NaN (0/0) compares False, like SQL NULL/NaN
+        return iu[keep], ju[keep], jv[keep]
 
     def _flat(col):
         """Flat member values of a (null-free) list column plus each
@@ -603,137 +600,27 @@ def _bucket_jaccard_verify(threshold: float):
                         "duplicate doc key %s in ngram_jaccard_pairs input: "
                         "the LSH path needs one row per key" % ks[1:][dup][0]
                     )
-                ss = ss_flat[ss_off[r] : ss_off[r + 1]]
-                idx_i: list = []
-                idx_x: list = []
-                jtmp: list = []
-                # big buckets go through the identical-set-collapse
-                # path (it bounds the matmul by R distinct sets — the
-                # degenerate giant-bucket case it exists for); small
-                # buckets take the lean path
-                if len(ks) <= 64:
-                    _emit_bucket_lean(len(ks), ss, threshold, idx_i, idx_x, jtmp)
-                else:
-                    _emit_bucket(len(ks), ss, threshold, idx_i, idx_x, jtmp)
-                if not idx_i:
+                ia, ib, jv = _passing_pairs(ss_flat[ss_off[r] : ss_off[r + 1]])
+                if not ia.size:
                     continue
-                hmat = None
                 if band_col[r]:
                     hmat = np.frombuffer(
                         b"".join(hs_flat[hs_off[r] : hs_off[r + 1]]), np.int64
                     ).reshape(len(ks), -1)[:, : band_col[r]]
-                # map positions to keys segment-by-segment (lean
-                # buckets emit exactly one segment; class buckets may
-                # emit many — per-segment mapping avoids a per-bucket
-                # concatenate copy of the full emission)
-                for s in range(len(idx_i)):
-                    ia, ib, jv = idx_i[s], idx_x[s], jtmp[s]
-                    if hmat is not None:
-                        keep = ~(hmat[ia] == hmat[ib]).any(axis=1)
-                        if not keep.all():
-                            ia, ib, jv = ia[keep], ib[keep], jv[keep]
-                            if not ia.size:
-                                continue
-                    out_a.append(ks[ia])
-                    out_b.append(ks[ib])
-                    out_j.append(jv)
+                    first = ~(hmat[ia] == hmat[ib]).any(axis=1)
+                    if not first.all():
+                        ia, ib, jv = ia[first], ib[first], jv[first]
+                        if not ia.size:
+                            continue
+                out_a.append(ks[ia])
+                out_b.append(ks[ib])
+                out_j.append(jv)
             if out_a:
                 yield {
                     "a": np.concatenate(out_a),
                     "b": np.concatenate(out_b),
                     "jaccard": np.concatenate(out_j),
                 }
-
-    def _emit_bucket(n, ss, thr, out_i, out_x, out_j):
-        # collapse byte-identical sets into classes; emits POSITIONS
-        # like the lean path (the caller maps them to keys)
-        class_of = {}
-        reps: list = []
-        cls_idx = np.empty(n, np.int64)
-        for i, s in enumerate(ss):
-            kb = bytes(s)  # packed <i4 bytes ARE the class key
-            c = class_of.get(kb)
-            if c is None:
-                c = len(reps)
-                class_of[kb] = c
-                reps.append(np.frombuffer(kb, np.int32).astype(np.int64))
-            cls_idx[i] = c
-        R = len(reps)
-        lens = np.array([r.size for r in reps], dtype=np.int64)
-        if R == 1:
-            inter = lens.reshape(1, 1).astype(np.float64)
-        else:
-            allv = np.concatenate(reps)
-            uniq, inv = np.unique(allv, return_inverse=True)
-            # 0/1 membership matrix; float32 matmul is exact for
-            # integer counts < 2^24 (set sizes are far smaller)
-            M = np.zeros((R, uniq.size), np.float32)
-            M[np.repeat(np.arange(R), lens), inv] = 1.0
-            inter = (M @ M.T).astype(np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            union = lens[:, None] + lens[None, :] - inter
-            jacm = inter / union  # float64 / float64 of exact ints ==
-            # Spark's int->double cast + double divide
-        passing = jacm >= thr  # NaN (0/0) compares False, like SQL NULL/NaN
-        # member positions per class, in sorted bucket order
-        order = np.argsort(cls_idx, kind="stable")
-        counts = np.bincount(cls_idx, minlength=R)
-        starts = np.concatenate(([0], np.cumsum(counts)))
-        members = [order[starts[c] : starts[c + 1]] for c in range(R)]
-        singles = counts == 1
-        # vectorized case: both classes singleton, p < q passing
-        if R > 1:
-            pp, qq = np.nonzero(np.triu(passing, 1) & np.outer(singles, singles))
-            if pp.size:
-                pos_single = np.full(R, -1, np.int64)
-                pos_single[singles] = np.array(
-                    [members[c][0] for c in np.nonzero(singles)[0]], np.int64
-                )
-                ai = pos_single[pp]
-                bi = pos_single[qq]
-                lo = np.minimum(ai, bi)
-                hi = np.maximum(ai, bi)
-                out_i.append(lo)
-                out_x.append(hi)
-                out_j.append(jacm[pp, qq])
-        # loop cases: intra-class pairs and cross pairs with a multi class
-        for p in range(R):
-            mp = members[p]
-            if counts[p] >= 2 and passing[p, p]:
-                iu, ju = np.triu_indices(counts[p], 1)
-                out_i.append(mp[iu])
-                out_x.append(mp[ju])
-                out_j.append(np.full(iu.size, jacm[p, p]))
-            if counts[p] == 1:
-                continue
-            for q in range(p + 1, R):
-                if not passing[p, q] or (counts[q] == 1 and counts[p] == 1):
-                    continue
-                mq = members[q]
-                gi = np.repeat(mp, counts[q])
-                gj = np.tile(mq, counts[p])
-                lo = np.minimum(gi, gj)
-                hi = np.maximum(gi, gj)
-                out_i.append(lo)
-                out_x.append(hi)
-                out_j.append(np.full(gi.size, jacm[p, q]))
-        # cross pairs where p is singleton but q is multi (skipped above
-        # by the `continue`): handle symmetrically
-        for p in range(R):
-            if counts[p] != 1:
-                continue
-            mp = members[p]
-            for q in range(p + 1, R):
-                if counts[q] == 1 or not passing[p, q]:
-                    continue
-                mq = members[q]
-                gi = np.repeat(mp, counts[q])
-                gj = mq
-                lo = np.minimum(gi, gj)
-                hi = np.maximum(gi, gj)
-                out_i.append(lo)
-                out_x.append(hi)
-                out_j.append(np.full(gj.size, jacm[p, q]))
 
     return run
 
@@ -787,8 +674,12 @@ def simhash_near_dups(
     condition, so the correctness gate checks the implemented
     semantics, not full-radius recall.
 
-    Single-pass groupBy(bucket) + within-bucket expansion
-    (_bucket_pairs) — one shuffle, no cache, no signature recompute."""
+    groupBy(bucket) + within-bucket expansion (_bucket_pairs): no
+    cache, no signature recompute. The plan holds two hash exchanges
+    (the bucket groupBy, and the trailing distinct() — a pair sharing
+    several bands is a candidate in each), plus round-robin
+    repartitions: _bucket_pairs' parallelism pin always, and
+    _parallelize's on an under-split input (both at sf0.001)."""
     n_bands = 4
     band_width = bits // n_bands
     sig_df = _parallelize(df).select(
@@ -902,8 +793,6 @@ def duplicate_clusters(
     a: str = "a",
     b: str = "b",
     max_iter: int = 25,
-    on_max_iter: str = "raise",
-    storage_level=None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph:
     (node, cluster_id) with cluster_id = the minimum node id reachable
@@ -933,34 +822,21 @@ def duplicate_clusters(
     only decrease from each node's own id, so the uniform value is the
     component minimum.
 
-    ``storage_level`` sets the StorageLevel of each round's
-    localCheckpoint (default: Spark's MEMORY_AND_DISK) — pass e.g.
-    StorageLevel.DISK_ONLY when executor memory is contended at scale;
-    the checkpoint blocks are executor-local either way (lineage
-    truncation, not fault tolerance — a lost executor fails the job,
-    which resumable callers retry).
-
-    ``on_max_iter``: 'raise' (default) refuses to return a clustering
-    that may still be merging; 'partial' returns the current labels —
-    a SAFE partial result for dedup (labels can only UNDER-merge: two
-    nodes of one component may still hold different labels, so a
-    downstream keep-one-per-cluster drops fewer rows, never a wrong
-    row), for operators who prefer progress over an exception.
+    The checkpoint blocks are executor-local (lineage truncation, not
+    fault tolerance — a lost executor fails the job, which resumable
+    callers retry).
     """
-    if on_max_iter not in ("raise", "partial"):
-        raise ValueError("on_max_iter must be 'raise' or 'partial', got %r" % on_max_iter)
-    ckpt = {"storageLevel": storage_level} if storage_level is not None else {}
     edges = pairs_df.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     edges = (
         edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False, **ckpt)
+        .localCheckpoint(eager=False)
     )
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False, **ckpt)
+        .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -994,19 +870,10 @@ def duplicate_clusters(
                 obs, F.sum((F.col("new_label") < F.col("label")).cast("long")).alias("changed")
             )
             .select("node", F.col("new_label").alias("label"))
-            .localCheckpoint(eager=True, **ckpt)  # materializes -> obs is filled
+            .localCheckpoint(eager=True)  # materializes -> obs is filled
         )
         if obs.get["changed"] == 0:
             return labels
-    if on_max_iter == "partial":
-        import warnings
-
-        warnings.warn(
-            "duplicate_clusters: not converged after %d rounds; returning the "
-            "partial (under-merged, never wrong-merged) labels" % max_iter,
-            stacklevel=2,
-        )
-        return labels
     raise ValueError(
         "duplicate_clusters did not converge in %d rounds — component "
         "diameter exceeds the cap; raise max_iter" % max_iter

@@ -89,33 +89,6 @@ def test_pointer_doubling_converges_logarithmically(spark):
     assert set(got.values()) == {0} and len(got) == 41
 
 
-def test_clusters_partial_escape_hatch(spark):
-    # a 7-node path cannot converge in 1 round; on_max_iter='partial'
-    # must return current labels (under-merged only, never a wrong
-    # merge) with a warning instead of raising
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(6)], "a long, b long")
-    with pytest.warns(UserWarning, match="not converged"):
-        got = duplicate_clusters(pairs, max_iter=1, on_max_iter="partial")
-        labels = {r.node: r.label for r in got.collect()}
-    nodes = set(labels)
-    assert nodes == set(range(7))
-    # labels only ever take node-id values and never exceed the node
-    assert all(lbl in nodes and lbl <= n for n, lbl in labels.items())
-    with pytest.raises(ValueError, match="on_max_iter"):
-        duplicate_clusters(pairs, on_max_iter="bogus")
-
-
-def test_clusters_storage_level_knob(spark):
-    from pyspark import StorageLevel
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "a long, b long")
-    got = {
-        r.node: r.label
-        for r in duplicate_clusters(pairs, storage_level=StorageLevel.DISK_ONLY).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
 def test_pointer_doubling_contract_at_adversarial_diameter(spark):
     # scale guard for the O(log diameter) contract: a 4096-node chain
     # (diameter 4095 — the worst case for label propagation; real

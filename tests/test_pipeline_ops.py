@@ -198,9 +198,8 @@ def test_embedding_near_dups_planted(spark, embs):
 def test_lsh_identical_class_buckets_exact_count(spark, docs):
     """A giant exact-duplicate class collects into one bucket row per
     band. Four identical-text classes of 70 members each give buckets
-    above 64 members, which the verify kernel runs through its
-    identical-set-collapse path: every C(70,2) pair of each class comes
-    out exactly once, at jaccard 1.0."""
+    of at least 70 members: every C(70,2) pair of each class comes out
+    exactly once, at jaccard 1.0."""
     base = docs.limit(4)
     clones = (
         base.crossJoin(spark.range(70).withColumnRenamed("id", "clone"))
@@ -220,14 +219,24 @@ def test_lsh_first_band_dedup_equivalent(spark, docs):
     shingle-hash set; every pair sharing a bucket whose set Jaccard is
     >= 0.5 must come out, with the identical jaccard, and the stream
     must already be duplicate-free (the invariant that lets the path
-    skip distinct())."""
+    skip distinct()). One doc cloned 70 times plus 70 near-clones of it
+    put buckets above 64 members under the same pair-for-pair check."""
     import pandas as pd
 
+    def tail(df):
+        return df.withColumn("text", F.concat(F.col("text"), F.lit(" tail")))
+
     base = docs.limit(40)
-    dups = base.withColumn("doc_id", F.col("doc_id") + 100000).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" tail"))
+    dups = tail(base.withColumn("doc_id", F.col("doc_id") + 100000))
+    k = base.agg(F.min("doc_id")).first()[0]
+    clones = (
+        base.where(F.col("doc_id") == k)
+        .crossJoin(spark.range(1, 71).withColumnRenamed("id", "c"))
+        .withColumn("doc_id", F.col("doc_id") + 200000 + F.col("c"))
+        .drop("c")
     )
-    corpus = base.unionByName(dups)
+    near = tail(clones.withColumn("doc_id", F.col("doc_id") + 100000))
+    corpus = base.unionByName(dups).unionByName(clones).unionByName(near)
     fused = dedup.ngram_jaccard_pairs(corpus, threshold=0.5)
     got = sorted((r.a, r.b, r.jaccard) for r in fused.collect())
 
@@ -253,6 +262,7 @@ def test_lsh_first_band_dedup_equivalent(spark, docs):
                 jac = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
                 if jac >= 0.5:
                     ref.add((a, b, jac))
+    assert max(len(ks) for ks in members.values()) > 64
     assert got == sorted(ref)
     assert got, "planted near-dups must yield pairs"
     assert len(got) == len({(a, b) for a, b, _ in got})
