@@ -22,4 +22,44 @@ Everything is DataFrame-first: Catalyst plans the relational shape
 through Arrow batches.
 """
 
+import functools
+import os
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def _pin_spark_archives() -> None:
+    """Stop every Python task from re-reading Spark's own zips and jar.
+
+    PySpark ends each task's setup, reused workers included, with
+    ``importlib.invalidate_caches()`` (``pyspark.worker_util
+    .setup_spark_files``). On CPython 3.11 ``zipimporter.invalidate_caches``
+    re-reads the archive's whole central directory eagerly, and a worker
+    holds zip importers over ``pyspark.zip``, the py4j zip and the
+    spark-core jar (5,359 entries): ~230 ms per task in a reused
+    worker, 0.7 ms with this guard.
+
+    Archives whose real path lies under the real ``$SPARK_HOME`` cannot
+    change during a job, so their re-read is skipped; every other
+    archive, user ``--py-files`` zips included, keeps the stock
+    behaviour. A no-op when ``SPARK_HOME`` is unset; installing twice
+    wraps once. Runs on import, so a worker has it from the first
+    engine kernel it unpickles.
+    """
+    spark_home = os.environ.get("SPARK_HOME")
+    stock = zipimport.zipimporter.invalidate_caches
+    if not spark_home or hasattr(stock, "spark_root"):
+        return
+    root = os.path.join(os.path.realpath(spark_home), "")
+
+    @functools.wraps(stock)
+    def invalidate_caches(self):
+        if not os.path.realpath(self.archive).startswith(root):
+            stock(self)
+
+    invalidate_caches.spark_root = root
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_pin_spark_archives()

@@ -150,11 +150,13 @@ def _bucket_pairs(
     families: groupBy(group_cols) -> sorted collect_list -> all
     within-bucket (a, b, payload_a, payload_b) pairs with a < b.
 
-    One shuffle; the signature/payload pipeline feeding ``banded`` runs
-    exactly once (no self-join, no cache). The explicit repartition
-    pins parallelism for the quadratic expansion stage — AQE's
-    size-based coalescing sees tiny bytes and would serialize the
-    work-heavy stage to ~1 task (measured 4x end-to-end regression).
+    Two exchanges: the bucket ``Exchange hashpartitioning`` of the
+    groupBy, then a ``RoundRobinPartitioning`` repartition of the
+    bucket rows. The signature/payload pipeline feeding ``banded`` runs
+    exactly once (no self-join, no cache). The repartition pins
+    parallelism for the quadratic expansion stage — AQE's size-based
+    coalescing sees tiny bytes and would serialize the work-heavy stage
+    to ~1 task (measured 4x end-to-end regression).
     """
     spark = banded.sparkSession
     item = F.struct(F.col(key).alias("a"), F.col(payload).alias("s"))

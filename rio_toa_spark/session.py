@@ -14,8 +14,10 @@ on a single host:
   small page/embedding rows. This replaces the reference's riomucho
   window streaming (rio_toa/radiance.py:122-128);
   ``tests/test_plans.py`` pins both bounds.
-* shuffle partition count sized by the caller (cores on local mode,
-  2-3x total cores on a cluster).
+* shuffle partition count: ``shuffle_partitions``, else
+  ``$SPARK_GRAFT_SHUFFLE``, else ``DEFAULT_SHUFFLE_PARTITIONS`` (32,
+  whatever the core count; AQE coalesces after a shuffle). Sizing it
+  from the cores and the per-task Python cost is ROADMAP #1.
 """
 
 from __future__ import annotations
