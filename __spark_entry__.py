@@ -1157,8 +1157,9 @@ FROM customer WHERE c_name LIKE '%5%'
 
 
 def _q_sessionize(spark, sf_dir):
-    # gap-based sessionization over the events stream shape (window
-    # lag + running sum; streaming twin in operators/sessions.py)
+    # gap-based sessionization over the events table (window lag +
+    # running sum; DuckDB twin SESSIONIZE_ORACLE_SQL in
+    # operators/sessions.py)
     from rio_toa_spark.operators.sessions import sessionize
 
     return sessionize(_t(spark, sf_dir, "events"), gap_minutes=30)

@@ -6,6 +6,8 @@ lookup :19-47, bounds :111-118). Here the same grammar is parsed by a
 vectorized pandas UDF over a ``mtl_txt`` string column, emitted as a
 JSON string, and lifted to a typed struct with ``from_json`` — so MTL
 ingestion is a distributed columnar operation, not a driver loop.
+Key lookup and corner bounds are columnar too: ``mtl_band_value``
+(band-suffix map access) and ``spatial_join.scene_footprints``.
 
 Value typing matches the reference's cast ladder int → float →
 quote-stripped string (rio_toa/toa_utils.py:91-99).
@@ -71,28 +73,6 @@ def parse_mtl_txt(mtl_text: str) -> dict:
     while len(stack) > 1:
         stack[-2]["_UNTERMINATED"] = stack.pop()
     return stack[0]
-
-
-def mtl_key(mtl: dict, keys, band=None):
-    """Walk ``mtl`` down a key path; an int ``band`` is appended to the
-    final key (e.g. RADIANCE_MULT_BAND_ + 5). Reference
-    rio_toa/toa_utils.py:19-47."""
-    keys = list(keys)
-    if isinstance(band, int):
-        keys[-1] = "%s%s" % (keys[-1], band)
-    node = mtl
-    for key in keys:
-        node = node[key]
-    return node
-
-
-def bounds_from_metadata(product_metadata: dict) -> list:
-    """[min lng, min lat, max lng, max lat] over the four CORNER_*
-    products. Reference rio_toa/toa_utils.py:111-118."""
-    corners = ["LL", "LR", "UR", "UL"]
-    lats = [product_metadata["CORNER_%s_LAT_PRODUCT" % c] for c in corners]
-    lngs = [product_metadata["CORNER_%s_LON_PRODUCT" % c] for c in corners]
-    return [min(lngs), min(lats), max(lngs), max(lats)]
 
 
 @pandas_udf(T.StringType())

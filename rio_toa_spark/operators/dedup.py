@@ -145,10 +145,19 @@ def _bucket_pairs(
     payload: str,
     payload_a: str,
     payload_b: str,
+    op: str,
 ) -> DataFrame:
     """Candidate-pair expansion for the simhash and embedding LSH
     families: groupBy(group_cols) -> sorted collect_list -> all
-    within-bucket (a, b, payload_a, payload_b) pairs with a < b.
+    within-bucket (group_cols..., a, b, payload_a, payload_b) pairs
+    with a < b.
+
+    Precondition: ``key`` is unique per row. A key repeated inside a
+    bucket sorts next to itself and pairs with itself; such a pair
+    raises ``duplicate key K in <op> input``. The check is a filter
+    ahead of the caller's verify, so it sees every candidate pair, and
+    a consumer that selects some columns or only counts rows cannot
+    prune it away.
 
     Two exchanges: the bucket ``Exchange hashpartitioning`` of the
     groupBy, then a ``RoundRobinPartitioning`` repartition of the
@@ -182,8 +191,14 @@ def _bucket_pairs(
             ),
         )
     )
-    return buckets.select(F.explode(pair_structs).alias("p")).select(
-        "p.a", "p.b", "p.%s" % payload_a, "p.%s" % payload_b
+    a = F.col("p.a")
+    dup = F.raise_error(
+        F.concat(F.lit("duplicate key "), a.cast("string"), F.lit(" in %s input" % op))
+    )
+    return (
+        buckets.select(*group_cols, F.explode(pair_structs).alias("p"))
+        .where(F.when(a == F.col("p.b"), dup).otherwise(F.lit(True)))
+        .select(*group_cols, "p.a", "p.b", "p.%s" % payload_a, "p.%s" % payload_b)
     )
 
 
@@ -677,13 +692,22 @@ def simhash_near_dups(
     semantics, not full-radius recall.
 
     groupBy(bucket) + within-bucket expansion (_bucket_pairs): no
-    cache, no signature recompute. The plan holds two hash exchanges
-    (the bucket groupBy, and the trailing distinct() — a pair sharing
-    several bands is a candidate in each), plus round-robin
-    repartitions: _bucket_pairs' parallelism pin always, and
-    _parallelize's on an under-split input (both at sf0.001)."""
+    cache, no signature recompute. A pair sharing several bands is a
+    candidate in each; it is kept only in the first byte-band its two
+    signatures share, so each pair is emitted once without a
+    distinct(). The plan holds one hash exchange (the bucket groupBy)
+    plus round-robin repartitions: _bucket_pairs' parallelism pin
+    always, and _parallelize's on an under-split input (both at
+    sf0.001).
+
+    Precondition: ``key`` is unique per row; a key repeated within a
+    bucket raises (see _bucket_pairs)."""
     n_bands = 4
     band_width = bits // n_bands
+
+    def band_bits(c: Column, b: int) -> Column:
+        return F.shiftright(c, b * band_width).bitwiseAND(F.lit((1 << band_width) - 1))
+
     sig_df = _parallelize(df).select(
         F.col(key), simhash(F.col(text), bits, shingle_n=shingle_n).alias("sig")
     )
@@ -695,22 +719,25 @@ def simhash_near_dups(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), b * band_width).bitwiseAND(F.lit((1 << band_width) - 1)).alias("bucket"),
+                        band_bits(F.col("sig"), b).alias("bucket"),
                     )
                     for b in range(n_bands)
                 ]
             )
         ).alias("bb"),
     ).select(key, "sig", "bb.band", "bb.bucket")
-    hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
+    xor = F.col("sa").bitwiseXOR(F.col("sb"))
+    hamming = F.bit_count(xor)
+    first_band = F.coalesce(
+        *[F.when(band_bits(xor, b) == 0, F.lit(b)) for b in range(n_bands)]
+    )
     return (
         _bucket_pairs(
             banded, ["band", "bucket"], key,
-            payload="sig", payload_a="sa", payload_b="sb",
+            payload="sig", payload_a="sa", payload_b="sb", op="simhash_near_dups",
         )
-        .where(hamming <= max_hamming)
+        .where((F.col("band") == first_band) & (hamming <= max_hamming))
         .select("a", "b", hamming.alias("hamming"))
-        .distinct()
     )
 
 
@@ -728,6 +755,9 @@ def embedding_near_dups(
     signature land in one bucket. Exact cosine verifies. At 100 TB the
     bucket join replaces the cross join; brute force remains available
     through similarity.cosine_topk for small dims.
+
+    Precondition: ``key`` is unique per row; a key repeated within a
+    bucket raises (see _bucket_pairs).
     """
     # cast to double BEFORE the multiply: float32*float32 rounds to
     # float32 while the DuckDB oracle twin multiplies doubles — the
@@ -782,7 +812,7 @@ def embedding_near_dups(
     return (
         _bucket_pairs(
             bucketed, ["_sig"], key,
-            payload="_v", payload_a="va", payload_b="vb",
+            payload="_v", payload_a="va", payload_b="vb", op="embedding_near_dups",
         )
         .withColumn("cosine", cos)
         .where(F.col("cosine") >= threshold)

@@ -1,24 +1,14 @@
-"""Sessionization over the events stream shape.
+"""Gap-based sessionization over the events table shape.
 
-* ``sessionize`` (batch): classic gap-based sessions with a window
-  lag + running sum — pure Spark SQL, exact DuckDB oracle twin.
-* ``stream_sessionize`` (streaming): the same semantics as a custom
-  stateful operator via ``applyInPandasWithState`` — per-user state
-  carries (start, last_ts, n_events); a session closes when the gap
-  exceeds the threshold or the state times out. This is the
-  Structured-Streaming-native form a 100 TB event firehose needs
-  (state store sharded by user, no global shuffle beyond the key).
+``sessionize`` builds sessions with a window lag + running sum in pure
+Spark SQL; ``SESSIONIZE_ORACLE_SQL`` is its exact DuckDB twin (the
+``sessionize`` driver query).
 """
 
 from __future__ import annotations
 
-import datetime
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
 DEFAULT_GAP_MIN = 30
@@ -81,81 +71,3 @@ SELECT user_id, CAST(session_seq AS INTEGER) AS session_seq,
   CAST(MAX(ts) AS VARCHAR) AS session_end
 FROM seq GROUP BY user_id, session_seq
 """
-
-
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("start_s", T.LongType()),
-        T.StructField("last_s", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def stream_sessionize(
-    events_stream: DataFrame,
-    gap_minutes: int = DEFAULT_GAP_MIN,
-    idle_timeout_ms: int = 3_600_000,
-) -> DataFrame:
-    """Custom stateful streaming operator: closed sessions are emitted
-    as they are detected; an idle processing-time timeout flushes the
-    open session per user."""
-    gap_s = gap_minutes * 60
-
-    def fn(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_s, last_s, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [datetime.datetime.utcfromtimestamp(start_s)],
-                    "session_end": [datetime.datetime.utcfromtimestamp(last_s)],
-                    "n_events": [n],
-                }
-            )
-            return
-
-        ts_list = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.timestamp()) for t in pdf["ts"])
-        ts_list.sort()
-        if state.exists:
-            start_s, last_s, n = state.get
-        else:
-            start_s, last_s, n = ts_list[0], ts_list[0], 0
-        closed = []
-        for t in ts_list:
-            if t - last_s > gap_s:
-                closed.append((start_s, last_s, n))
-                start_s, n = t, 0
-            last_s = max(last_s, t)
-            n += 1
-        state.update((start_s, last_s, n))
-        state.setTimeoutDuration(idle_timeout_ms)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": [datetime.datetime.utcfromtimestamp(c[0]) for c in closed],
-                    "session_end": [datetime.datetime.utcfromtimestamp(c[1]) for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=_SESSION_OUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )

@@ -7,7 +7,8 @@ the spatial-join layer needs (the role S2/H3 plays in the north rule):
 
 * point -> cell is a pure-arithmetic, numpy-vectorizable map, also
   expressible in Spark SQL (so Catalyst sees the join key);
-* a bbox -> covering-cell-set is a small rectangle of grid indices;
+* a bbox -> covering-cell-set is a small rectangle of grid indices
+  (built in SQL by ``spatial_join._explode_cover``);
 * neighbor rings for kNN candidate expansion are index offsets.
 
 Everything here is driver/executor-side numpy; the DataFrame-level
@@ -75,28 +76,12 @@ def cell_of_points(lon, lat, level: int = DEFAULT_LEVEL) -> np.ndarray:
     return morton_encode(x, y)
 
 
-def cover_bbox(w: float, s: float, e: float, n: float, level: int = DEFAULT_LEVEL) -> np.ndarray:
-    """All level-L cell ids intersecting bbox [w, s, e, n]."""
-    x0, y0 = grid_xy(w, s, level)
-    x1, y1 = grid_xy(e, n, level)
-    xs = np.arange(int(x0), int(x1) + 1, dtype=np.int64)
-    ys = np.arange(int(y0), int(y1) + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys)
-    return morton_encode(gx.ravel(), gy.ravel())
-
-
 def cell_parent(cell, levels: int = 1) -> np.ndarray:
     """Ancestor cell id ``levels`` up the hierarchy. Morton interleave
     commutes with per-axis shifts, so the level-(L-k) parent of a
     level-L cell is simply ``cell >> 2k`` — the same property S2 uses
     for prefix-range containment queries."""
     return np.asarray(cell, dtype=np.int64) >> np.int64(2 * levels)
-
-
-def cell_children(cell: int) -> np.ndarray:
-    """The four level-(L+1) children of a level-L cell."""
-    base = np.int64(cell) << np.int64(2)
-    return base + np.arange(4, dtype=np.int64)
 
 
 def cell_size_degrees(level: int = DEFAULT_LEVEL) -> tuple[float, float]:

@@ -1,11 +1,10 @@
 """MTL parsing tests: txt<->json equivalence (the port of the
 reference's parser-equivalence corpus, tests/test_toa_utils.py:42-57),
-key lookup, bounds, and the distributed extractor."""
+the cast ladder, and the distributed extractor."""
 
 import json
 
 import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from rio_toa_spark.functions import mtl as mtl_mod
@@ -33,24 +32,6 @@ def test_nested_groups_and_root_keys():
     text = "ROOTK = 1\nGROUP = A\n  GROUP = B\n    X = 2\n  END_GROUP = B\n  Y = 3\nEND_GROUP = A\nEND\n"
     out = mtl_mod.parse_mtl_txt(text)
     assert out == {"ROOTK": 1, "A": {"B": {"X": 2}, "Y": 3}}
-
-
-def test_mtl_key_band_suffix():
-    mtl = {"L1": {"RR": {"RADIANCE_MULT_BAND_5": 0.01}}}
-    assert mtl_mod.mtl_key(mtl, ["L1", "RR", "RADIANCE_MULT_BAND_"], 5) == 0.01
-    # non-int band leaves the key untouched
-    with pytest.raises(KeyError):
-        mtl_mod.mtl_key(mtl, ["L1", "RR", "RADIANCE_MULT_BAND_"], "5")
-
-
-def test_bounds_from_metadata():
-    pm = {}
-    for c, (lat, lon) in {
-        "UL": (11.0, 1.0), "UR": (11.0, 3.0), "LL": (9.0, 1.0), "LR": (9.0, 3.0)
-    }.items():
-        pm["CORNER_%s_LAT_PRODUCT" % c] = lat
-        pm["CORNER_%s_LON_PRODUCT" % c] = lon
-    assert mtl_mod.bounds_from_metadata(pm) == [1.0, 9.0, 3.0, 11.0]
 
 
 def test_distributed_extractor_matches_driver_parse(spark, scenes_df, fixture_paths):

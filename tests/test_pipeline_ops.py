@@ -281,6 +281,28 @@ def test_lsh_duplicate_doc_key_raises(spark, docs):
         dedup.ngram_jaccard_pairs(corpus, threshold=0.5).collect()
 
 
+@pytest.mark.parametrize(
+    "op, table, key",
+    [("simhash_near_dups", "docs", "doc_id"), ("embedding_near_dups", "embs", "vec_id")],
+    ids=["simhash", "embedding"],
+)
+def test_near_dups_duplicate_key_raises(request, op, table, key):
+    """A key repeated with an identical payload pairs with itself in
+    every bucket it lands in: the operator refuses the input, naming
+    the key, also when the consumer prunes the key columns or only
+    counts rows."""
+    base = request.getfixturevalue(table).limit(5)
+    k = base.agg(F.min(key)).first()[0]
+    out = getattr(dedup, op)(base.unionByName(base.where(F.col(key) == k)))
+    msg = "duplicate key %d in %s input" % (k, op)
+    with pytest.raises(Exception, match=msg):
+        out.collect()
+    with pytest.raises(Exception, match=msg):
+        out.select(out.columns[-1]).collect()
+    with pytest.raises(Exception, match=msg):
+        out.count()
+
+
 def test_lsh_null_text_yields_no_pairs(spark, docs):
     """Docs with NULL text have no shingle set: they pair with nothing,
     raise nothing, and leave every other pair unchanged."""

@@ -124,6 +124,17 @@ def test_lsh_candidates_single_pass_uncached(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
+def test_simhash_single_hash_exchange(spark):
+    """SimHash near-dups keep each pair only in the first byte-band its
+    two signatures share, so no distinct() follows: the bucket groupBy
+    is the ONLY hash-partition exchange."""
+    from rio_toa_spark.operators import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(dedup.simhash_near_dups(docs, max_hamming=6))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
 def test_zonal_partials_single_shuffle(spark, tiles_df, scenes_df):
     """Zonal stats: zones broadcast, pixel kernel map-side; the only
     hash exchange carries the per-pair partial doubles."""

@@ -17,7 +17,7 @@ import os
 import pytest
 
 from rio_toa_spark.functions import sun
-from rio_toa_spark.functions.mtl import bounds_from_metadata, mtl_key, parse_mtl_txt
+from rio_toa_spark.functions.mtl import parse_mtl_txt
 
 REF_DATA = "/root/reference/tests/data"
 
@@ -47,9 +47,13 @@ def test_real_mtl_txt_json_equivalence(scene):
 @pytest.mark.parametrize("scene", REAL_SCENES)
 def test_real_mtl_key_and_bounds(scene):
     mtl = parse_mtl_txt(_load(os.path.join(REF_DATA, scene + "_MTL.txt")))
-    ml = mtl_key(mtl, ["L1_METADATA_FILE", "RADIOMETRIC_RESCALING", "RADIANCE_MULT_BAND_"], 5)
+    ml = mtl["L1_METADATA_FILE"]["RADIOMETRIC_RESCALING"]["RADIANCE_MULT_BAND_5"]
     assert isinstance(ml, float) and ml > 0
-    w, s, e, n = bounds_from_metadata(mtl["L1_METADATA_FILE"]["PRODUCT_METADATA"])
+    pm = mtl["L1_METADATA_FILE"]["PRODUCT_METADATA"]
+    corners = ("LL", "LR", "UR", "UL")
+    lngs = [pm["CORNER_%s_LON_PRODUCT" % c] for c in corners]
+    lats = [pm["CORNER_%s_LAT_PRODUCT" % c] for c in corners]
+    w, s, e, n = min(lngs), min(lats), max(lngs), max(lats)
     assert w < e and s < n and -180 <= w and e <= 180 and -90 <= s and n <= 90
 
 

@@ -37,16 +37,6 @@ def test_morton_roundtrip():
     assert np.array_equal(dx, x) and np.array_equal(dy, y)
 
 
-def test_cover_bbox_contains_point_cells():
-    w, s, e, n = 10.0, 20.0, 14.0, 23.0
-    cover = set(cell_mod.cover_bbox(w, s, e, n, LEVEL).tolist())
-    rng = np.random.default_rng(1)
-    lon = w + (e - w) * rng.random(200)
-    lat = s + (n - s) * rng.random(200)
-    pts = cell_mod.cell_of_points(lon, lat, LEVEL)
-    assert set(pts.tolist()) <= cover
-
-
 def _brute_force_pip(fixture_paths):
     pages = pq.read_table(fixture_paths["pages"]).to_pylist()
     import json
@@ -189,17 +179,6 @@ def test_cell_hierarchy_parent_commutes(spark):
     c8 = cm.cell_of_points(lon, lat, 8)
     for k in (1, 2, 3):
         assert np.array_equal(cm.cell_parent(c8, k), cm.cell_of_points(lon, lat, 8 - k))
-
-
-def test_cell_children_roundtrip():
-    import numpy as np
-
-    from rio_toa_spark.spatial import cells as cm
-
-    for cell in (0, 5, 1234, (1 << 12) - 1):
-        kids = cm.cell_children(cell)
-        assert len(kids) == 4 and len(set(kids.tolist())) == 4
-        assert np.array_equal(cm.cell_parent(kids), np.full(4, cell))
 
 
 def test_cell_parent_expr_matches_numpy(spark):

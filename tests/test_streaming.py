@@ -1,44 +1,9 @@
-"""Streaming ingest: bounded drain (availableNow) of page drops with
-url dedup + cell assignment, and the watermarked event rollup."""
+"""Stream-static join: the batch ``pip_join`` operator runs unchanged
+over a streaming pages source."""
 
 import os
-import shutil
 
 import pyarrow.parquet as pq
-import pytest
-from pyspark.sql import functions as F
-
-from rio_toa_spark.spatial import cells as cell_mod
-from rio_toa_spark.streaming.ingest import stream_event_rollup, stream_pages
-
-
-def test_stream_pages_dedup_and_cells(spark, fixture_paths, tmp_path):
-    src = str(tmp_path / "drops")
-    os.makedirs(src)
-    # two drops with overlapping urls (the duplicate must be dropped)
-    table = pq.read_table(fixture_paths["pages"])
-    pq.write_table(table.slice(0, 300), os.path.join(src, "d1.parquet"))
-    pq.write_table(table.slice(200, 300), os.path.join(src, "d2.parquet"))
-
-    sink = str(tmp_path / "sink")
-    q = stream_pages(
-        spark, src, sink, str(tmp_path / "ckpt"), level=6, available_now=True
-    )
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(sink)
-    rows = out.select("url", "lon", "lat", "cell").collect()
-    urls = [r.url for r in rows]
-    assert len(urls) == len(set(urls)) == 500  # 300 + 300 - 100 overlap
-    import numpy as np
-
-    got = {r.url: r.cell for r in rows}
-    for r in rows[:50]:
-        assert got[r.url] == int(cell_mod.cell_of_points(np.array([r.lon]), np.array([r.lat]), 6)[0])
-    # restart with same checkpoint: no new data -> no duplicates
-    q2 = stream_pages(spark, src, sink, str(tmp_path / "ckpt"), level=6, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == 500
 
 
 def test_pip_join_stream_static(spark, fixture_paths, tmp_path, pages_df, scenes_df):
@@ -72,119 +37,3 @@ def test_pip_join_stream_static(spark, fixture_paths, tmp_path, pages_df, scenes
         .collect()
     }
     assert got == exp and got
-
-
-def test_stream_event_rollup(spark, tmp_path):
-    src = "/root/testdata/sf0.001/events.parquet"
-    drops = str(tmp_path / "edrops")
-    os.makedirs(drops)
-    shutil.copy(src, os.path.join(drops, "e1.parquet"))
-
-    sink = str(tmp_path / "esink")
-    q = stream_event_rollup(spark, drops, sink, str(tmp_path / "eckpt"), available_now=True)
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(sink)
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    # append-mode emits only watermark-closed windows; every emitted
-    # window must match the batch computation exactly
-    got = {(r.window_start, r.event_type): r.n for r in out.collect()}
-    exp = {(r.window.start, r.event_type): r.n for r in batch.collect()}
-    assert got, "stream emitted nothing"
-    for key, n in got.items():
-        assert exp[key] == n
-
-
-def test_stream_toa_radiance_bitwise_vs_batch(spark, fixture_paths, tmp_path, tiles_df, scenes_df):
-    """Streaming TOA (foreachBatch over the unchanged batch operator)
-    produces byte-identical pixels to the batch pipeline, and a
-    checkpointed restart adds nothing."""
-    from rio_toa_spark.operators import toa
-    from rio_toa_spark.streaming.ingest import stream_toa_radiance
-
-    src = str(tmp_path / "tile_drops")
-    os.makedirs(src)
-    table = pq.read_table(fixture_paths["tiles"])
-    half = table.num_rows // 2
-    pq.write_table(table.slice(0, half), os.path.join(src, "d1.parquet"))
-    pq.write_table(table.slice(half), os.path.join(src, "d2.parquet"))
-
-    sink = str(tmp_path / "toa_sink")
-    q = stream_toa_radiance(
-        spark, src, scenes_df, sink, str(tmp_path / "toa_ckpt"), band=5
-    )
-    q.awaitTermination(180)
-
-    def keyed(df):
-        return {
-            (r.scene_id, r.band, r.tile_row, r.tile_col): bytes(r.pixels)
-            for r in df.collect()
-        }
-
-    got = keyed(spark.read.parquet(sink))
-    want = keyed(toa.radiance_tiles(tiles_df, scenes_df, band=5))
-    assert got == want  # same tiles, bitwise-equal float32 payloads
-
-    # restart on the same checkpoint: no new files -> no new rows
-    q2 = stream_toa_radiance(
-        spark, src, scenes_df, sink, str(tmp_path / "toa_ckpt"), band=5
-    )
-    q2.awaitTermination(180)
-    assert spark.read.parquet(sink).count() == len(want)
-
-
-def test_stream_media_features_matches_batch(spark, tmp_path):
-    """Streaming media curation (foreachBatch over the unchanged
-    decode->resize->features chain) produces exactly the batch result
-    on the same payloads, provenance included; a checkpointed restart
-    adds nothing."""
-    import numpy as np
-    import pyarrow as pa
-
-    from rio_toa_spark.functions.png import encode_png
-    from rio_toa_spark.operators.multimodal import (
-        decode_image,
-        image_features,
-        resize_image,
-    )
-    from rio_toa_spark.streaming.ingest import stream_media_features
-
-    rng = np.random.default_rng(6)
-    rows = [
-        (mid, encode_png(rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)))
-        for mid in range(6)
-    ] + [(6, b"not an image")]
-    src = str(tmp_path / "media_drops")
-    os.makedirs(src)
-    tbl = pa.table(
-        {
-            "media_id": pa.array([r[0] for r in rows], pa.int64()),
-            "payload": pa.array([r[1] for r in rows], pa.binary()),
-        }
-    )
-    pq.write_table(tbl.slice(0, 4), os.path.join(src, "d1.parquet"))
-    pq.write_table(tbl.slice(4), os.path.join(src, "d2.parquet"))
-
-    sink = str(tmp_path / "media_sink")
-    q = stream_media_features(spark, src, sink, str(tmp_path / "media_ckpt"))
-    q.awaitTermination(120)
-
-    def keyed(df):
-        return {
-            r.media_id: (tuple(r.features), r.decode_status) for r in df.collect()
-        }
-
-    got = keyed(spark.read.parquet(sink))
-    batch_df = spark.createDataFrame(rows, "media_id long, payload binary")
-    want = keyed(image_features(resize_image(decode_image(batch_df))))
-    assert got == want
-    assert got[6][1] == "stub" and got[0][1] == "genuine_png"
-
-    # restart on the same checkpoint: no new files -> no new rows
-    q2 = stream_media_features(spark, src, sink, str(tmp_path / "media_ckpt"))
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == len(want)
