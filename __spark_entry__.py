@@ -609,7 +609,7 @@ def _media_truth_sql() -> str:
     # roundtrip, the nearest-neighbor resize, and the feature kernel
     # decode_status is pinned to the literal genuine-decode marker:
     # every payload in this query is a PNG the pure-numpy codec must
-    # decode genuinely, so any stub/PIL fallback breaks the hash match
+    # decode genuinely, so any stub fallback breaks the hash match
     return (
         "SELECT media_id, feature_idx, round(CAST(value AS DOUBLE), 6) AS value, "
         "'genuine_png' AS decode_status "
@@ -1528,7 +1528,7 @@ def _q_media_pipeline(spark, sf_dir):
     feats = image_features(resize_image(decode_image(pngs), out_h=8, out_w=8))
     # decode_status provenance rides decode -> resize -> features; the
     # twin pins it to the literal 'genuine_png', so a silent fallback
-    # to the stub (or PIL) on ANY payload hash-mismatches the oracle
+    # to the stub on ANY payload hash-mismatches the oracle
     return feats.select(
         "media_id", "decode_status", F.posexplode("features").alias("feature_idx", "value")
     ).select(

@@ -277,9 +277,6 @@ def cmd_media(args):
             F.sum(F.col("decode_status").startswith("genuine").cast("long")), F.lit(0)
         ).alias("n_genuine"),
         F.coalesce(
-            F.sum((F.col("decode_status") == "pil").cast("long")), F.lit(0)
-        ).alias("n_pil"),
-        F.coalesce(
             F.sum((F.col("decode_status") == "stub").cast("long")), F.lit(0)
         ).alias("n_stub"),
     )
@@ -289,7 +286,6 @@ def cmd_media(args):
             {
                 "input": int(obs.get["n"]),
                 "genuine": int(obs.get["n_genuine"]),
-                "pil": int(obs.get["n_pil"]),
                 "stub": int(obs.get["n_stub"]),
             }
         )

@@ -1,6 +1,6 @@
 """Minimal pure-numpy JPEG codec so the multimodal decode seam
-exercises a GENUINE JPEG decode in this container (no PIL/libjpeg
-available) — the JPEG sibling of functions/png.py.
+exercises a GENUINE JPEG decode without an external image library
+(no libjpeg binding needed) — the JPEG sibling of functions/png.py.
 
 Decoder: baseline sequential DCT (SOF0) AND progressive DCT (SOF2,
 T.81 Annex G: spectral selection + successive approximation, DC and

@@ -1,6 +1,6 @@
 """Minimal pure-python/numpy PNG codec (zlib is stdlib) so the
-multimodal decode seam exercises a GENUINE image decode in this
-container (no PIL/libvips available). Supports 8-bit and 16-bit
+multimodal decode seam exercises a GENUINE image decode
+without an external image library. Supports 8-bit and 16-bit
 greyscale, grey+alpha, RGB and RGBA, non-interlaced; the decoder
 implements all five PNG scanline filters (which operate on BYTES with
 bpp = bytes-per-pixel, so the same unfilter code serves both depths),

@@ -2,13 +2,13 @@
 
 Media payloads are opaque ``binary`` columns plus a typed metadata
 struct — the same tile pattern the TOA core uses. Heavy decode is an
-Arrow batch kernel (``map_arrow``). PNG, baseline JPEG, and
-MJPG/MPNG-in-AVI video are decoded GENUINELY through the pure-numpy
-codecs (functions/{png,jpeg,avi}.py); formats those can't parse fall
-back to a clearly marked deterministic stub (seeded from the payload
-hash) behind the same signature/schema, labeled via the
-``decode_status`` provenance column, with PIL gated behind an
-import-try as an intermediate fallback. Everything Spark-side —
+Arrow batch kernel (``map_arrow``). PNG, baseline/progressive JPEG,
+and MJPG/MPNG-in-AVI video frames all decode GENUINELY through one
+still-image path (``_decode_still`` over the pure-numpy codecs in
+functions/{png,jpeg,avi}.py) into uint8 HWC buffers; payloads those
+can't parse fall back to a clearly marked deterministic stub (seeded
+from the payload hash) behind the same signature/schema, labeled via
+the ``decode_status`` provenance column. Everything Spark-side —
 schemas, batching, partitioning, UDF shapes — is real and tested.
 
 Operators:
@@ -24,28 +24,21 @@ Operators:
 
 from __future__ import annotations
 
+import hashlib
+import struct
+import zlib
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rio_toa_spark.functions import avi as _avi
+from rio_toa_spark.functions import wav as _wav
+from rio_toa_spark.functions.jpeg import JPEG_SIGNATURE, decode_jpeg
+from rio_toa_spark.functions.png import PNG_SIGNATURE, decode_png
 from rio_toa_spark.operators import binary_rows, map_arrow
 from rio_toa_spark.operators.dedup import _parse_bytes
-
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("content_hash", T.LongType()),
-    ]
-)
 
 
 def describe_media(df: DataFrame, payload: str = "payload") -> DataFrame:
@@ -79,14 +72,44 @@ def describe_media(df: DataFrame, payload: str = "payload") -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes, height: int = 32, width: int = 32, channels: int = 3) -> np.ndarray:
-    """Deterministic stand-in for a real image decoder: pixels seeded
-    from the payload hash. Replace with PIL/libvips when available."""
-    import hashlib
-
+def _stub_rng(payload: bytes) -> np.random.Generator:
+    """Generator seeded from the payload's md5: the deterministic
+    stand-in behind every 'stub' ``decode_status``."""
     seed = int.from_bytes(hashlib.md5(payload).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, channels), dtype=np.uint8)
+    return np.random.default_rng(seed)
+
+
+def _fake_decode(payload: bytes) -> np.ndarray:
+    """Stub pixels for unparseable image payloads: 32x32x3 uint8."""
+    return _stub_rng(payload).integers(0, 256, size=(32, 32, 3), dtype=np.uint8)
+
+
+# parse failures a corrupt payload can surface from the pure-numpy
+# codecs: ValueError (bad header / unsupported variant), KeyError
+# (missing huff/qt table id), IndexError (bad AC run), struct.error
+# (truncated segment), zlib.error (corrupt IDAT stream). All must fall
+# through to the stub — one bad payload must never kill the whole
+# Arrow batch (fuzz-tested in tests/test_multimodal.py)
+_PARSE_ERRORS = (ValueError, KeyError, IndexError, struct.error, zlib.error)
+
+
+def _decode_still(p: bytes) -> tuple[np.ndarray, str] | None:
+    """A PNG or JPEG payload as a uint8 HWC array plus its codec
+    ('png' / 'jpeg'), or None when no signature matches or the codec
+    cannot parse it. 16-bit PNGs keep the high byte: the media
+    operators' contract is uint8 buffers — raster consumers needing
+    full DN precision call functions/png.decode_png directly."""
+    try:
+        if p[:8] == PNG_SIGNATURE:
+            arr = decode_png(p)
+            if arr.dtype == np.uint16:
+                arr = (arr >> 8).astype(np.uint8)
+            return arr, "png"
+        if p[:3] == JPEG_SIGNATURE:
+            return decode_jpeg(p), "jpeg"
+    except _PARSE_ERRORS:
+        pass
+    return None
 
 
 _DECODED_FIELDS = [
@@ -100,80 +123,29 @@ _DECODED_FIELDS = [
 _STATUS_FIELD = T.StructField("decode_status", T.StringType())
 
 
-def _with_status(batch, cols: dict) -> dict:
-    """Let ``decode_status`` provenance, when the input batch has it,
-    ride through into the output columns."""
-    if "decode_status" in batch.schema.names:
-        cols["decode_status"] = batch.column("decode_status")
-    return cols
-
-
 def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id") -> DataFrame:
     """binary -> decoded uint8 HWC buffer + decode provenance.
 
     PNG (incl. palette / sub-8-bit / 16-bit / Adam7-interlaced) and
     JPEG (baseline SOF0 and progressive SOF2; 4:4:4/4:2:0/4:2:2)
-    payloads take GENUINE decodes through the pure-numpy codecs in
-    functions/{png,jpeg}.py, signature-sniffed; other formats fall
-    back to the documented deterministic stub (PIL plugs into the same
-    kernel when importable). Video payloads go through
-    ``sample_video_frames``; audio through ``decode_audio``.
+    payloads take GENUINE decodes through ``_decode_still``; other
+    formats fall back to the documented deterministic stub. Video
+    payloads go through ``sample_video_frames``; audio through
+    ``decode_audio``.
 
-    Every row carries ``decode_status`` ('genuine_png' / 'genuine_jpeg'
-    / 'pil' / 'stub') so a large-scale pipeline can QUANTIFY and filter
-    fallback decodes instead of silently training on seeded noise — at
-    web-corpus scale double-digit percentages of payloads hit codec
-    variants the pure-numpy decoders reject, and without provenance
-    those become invisible fake features."""
-    from rio_toa_spark.functions.jpeg import JPEG_SIGNATURE, decode_jpeg
-    from rio_toa_spark.functions.png import PNG_SIGNATURE, decode_png
-
+    Every row carries ``decode_status`` ('genuine_png' /
+    'genuine_jpeg' / 'stub') so a large-scale pipeline can QUANTIFY
+    and filter fallback decodes instead of silently training on seeded
+    noise — at web-corpus scale double-digit percentages of payloads
+    hit codec variants the pure-numpy decoders reject, and without
+    provenance those become invisible fake features."""
     schema = T.StructType([df.schema[key]] + _DECODED_FIELDS + [_STATUS_FIELD])
 
-    import struct as _struct
-    import zlib as _zlib
-
-    # parse failures a corrupt payload can surface from the pure-numpy
-    # codecs: ValueError (bad header / non-baseline), KeyError (missing
-    # huff/qt table id), IndexError (bad AC run), struct.error
-    # (truncated segment), zlib.error (corrupt IDAT stream). All must
-    # fall through to PIL/stub — one bad payload must never kill the
-    # whole Arrow batch (fuzz-tested in tests/test_multimodal.py)
-    _PARSE_ERRORS = (ValueError, KeyError, IndexError, _struct.error, _zlib.error)
-
     def _decode_one(p: bytes) -> tuple[np.ndarray, str]:
-        if bytes(p[:8]) == PNG_SIGNATURE:
-            try:
-                arr = decode_png(bytes(p))
-                if arr.dtype == np.uint16:
-                    # this operator's contract is uint8 HWC buffers;
-                    # 16-bit PNGs keep the high byte here — raster
-                    # consumers needing full DN precision decode via
-                    # functions/png.decode_png directly
-                    arr = (arr >> 8).astype(np.uint8)
-                return arr, "genuine_png"
-            except _PARSE_ERRORS:
-                pass
-        if bytes(p[:3]) == JPEG_SIGNATURE:
-            try:
-                return decode_jpeg(bytes(p)), "genuine_jpeg"
-            except _PARSE_ERRORS:
-                pass
-        if _HAVE_PIL:  # pragma: no cover
-            # real decoder path for JPEG & friends when PIL exists in
-            # the environment; anything PIL can't parse (e.g. the
-            # driver's utf-8 text payloads) falls through to the stub
-            # rather than failing the batch
-            try:
-                import io
-
-                from PIL import Image
-
-                img = np.asarray(Image.open(io.BytesIO(bytes(p))).convert("RGB"))
-                return img.reshape(img.shape[0], img.shape[1], 3), "pil"
-            except Exception:
-                pass
-        return _fake_decode(p), "stub"
+        still = _decode_still(p)
+        if still is None:
+            return _fake_decode(p), "stub"
+        return still[0], "genuine_" + still[1]
 
     # decoding multiplies bytes (a few-KB JPEG becomes ~100 KB of
     # pixels), so the input batch's byte bound says nothing about the
@@ -212,12 +184,9 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
 def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str = "media_id") -> DataFrame:
     """Nearest-neighbor resize of decoded HWC buffers — pure numpy
     strided sampling, the batch shape a real resize kernel would use.
-    ``decode_status`` provenance, when present, rides through."""
-    has_status = "decode_status" in decoded_df.columns
+    ``decode_status`` provenance rides through."""
     schema = T.StructType(
-        [decoded_df.schema[key]]
-        + _DECODED_FIELDS
-        + ([_STATUS_FIELD] if has_status else [])
+        [decoded_df.schema[key]] + _DECODED_FIELDS + [decoded_df.schema["decode_status"]]
     )
 
     def run(batches):
@@ -230,27 +199,28 @@ def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str
                 ys = (np.arange(out_h) * row["height"] // out_h).astype(int)
                 xs = (np.arange(out_w) * row["width"] // out_w).astype(int)
                 out.append(arr[np.ix_(ys, xs)].tobytes())
-            cols = {
+            yield {
                 key: batch.column(key),
                 "height": [out_h] * len(out),
                 "width": [out_w] * len(out),
                 "channels": batch.column("channels"),
                 "pixels": out,
+                "decode_status": batch.column("decode_status"),
             }
-            yield _with_status(batch, cols)
 
     return map_arrow(decoded_df, run, schema)
 
 
 def image_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
     """Per-channel mean/std feature vector from decoded buffers.
-    ``decode_status`` provenance, when present, rides through — so a
-    consumer can drop stub-derived features AFTER extraction without
-    re-decoding."""
-    has_status = "decode_status" in decoded_df.columns
+    ``decode_status`` provenance rides through — so a consumer can
+    drop stub-derived features AFTER extraction without re-decoding."""
     schema = T.StructType(
-        [decoded_df.schema[key], T.StructField("features", T.ArrayType(T.FloatType()))]
-        + ([_STATUS_FIELD] if has_status else [])
+        [
+            decoded_df.schema[key],
+            T.StructField("features", T.ArrayType(T.FloatType())),
+            decoded_df.schema["decode_status"],
+        ]
     )
 
     def run(batches):
@@ -263,7 +233,11 @@ def image_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
                 feats.append(
                     np.concatenate([arr.mean(axis=(0, 1)), arr.std(axis=(0, 1))]).tolist()
                 )
-            yield _with_status(batch, {key: batch.column(key), "features": feats})
+            yield {
+                key: batch.column(key),
+                "features": feats,
+                "decode_status": batch.column("decode_status"),
+            }
 
     return map_arrow(decoded_df, run, schema)
 
@@ -276,15 +250,11 @@ _AUDIO_FIELDS = [
 ]
 
 
-def _fake_audio(payload: bytes, n: int = 8000) -> tuple[np.ndarray, int]:
-    """Deterministic stand-in for unparseable audio payloads: int16
-    mono seeded from the payload hash (the audio twin of
-    ``_fake_decode``)."""
-    import hashlib
-
-    seed = int.from_bytes(hashlib.md5(payload).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.integers(-(1 << 15), 1 << 15, size=(n, 1), dtype=np.int16), 16_000
+def _fake_audio(payload: bytes) -> tuple[np.ndarray, int]:
+    """Stub audio for unparseable payloads: 8000 int16 mono samples at
+    16 kHz (the audio twin of ``_fake_decode``)."""
+    samples = _stub_rng(payload).integers(-(1 << 15), 1 << 15, size=(8000, 1), dtype=np.int16)
+    return samples, 16_000
 
 
 def decode_audio(df: DataFrame, payload: str = "payload", key: str = "media_id") -> DataFrame:
@@ -294,18 +264,12 @@ def decode_audio(df: DataFrame, payload: str = "payload", key: str = "media_id")
     parser (functions/wav.py — 8-bit widened to int16); anything else
     (or any parse failure — the never-raises seam) falls back to the
     deterministic stub with ``decode_status='stub'``."""
-    from rio_toa_spark.functions import wav as _wav
-
     schema = T.StructType([df.schema[key]] + _AUDIO_FIELDS + [_STATUS_FIELD])
 
-    import struct as _struct
-
-    _PARSE_ERRORS = (ValueError, KeyError, IndexError, _struct.error)
-
     def _decode_one(p: bytes) -> tuple[np.ndarray, int, str]:
-        if _wav.is_wav(bytes(p)):
+        if _wav.is_wav(p):
             try:
-                samples, rate = _wav.decode_wav(bytes(p))
+                samples, rate = _wav.decode_wav(p)
                 return samples, rate, "genuine_wav"
             except _PARSE_ERRORS:
                 pass
@@ -329,16 +293,15 @@ def decode_audio(df: DataFrame, payload: str = "payload", key: str = "media_id")
 
 def audio_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
     """Per-channel RMS / peak / zero-crossing-rate features plus
-    duration from decoded PCM buffers; ``decode_status`` provenance,
-    when present, rides through."""
-    has_status = "decode_status" in decoded_df.columns
+    duration from decoded PCM buffers; ``decode_status`` provenance
+    rides through."""
     schema = T.StructType(
         [
             decoded_df.schema[key],
             T.StructField("duration_s", T.DoubleType()),
             T.StructField("features", T.ArrayType(T.FloatType())),
+            decoded_df.schema["decode_status"],
         ]
-        + ([_STATUS_FIELD] if has_status else [])
     )
 
     def run(batches):
@@ -361,9 +324,12 @@ def audio_features(decoded_df: DataFrame, key: str = "media_id") -> DataFrame:
                 feats.append(
                     np.concatenate([rms, peak, zcr]).astype(np.float32).tolist()
                 )
-            yield _with_status(
-                batch, {key: batch.column(key), "duration_s": durs, "features": feats}
-            )
+            yield {
+                key: batch.column(key),
+                "duration_s": durs,
+                "features": feats,
+                "decode_status": batch.column("decode_status"),
+            }
 
     return map_arrow(decoded_df, run, schema)
 
@@ -378,48 +344,38 @@ def sample_video_frames(
     (functions/avi.py — pure struct RIFF walking), ``n_frames`` frames
     are sampled evenly across the stream (source indices
     i*total//n_frames, the same strided rule as resize_image), and each
-    sampled frame payload is decoded by its own signature — MJPG frames
-    through the baseline JPEG codec, MPNG (Motion-PNG) frames through
-    the PNG codec. ``frame_idx`` is the SOURCE frame number. A video
-    with fewer than ``n_frames`` frames yields repeated source indices
-    (sampling with replacement) so every payload expands to exactly
-    n_frames rows — a fixed fan-out downstream batching can rely on.
+    sampled frame payload goes through ``_decode_still`` — the same
+    still-image path as decode_image — so MJPG frames decode through
+    the JPEG codec and MPNG (Motion-PNG) frames through the PNG codec,
+    16-bit frames cut to their high byte. ``frame_idx`` is the SOURCE
+    frame number. A video with fewer than ``n_frames`` frames yields
+    repeated source indices (sampling with replacement) so every
+    payload expands to exactly n_frames rows — a fixed fan-out
+    downstream batching can rely on.
 
     Non-AVI payloads (and any container/codec parse failure — the
-    never-raises seam) fall back to the documented deterministic stub
+    never-raises seam; one bad sampled frame sends the whole payload
+    to the stub) fall back to the documented deterministic stub
     seeded per (payload, sample_ordinal), with ``decode_status`` =
     'stub' so consumers can quantify fake frames exactly like
     decode_image fallbacks."""
-    from rio_toa_spark.functions import avi as _avi
-    from rio_toa_spark.functions.jpeg import JPEG_SIGNATURE, decode_jpeg
-    from rio_toa_spark.functions.png import PNG_SIGNATURE, decode_png
-
     schema = T.StructType(
         [df.schema[key], T.StructField("frame_idx", T.IntegerType())]
         + _DECODED_FIELDS
         + [_STATUS_FIELD]
     )
 
-    import struct as _struct
-    import zlib as _zlib
-
-    _PARSE_ERRORS = (ValueError, KeyError, IndexError, _struct.error, _zlib.error)
-
     def _genuine(p: bytes):
         """(source_idx, array, status) per sampled frame, or None to
         fall back to the stub for the whole payload."""
-        frames = _avi.avi_frames(bytes(p))
-        total = len(frames)
+        frames = _avi.avi_frames(p)
         out = []
         for i in range(n_frames):
-            src = i * total // n_frames
-            fp = frames[src]
-            if fp[:8] == PNG_SIGNATURE:
-                out.append((src, decode_png(fp), "genuine_mpng"))
-            elif fp[:3] == JPEG_SIGNATURE:
-                out.append((src, decode_jpeg(fp), "genuine_mjpeg"))
-            else:
-                raise ValueError("AVI frame with unknown codec signature")
+            src = i * len(frames) // n_frames
+            still = _decode_still(frames[src])
+            if still is None:
+                return None
+            out.append((src, still[0], "genuine_m" + still[1]))
         return out
 
     def run(batches):
@@ -429,7 +385,7 @@ def sample_video_frames(
                 batch.column(key).to_pylist(), batch.column(payload).to_pylist()
             ):
                 decoded = None
-                if _avi.is_avi(bytes(payload_bytes)):
+                if _avi.is_avi(payload_bytes):
                     try:
                         decoded = _genuine(payload_bytes)
                     except _PARSE_ERRORS:

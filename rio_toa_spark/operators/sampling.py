@@ -14,8 +14,6 @@ UDF, fully codegen'd; `mixture_sample` adds one dimension-sized
 groupBy-count (collected: #domains rows, documented bounded collect).
 
 * hash_sample        — keyed Bernoulli at a fixed rate
-* split_train_eval   — complementary deterministic split (disjoint,
-                       exhaustive — the same hash decides both sides)
 * stratified_sample  — per-stratum rates
 * mixture_sample     — hit target DOMAIN PROPORTIONS (e.g. 70% web,
                        20% code, 10% reference) at the largest total
@@ -53,16 +51,6 @@ def hash_sample(
     if not 0.0 <= rate <= 1.0:
         raise ValueError("rate must be in [0, 1], got %r" % rate)
     return df.where(sample_unit(F.col(key), seed) < rate)
-
-
-def split_train_eval(
-    df: DataFrame, eval_fraction: float = 0.01, key: str = "doc_id", seed: int = 0
-) -> tuple[DataFrame, DataFrame]:
-    """(train, eval) with unit(key) < eval_fraction routing to eval:
-    disjoint and exhaustive by construction (one hash, two
-    complementary predicates), so no document can leak into both."""
-    u = sample_unit(F.col(key), seed)
-    return df.where(u >= eval_fraction), df.where(u < eval_fraction)
 
 
 def stratified_sample(

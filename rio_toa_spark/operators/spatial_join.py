@@ -143,11 +143,6 @@ def _explode_cover(footprints: DataFrame, level: int) -> DataFrame:
     return out
 
 
-_CONTAINS = (
-    "(lon >= fw) AND (lon <= fe) AND (lat >= fs) AND (lat <= fn)"
-)
-
-
 def pip_join(
     points_df: DataFrame,
     footprints_df: DataFrame,

@@ -91,7 +91,7 @@ class ResumableJob:
         record = {
             # monotonic commit sequence: committed_at has second
             # resolution, so same-second commits would otherwise order
-            # randomly by uuid and break read_snapshot's prefix contract
+            # randomly by uuid in snapshots()
             "seq": len(self._manifest_records()),
             "chunk_id": chunk_id,
             "partitions": sorted(str(p) for p in partitions),
@@ -107,19 +107,12 @@ class ResumableJob:
 
     # ------------------------------------------------------------- run
 
-    def run(
-        self,
-        df: DataFrame,
-        chunk_partitions: int = 0,
-        max_chunks: int | None = None,
-    ) -> dict:
+    def run(self, df: DataFrame, chunk_partitions: int = 0) -> dict:
         """Execute (or resume) the job.
 
         ``chunk_partitions`` > 0 processes the to-do set in chunks of
         that many partition values, committing a manifest record after
         each — the granularity of resume. 0 means one chunk.
-        ``max_chunks`` stops early after N chunks (used by tests to
-        simulate a kill; production leaves it None).
         """
         from pyspark.sql import Observation
 
@@ -142,11 +135,8 @@ class ResumableJob:
         chunks = [
             todo[i : i + chunk_partitions] for i in range(0, len(todo), chunk_partitions)
         ]
-        ran = 0
         try:
             for chunk in chunks:
-                if max_chunks is not None and ran >= max_chunks:
-                    break
                 t0 = time.perf_counter()
                 # per-partition row counts ride along on the write via
                 # observe() — ONE pass over the data, not a count() pass
@@ -166,18 +156,13 @@ class ResumableJob:
                 got = obs.get
                 counts = {str(v): int(got["n_%d" % i]) for i, v in enumerate(chunk)}
                 self._commit_chunk(chunk, counts, time.perf_counter() - t0)
-                ran += 1
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior_mode)
         return {
             "total_partitions": len(all_parts),
             "previously_done": len(done),
-            "chunks_run": ran,
-            "remaining": max(len(todo) - ran * chunk_partitions, 0),
+            "chunks_run": len(chunks),
         }
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.output_path)
 
     # ------------------------------------------------------- snapshots
 
@@ -197,27 +182,3 @@ class ResumableJob:
             }
             for r in recs
         ]
-
-    def read_snapshot(self, spark: SparkSession, as_of_chunk: str) -> DataFrame:
-        """Time-travel read: the table as of the commit of
-        ``as_of_chunk`` — exactly the partitions committed by that
-        chunk and every chunk before it.
-
-        Consistent because chunks partition the to-do set: a later
-        chunk never rewrites an earlier chunk's partitions, so a prefix
-        of the commit log identifies a stable subset of partition
-        directories. Partition pruning makes this a metadata-level
-        filter, not a data scan."""
-        snaps = self.snapshots()
-        ids = [s["chunk_id"] for s in snaps]
-        if as_of_chunk not in ids:
-            raise ValueError(
-                "unknown chunk %r — committed chunks: %s" % (as_of_chunk, ids)
-            )
-        keep: list[str] = []
-        for s in snaps:
-            keep.extend(s["partitions"])
-            if s["chunk_id"] == as_of_chunk:
-                break
-        df = self.read(spark)
-        return df.where(F.col(self.partition_col).cast("string").isin(keep))

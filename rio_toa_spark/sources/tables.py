@@ -1,6 +1,5 @@
 """Table loading helpers.
 
-* ``load_tables`` — the driver testdata star schema.
 * ``read_band_files`` — ingest per-band tile parquet files whose band
   number is encoded in the file name, the columnar form of the
   reference's filename-template parse (rio_toa/toa_utils.py:7-16):
@@ -11,32 +10,10 @@
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, "%s.parquet" % name))
-        for name in TESTDATA_TABLES
-    }
-
 
 def band_from_filename_expr(template: str = r".*_B{b}\.parquet"):
     """Column expression extracting the band number from the input

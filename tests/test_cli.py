@@ -334,7 +334,7 @@ def test_cli_media_features_and_provenance(spark, tmp_path, capsys):
     )
     cli.main(["media", str(src), str(tmp_path / "out")])
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats == {"input": 3, "genuine": 2, "pil": 0, "stub": 1}
+    assert stats == {"input": 3, "genuine": 2, "stub": 1}
     out = spark.read.parquet(str(tmp_path / "out"))
     rows = {r.media_id: r for r in out.collect()}
     assert set(rows) == {0, 1, 2}
@@ -367,7 +367,7 @@ def test_cli_media_audio_kind(spark, tmp_path, capsys):
     )
     cli.main(["media", str(src), str(tmp_path / "out"), "--kind", "audio"])
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats == {"input": 2, "genuine": 1, "pil": 0, "stub": 1}
+    assert stats == {"input": 2, "genuine": 1, "stub": 1}
     rows = {r.media_id: r for r in spark.read.parquet(str(tmp_path / "out")).collect()}
     assert rows[0].decode_status == "genuine_wav"
     assert rows[0].duration_s == pytest.approx(400 / 16000.0)

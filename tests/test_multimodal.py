@@ -194,7 +194,6 @@ def test_decode_status_provenance(spark):
     ]
     df = spark.createDataFrame(rows, "media_id int, payload binary")
     got = {r.media_id: r.decode_status for r in mm.decode_image(df).collect()}
-    # the corrupt PNG fails the codec AND PIL (when present) -> stub
     assert got == {1: "genuine_png", 2: "genuine_jpeg", 3: "stub", 4: "stub"}
     # provenance rides through resize and features unchanged
     feats = mm.image_features(mm.resize_image(mm.decode_image(df))).collect()
@@ -312,16 +311,30 @@ def test_png_16bit_filtered_decode():
 
 
 def test_decode_image_16bit_png_high_byte(spark):
-    # the uint8-contract operator keeps the high byte of 16-bit decodes
-    # and still reports a genuine decode
+    # the uint8-contract operators keep the high byte of 16-bit decodes
+    # and still report a genuine decode — a still PNG through
+    # decode_image and the same PNG as a Motion-PNG frame through
+    # sample_video_frames give the same pixels
+    from rio_toa_spark.functions.avi import encode_avi
     from rio_toa_spark.functions.png import encode_png
 
     arr = np.arange(256, dtype=np.uint16).reshape(16, 16) * 257  # 0..65535
-    df = spark.createDataFrame([(1, encode_png(arr))], "media_id int, payload binary")
+    png = encode_png(arr)
+    df = spark.createDataFrame([(1, png)], "media_id int, payload binary")
     row = mm.decode_image(df).collect()[0]
     assert row.decode_status == "genuine_png"
     got = np.frombuffer(row.pixels, np.uint8).reshape(16, 16, 1)
     assert np.array_equal(got[:, :, 0], (arr >> 8).astype(np.uint8))
+
+    video = encode_avi([png], 16, 16, fourcc=b"MPNG")
+    vdf = spark.createDataFrame([(1, video)], "media_id int, payload binary")
+    frames = mm.sample_video_frames(vdf, n_frames=1)
+    frame = frames.collect()[0]
+    assert frame.decode_status == "genuine_mpng"
+    assert (frame.height, frame.width, frame.channels) == (16, 16, 1)
+    assert bytes(frame.pixels) == bytes(row.pixels)
+    feats = mm.image_features(mm.resize_image(frames)).collect()
+    assert [r.decode_status for r in feats] == ["genuine_mpng"]
 
 
 def _png_fixture(w, h, depth, color, raw, extra=b""):

@@ -11,7 +11,6 @@ from rio_toa_spark.operators.sampling import (
     hash_sample,
     mixture_sample,
     sample_unit,
-    split_train_eval,
     stratified_sample,
 )
 
@@ -39,15 +38,6 @@ def test_hash_sample_is_stable_across_partitionings(spark, docs):
         r.doc_id for r in hash_sample(docs.repartition(13, "text"), 0.2).collect()
     )
     assert a == b
-
-
-def test_split_train_eval_disjoint_exhaustive(spark, docs):
-    train, ev = split_train_eval(docs, eval_fraction=0.1, seed=3)
-    t = {r.doc_id for r in train.collect()}
-    e = {r.doc_id for r in ev.collect()}
-    assert not (t & e)
-    assert t | e == {r.doc_id for r in docs.select("doc_id").collect()}
-    assert 0 < len(e) < len(t)
 
 
 def test_stratified_rates_and_default_drop(spark, docs):

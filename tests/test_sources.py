@@ -1,12 +1,9 @@
-"""Source helpers: band-from-filename ingestion (SURVEY K9/S1) and the
-table loader."""
-
-import os
+"""Source helpers: band-from-filename ingestion (SURVEY K9/S1)."""
 
 import pyarrow.parquet as pq
 import pytest
 
-from rio_toa_spark.sources.tables import load_tables, read_band_files
+from rio_toa_spark.sources.tables import read_band_files
 
 
 def test_read_band_files_extracts_band(spark, fixture_paths, tmp_path):
@@ -30,9 +27,3 @@ def test_read_band_files_bad_template_raises(spark, tmp_path):
     p = str(tmp_path / "noband.parquet")
     with pytest.raises(ValueError, match="not a valid template"):
         read_band_files(spark, [p], template=r".*_B{b}\.parquet")
-
-
-def test_load_tables(spark):
-    tables = load_tables(spark, "/root/testdata/sf0.001")
-    assert set(tables) >= {"lineitem", "documents", "embeddings"}
-    assert tables["lineitem"].count() > 0
