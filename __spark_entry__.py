@@ -106,7 +106,7 @@ _SUPPLIER_CENTROIDS_SQL = (
 
 
 def _duck_spread(expr: str) -> str:
-    """DuckDB twin of spatial_join._spread_bits (Morton bit spread)."""
+    """DuckDB twin of the bit spread in spatial_join._morton_sql."""
     s = "((%s) & 65535)" % expr
     s = "(((%s) | ((%s) << 8)) & 16711935)" % (s, s)
     s = "(((%s) | ((%s) << 4)) & 252645135)" % (s, s)

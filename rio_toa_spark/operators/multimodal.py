@@ -391,10 +391,12 @@ def sample_video_frames(
                     except _PARSE_ERRORS:
                         decoded = None
                 if decoded is None:
-                    decoded = [
-                        (fi, _fake_decode(payload_bytes + bytes([fi])), "stub")
-                        for fi in range(n_frames)
-                    ]
+                    # seed: payload + the little-endian ordinal, one
+                    # byte below 256 and as many as it needs above
+                    decoded = []
+                    for fi in range(n_frames):
+                        seed = fi.to_bytes(max(1, (fi.bit_length() + 7) // 8), "little")
+                        decoded.append((fi, _fake_decode(payload_bytes + seed), "stub"))
                 for src, arr, status in decoded:
                     keys.append(media_key)
                     idxs.append(src)

@@ -48,34 +48,51 @@ DEFAULT_LEVEL = cell_mod.DEFAULT_LEVEL
 # ---------------------------------------------------------------- cells
 
 
-def _spread_bits(col: Column) -> Column:
-    """Interleave-ready bit spread (Morton), SQL-side — mirrors
-    cells._part1by1 so SQL and numpy agree bit-for-bit."""
-    col = col.bitwiseAND(F.lit(0xFFFF))
-    col = (col.bitwiseOR(F.shiftleft(col, 8))).bitwiseAND(F.lit(0x00FF00FF))
-    col = (col.bitwiseOR(F.shiftleft(col, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-    col = (col.bitwiseOR(F.shiftleft(col, 2))).bitwiseAND(F.lit(0x33333333))
-    col = (col.bitwiseOR(F.shiftleft(col, 1))).bitwiseAND(F.lit(0x55555555))
-    return col
-
-
-def grid_xy_expr(lon: Column, lat: Column, level: int = DEFAULT_LEVEL) -> tuple[Column, Column]:
+def _grid_sql(coord: str, level: int, lat: bool = False) -> str:
+    """SQL text of a coordinate's clamped level-L grid index — the
+    same double ops as cells.grid_xy, so SQL and numpy agree."""
     n = 1 << level
-    x = F.floor((lon - F.lit(-180.0)) / F.lit(360.0) * F.lit(n)).cast("long")
-    y = F.floor((lat - F.lit(-90.0)) / F.lit(180.0) * F.lit(n)).cast("long")
-    clamp = lambda c: F.greatest(F.lit(0), F.least(F.lit(n - 1), c))  # noqa: E731
-    return clamp(x), clamp(y)
+    origin, extent = (-90.0, 180.0) if lat else (-180.0, 360.0)
+    return "GREATEST(0, LEAST(%d, FLOOR((%s - (%rD)) / %rD * %d)))" % (n - 1, coord, origin, extent, n)
 
 
-def cell_expr(lon: Column, lat: Column, level: int = DEFAULT_LEVEL) -> Column:
-    """Native-SQL Morton cell id of a point — bit-identical to
-    cells.cell_of_points."""
-    x, y = grid_xy_expr(lon, lat, level)
-    return _spread_bits(x).bitwiseOR(F.shiftleft(_spread_bits(y), 1))
+def _morton_sql(x: str, y: str) -> str:
+    """SQL text of the Morton code of two grid indices — the bit spread
+    of cells._part1by1. Each spread step names its input twice (16
+    copies in all), so pass column or lambda names, not expressions."""
+
+    def spread(v: str) -> str:
+        v = "(%s & 65535)" % v
+        for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):
+            v = "((%s | (%s << %d)) & %d)" % (v, v, shift, mask)
+        return v
+
+    return "(%s | (%s << 1))" % (spread(x), spread(y))
+
+
+def _rect_cells_sql(x0: str, x1: str, y0: str, y1: str) -> str:
+    """SQL text of the array of Morton cells in a grid-index rectangle
+    (bounds inclusive), built in native higher-order functions."""
+    return "flatten(transform(sequence(%s, %s), _x -> transform(sequence(%s, %s), _y -> %s)))" % (
+        x0, x1, y0, y1, _morton_sql("_x", "_y"),
+    )
+
+
+def cell_expr(lon: str, lat: str, level: int = DEFAULT_LEVEL) -> str:
+    """SQL text of a point's Morton cell id — bit-identical to
+    cells.cell_of_points. It repeats the grid-index text 16 times per
+    axis; use ``with_cell`` to key a table, which projects the grid
+    indices first."""
+    return _morton_sql(_grid_sql(lon, level), _grid_sql(lat, level, lat=True))
 
 
 def with_cell(df: DataFrame, lon: str = "lon", lat: str = "lat", level: int = DEFAULT_LEVEL, out: str = "cell") -> DataFrame:
-    return df.withColumn(out, cell_expr(F.col(lon), F.col(lat), level))
+    """``df`` plus its points' Morton cell ids in column ``out``."""
+    return (
+        df.selectExpr("*", "%s AS _gx" % _grid_sql(lon, level), "%s AS _gy" % _grid_sql(lat, level, lat=True))
+        .withColumn(out, F.expr(_morton_sql("_gx", "_gy")))
+        .drop("_gx", "_gy")
+    )
 
 
 def cell_parent_expr(cell: Column, levels: int = 1) -> Column:
@@ -92,15 +109,17 @@ def scene_footprints(scenes_df: DataFrame) -> DataFrame:
     form of rio_toa/toa_utils.py:111-118)."""
     from rio_toa_spark.operators.toa import prepare_scenes
 
-    pm = F.col("mtl.L1_METADATA_FILE.PRODUCT_METADATA")
-    lats = [pm["CORNER_%s_LAT_PRODUCT" % c] for c in ("LL", "LR", "UR", "UL")]
-    lons = [pm["CORNER_%s_LON_PRODUCT" % c] for c in ("LL", "LR", "UR", "UL")]
-    return prepare_scenes(scenes_df).select(
+    pm = "mtl.L1_METADATA_FILE.PRODUCT_METADATA.CORNER_%s_%s_PRODUCT"
+
+    def corners(agg: str, axis: str, out: str) -> str:
+        return "%s(%s) AS %s" % (agg, ", ".join(pm % (c, axis) for c in ("LL", "LR", "UR", "UL")), out)
+
+    return prepare_scenes(scenes_df).selectExpr(
         "scene_id",
-        F.least(*lons).alias("fw"),
-        F.least(*lats).alias("fs"),
-        F.greatest(*lons).alias("fe"),
-        F.greatest(*lats).alias("fn"),
+        corners("least", "LON", "fw"),
+        corners("least", "LAT", "fs"),
+        corners("greatest", "LON", "fe"),
+        corners("greatest", "LAT", "fn"),
     )
 
 
@@ -108,39 +127,26 @@ def tile_footprints(tiles_df: DataFrame) -> DataFrame:
     """Distinct tile geometries (band-independent) with a stable
     sortable tile_id."""
     return (
-        tiles_df.select(
-            "scene_id",
-            "tile_row",
-            "tile_col",
-            F.col("bounds_w").alias("fw"),
-            F.col("bounds_s").alias("fs"),
-            F.col("bounds_e").alias("fe"),
-            F.col("bounds_n").alias("fn"),
+        tiles_df.selectExpr(
+            "scene_id", "tile_row", "tile_col", "bounds_w AS fw", "bounds_s AS fs", "bounds_e AS fe", "bounds_n AS fn"
         )
         .dropDuplicates(["scene_id", "tile_row", "tile_col"])
-        .withColumn(
-            "tile_id",
-            F.concat_ws("/", F.col("scene_id"), F.col("tile_row"), F.col("tile_col")),
-        )
+        .selectExpr("*", "concat_ws('/', scene_id, tile_row, tile_col) AS tile_id")
+    )
+
+
+def _cover_sql(w: str, s: str, e: str, n: str, level: int) -> str:
+    """SQL text of one row per cell covering the bbox (w, s, e, n):
+    its cells form a contiguous grid-index rectangle."""
+    return "explode(%s) AS cell" % _rect_cells_sql(
+        _grid_sql(w, level), _grid_sql(e, level), _grid_sql(s, level, lat=True), _grid_sql(n, level, lat=True)
     )
 
 
 def _explode_cover(footprints: DataFrame, level: int) -> DataFrame:
-    """footprint -> one row per covering cell. Covering cells of a
-    bbox form a contiguous grid-index rectangle; enumerate it with a
-    native sequence+transform (no Python on this side either)."""
-    n = 1 << level
-    x0, y0 = grid_xy_expr(F.col("fw"), F.col("fs"), level)
-    x1, y1 = grid_xy_expr(F.col("fe"), F.col("fn"), level)
-    out = (
-        footprints.withColumn("_xs", F.sequence(x0, x1))
-        .withColumn("_ys", F.sequence(y0, y1))
-        .withColumn("_x", F.explode("_xs"))
-        .withColumn("_y", F.explode("_ys"))
-        .withColumn("cell", _spread_bits(F.col("_x")).bitwiseOR(F.shiftleft(_spread_bits(F.col("_y")), 1)))
-        .drop("_xs", "_ys", "_x", "_y")
-    )
-    return out
+    """footprint (fw, fs, fe, fn) -> one row per covering cell, in
+    native SQL (no Python on this side either)."""
+    return footprints.selectExpr("*", _cover_sql("fw", "fs", "fe", "fn", level))
 
 
 def pip_join(
@@ -159,18 +165,12 @@ def pip_join(
     the DuckDB oracle's BETWEEN semantics.
     """
     fp_id_cols = [c for c in footprints_df.columns if c not in ("fw", "fs", "fe", "fn")]
-    pts = with_cell(points_df, lon, lat, level)
-
     if strategy == "index":
         return _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat)
 
+    pts = with_cell(points_df, lon, lat, level)
     cover = _explode_cover(footprints_df, level)
-    refine = (
-        (F.col(lon) >= F.col("fw"))
-        & (F.col(lon) <= F.col("fe"))
-        & (F.col(lat) >= F.col("fs"))
-        & (F.col(lat) <= F.col("fn"))
-    )
+    refine = "%s BETWEEN fw AND fe AND %s BETWEEN fs AND fn" % (lon, lat)
 
     if strategy == "broadcast":
         joined = pts.join(F.broadcast(cover), "cell").where(refine)
@@ -249,11 +249,7 @@ def knn_join(
     (ring r guarantees all tiles within (r) cells; a candidate set is
     complete once kth_dist <= r * min_cell_extent).
     """
-    tiles = tile_footprints(tiles_df).select(
-        "tile_id",
-        ((F.col("fw") + F.col("fe")) / 2).alias("cx"),
-        ((F.col("fs") + F.col("fn")) / 2).alias("cy"),
-    )
+    tiles = tile_footprints(tiles_df).selectExpr("tile_id", "(fw + fe) / 2 AS cx", "(fs + fn) / 2 AS cy")
     return knn_centroids(
         points_df, tiles, k=k, strategy=strategy, level=level,
         ring_radius=ring_radius, lon=lon, lat=lat, point_key=point_key,
@@ -286,7 +282,9 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     # including the ~0.5 KB html payloads — through Arrow into Python
     # (guide rule; measured 2.1 s -> 1.0 s on the 400k-page bench)
     points_df = points_df.select(point_key, lon, lat)
-    tile_rows = tiles.orderBy("tile_id").collect()
+    # Spark's ascending tile_id order, sorted on the driver: nulls
+    # first, then code-point order (which is Spark's UTF-8 byte order)
+    tile_rows = sorted(tiles.collect(), key=lambda r: (r.tile_id is not None, r.tile_id or ""))
     ids = [r.tile_id for r in tile_rows]
     cx = np.array([r.cx for r in tile_rows])
     cy = np.array([r.cy for r in tile_rows])
@@ -402,18 +400,14 @@ def _knn_cells(points_df, tiles, k, level, radius, lon, lat, point_key):
     n = 1 << level
     pts = with_cell(points_df, lon, lat, level)
 
-    tx, ty = grid_xy_expr(F.col("cx"), F.col("cy"), level)
-    cand = (
-        tiles.withColumn("_tx", tx)
-        .withColumn("_ty", ty)
-        .withColumn("_ox", F.explode(F.sequence(F.lit(-radius), F.lit(radius))))
-        .withColumn("_oy", F.explode(F.sequence(F.lit(-radius), F.lit(radius))))
-        .withColumn("_gx", F.col("_tx") + F.col("_ox"))
-        .withColumn("_gy", F.col("_ty") + F.col("_oy"))
-        .where((F.col("_gx") >= 0) & (F.col("_gx") < n) & (F.col("_gy") >= 0) & (F.col("_gy") < n))
-        .withColumn("cell", _spread_bits(F.col("_gx")).bitwiseOR(F.shiftleft(_spread_bits(F.col("_gy")), 1)))
-        .select("tile_id", "cx", "cy", "cell")
+    # every cell within Chebyshev radius R of the centroid's cell,
+    # clipped to the grid
+    gx, gy = _grid_sql("cx", level), _grid_sql("cy", level, lat=True)
+    ring = _rect_cells_sql(
+        "GREATEST(%s - %d, 0)" % (gx, radius), "LEAST(%s + %d, %d)" % (gx, radius, n - 1),
+        "GREATEST(%s - %d, 0)" % (gy, radius), "LEAST(%s + %d, %d)" % (gy, radius, n - 1),
     )
+    cand = tiles.selectExpr("tile_id", "cx", "cy", "explode(%s) AS cell" % ring)
     # rank on squared distance (same order as dist up to IEEE sqrt
     # rounding collisions — d^2 is strictly more discriminating, and
     # the broadcast kernel + SQL twin rank identically on d^2)

@@ -32,23 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rio_toa_spark.operators import binary_rows, map_arrow
-from rio_toa_spark.operators.spatial_join import (
-    DEFAULT_LEVEL,
-    _explode_cover,
-    cell_expr,
-)
+from rio_toa_spark.operators.spatial_join import DEFAULT_LEVEL, _cover_sql, _explode_cover, cell_expr
 
 
 def _tile_cover_cells(tiles_df: DataFrame, level: int) -> DataFrame:
     """Explode each tile row to its covering cells (bounds_* bbox)."""
-    renamed = tiles_df.select(
-        "*",
-        F.col("bounds_w").alias("fw"),
-        F.col("bounds_s").alias("fs"),
-        F.col("bounds_e").alias("fe"),
-        F.col("bounds_n").alias("fn"),
-    )
-    return _explode_cover(renamed, level).drop("fw", "fs", "fe", "fn")
+    return tiles_df.selectExpr("*", _cover_sql("bounds_w", "bounds_s", "bounds_e", "bounds_n", level))
 
 
 _PARTIAL_FIELDS = [
@@ -63,7 +52,6 @@ _PARTIAL_FIELDS = [
 def dn_histogram(
     tiles_df: DataFrame,
     n_buckets: int = 16,
-    include_nodata: bool = False,
 ) -> DataFrame:
     """Per-(scene, band) histogram of uint16 DN values over
     ``n_buckets`` equal-width buckets of [0, 65536).
@@ -80,7 +68,7 @@ def dn_histogram(
     if n_buckets & (n_buckets - 1):
         raise ValueError("n_buckets must be a power of two, got %d" % n_buckets)
     shift = 16 - int(np.log2(n_buckets))
-    drop_nodata = (not include_nodata) and "nodata" in tiles_df.columns
+    drop_nodata = "nodata" in tiles_df.columns
 
     schema = T.StructType(
         [
@@ -138,20 +126,13 @@ def zonal_stats(
     zcover = _explode_cover(zones_df, level)
     tcover = _tile_cover_cells(tiles_df, level)
 
-    overlap = (
-        (F.col("bounds_w") <= F.col("fe"))
-        & (F.col("bounds_e") >= F.col("fw"))
-        & (F.col("bounds_s") <= F.col("fn"))
-        & (F.col("bounds_n") >= F.col("fs"))
+    # bbox overlap, and the canonical cell of the intersection's SW
+    # corner: keeps each (tile, zone) pair exactly once without a
+    # dedup shuffle
+    keep = "bounds_w <= fe AND bounds_e >= fw AND bounds_s <= fn AND bounds_n >= fs AND cell = %s" % cell_expr(
+        "GREATEST(bounds_w, fw)", "GREATEST(bounds_s, fs)", level
     )
-    # canonical cell of the intersection's SW corner: keeps each
-    # (tile, zone) pair exactly once without a dedup shuffle
-    canonical = F.col("cell") == cell_expr(
-        F.greatest(F.col("bounds_w"), F.col("fw")),
-        F.greatest(F.col("bounds_s"), F.col("fs")),
-        level,
-    )
-    joined = tcover.join(F.broadcast(zcover), "cell").where(overlap & canonical)
+    joined = tcover.join(F.broadcast(zcover), "cell").where(keep)
 
     out_schema = T.StructType([zones_df.schema[zone_key]] + _PARTIAL_FIELDS)
 
@@ -205,18 +186,11 @@ def zonal_stats(
     return (
         partials.groupBy(zone_key, "band")
         .agg(
-            F.sum("px_count").alias("px_count"),
-            F.sum("px_sum").alias("px_sum"),
-            F.min("px_min").alias("px_min"),
-            F.max("px_max").alias("px_max"),
+            F.expr("sum(px_count) AS px_count"),
+            F.expr("sum(px_sum) AS px_sum"),
+            F.expr("min(px_min) AS px_min"),
+            F.expr("max(px_max) AS px_max"),
         )
-        .where(F.col("px_count") > 0)
-        .select(
-            zone_key,
-            "band",
-            "px_count",
-            (F.col("px_sum") / F.col("px_count")).alias("px_mean"),
-            "px_min",
-            "px_max",
-        )
+        .where("px_count > 0")
+        .selectExpr(zone_key, "band", "px_count", "px_sum / px_count AS px_mean", "px_min", "px_max")
     )

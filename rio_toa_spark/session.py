@@ -18,6 +18,14 @@ on a single host:
   ``$SPARK_GRAFT_SHUFFLE``, else ``DEFAULT_SHUFFLE_PARTITIONS`` (32,
   whatever the core count; AQE coalesces after a shuffle). Sizing it
   from the cores and the per-task Python cost is ROADMAP #1.
+* PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every decorated DataFrame / Column call walks the Python stack,
+  imports IPython (~27 MB and ~540 modules in the driver), retries a
+  missing ``ipykernel`` import and makes ~6 extra JVM round trips to
+  set and clear the JVM-side origin, all to attach a call site that
+  would only point at this package's internals. Building an operator
+  plan is hundreds of such calls.
 """
 
 from __future__ import annotations
@@ -55,6 +63,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

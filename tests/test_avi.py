@@ -127,6 +127,20 @@ def test_sample_video_frames_corrupt_avi_falls_back(spark):
         assert bytes(r.pixels) == mm._fake_decode(payload + bytes([r.frame_idx])).tobytes()
 
 
+def test_sample_video_frames_stub_beyond_256_frames(spark):
+    # the stub seed grows past one ordinal byte: a fan-out above 256
+    # still yields every row, and ordinals below 256 keep their seed
+    payload = b"not a video"
+    df = spark.createDataFrame([(1, payload)], "media_id int, payload binary")
+    rows = mm.sample_video_frames(df, n_frames=300).collect()
+    assert sorted(r.frame_idx for r in rows) == list(range(300))
+    assert {r.decode_status for r in rows} == {"stub"}
+    by_idx = {r.frame_idx: bytes(r.pixels) for r in rows}
+    assert by_idx[255] == mm._fake_decode(payload + bytes([255])).tobytes()
+    assert by_idx[256] == mm._fake_decode(payload + b"\x00\x01").tobytes()
+    assert len(set(by_idx.values())) == 300
+
+
 def test_avi_ignores_interleaved_audio_chunks():
     # real AVIs interleave audio ('01wb') between video frames; the
     # frame walk must skip them without losing stream order

@@ -150,9 +150,14 @@ def test_zonal_partials_single_shuffle(spark, tiles_df, scenes_df):
 
 def test_cell_expr_is_native(spark, pages_df):
     """The Morton cell id must be pure Catalyst expressions (no
-    BatchEvalPython / ArrowEvalPython nodes)."""
-    plan = _plan(sj.with_cell(pages_df, level=7).select("cell"))
+    BatchEvalPython / ArrowEvalPython nodes), and the grid indices are
+    computed once each: the bit spread names its input 16 times, so a
+    spread over the unprojected FLOOR would repeat it."""
+    df = sj.with_cell(pages_df, level=7).select("cell")
+    plan = _plan(df)
     assert "EvalPython" not in plan
+    optimized = _optimized(df)
+    assert optimized.upper().count("FLOOR(") <= 2, optimized
 
 
 def test_fixture_row_groups_splittable(fixture_paths):
@@ -294,3 +299,48 @@ def test_arrow_batch_record_bound_small_rows(spark):
     coalescing of their own."""
     shapes = _arrow_batch_shapes(spark.range(25_000, numPartitions=1))
     assert max(r for r, _ in shapes) == 10_000
+
+
+_DRIVER_PROBE = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from rio_toa_spark.session import get_spark
+from rio_toa_spark.operators.spatial_join import pip_join
+
+spark = get_spark(master="local[2]", extra_conf={"spark.driver.memory": "1g"})
+pts = spark.createDataFrame(
+    [("a", 1.0, 1.0), ("b", 50.0, 50.0)], "url string, lon double, lat double"
+)
+fps = spark.createDataFrame(
+    [("s", 0.0, 0.0, 2.0, 2.0)], "scene_id string, fw double, fs double, fe double, fn double"
+)
+rows = [(r.url, r.scene_id) for r in pip_join(pts, fps).collect()]
+print(json.dumps({
+    "rows": rows,
+    "ipython": "IPython" in sys.modules,
+    "debugging": spark.conf.get("spark.python.sql.dataFrameDebugging.enabled"),
+}))
+spark.stop()
+"""
+
+
+def test_driver_skips_call_site_capture():
+    """A fresh driver that builds and runs a pip_join never imports
+    IPython: the session turns PySpark's per-call call-site capture
+    off (it imports IPython on first use and walks the stack on every
+    DataFrame call)."""
+    import importlib.util
+    import json
+    import os
+    import subprocess
+    import sys
+
+    if importlib.util.find_spec("IPython") is None:
+        pytest.skip("IPython is not installed, so it cannot be imported either")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _DRIVER_PROBE, root],
+        capture_output=True, text=True, timeout=600, check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"rows": [["a", "s"]], "ipython": False, "debugging": "false"}

@@ -15,17 +15,29 @@ from rio_toa_spark.spatial import cells as cell_mod
 LEVEL = 7
 
 
-def test_cell_expr_matches_numpy(spark, pages_df):
+# the world box's corners and edge midpoints, and points outside it
+# on every side (the clamp)
+_EDGE_POINTS = [
+    (lon, lat)
+    for lon in (-200.0, -180.0, -179.999, 0.0, 179.999, 180.0, 250.0)
+    for lat in (-95.0, -90.0, -89.999, 0.0, 89.999, 90.0, 120.0)
+]
+
+
+@pytest.mark.parametrize("level", [1, 6, 7, 8, 12, 16])
+def test_cell_expr_matches_numpy(spark, pages_df, level):
+    edges = spark.createDataFrame(_EDGE_POINTS, "lon double, lat double")
     rows = (
-        sj.with_cell(pages_df, level=LEVEL)
+        sj.with_cell(pages_df.select("lon", "lat").unionByName(edges), level=level)
         .select("lon", "lat", "cell")
         .collect()
     )
     lon = np.array([r.lon for r in rows])
     lat = np.array([r.lat for r in rows])
-    expected = cell_mod.cell_of_points(lon, lat, LEVEL)
+    expected = cell_mod.cell_of_points(lon, lat, level)
     got = np.array([r.cell for r in rows])
     assert np.array_equal(got, expected)
+    assert got.max() == (1 << 2 * level) - 1  # the (180, 90) corner
 
 
 def test_morton_roundtrip():

@@ -115,13 +115,14 @@ def test_dn_histogram_conserves_pixels(spark, tiles_df):
     from rio_toa_spark.operators.zonal import dn_histogram
     from pyspark.sql import functions as F2
 
-    total = (
-        dn_histogram(tiles_df, n_buckets=4, include_nodata=True)
-        .agg(F2.sum("n"))
-        .collect()[0][0]
+    total = dn_histogram(tiles_df, n_buckets=4).agg(F2.sum("n")).collect()[0][0]
+    nodata = sum(
+        int(np.count_nonzero(np.frombuffer(t.pixels, np.uint16) == t.nodata))
+        for t in tiles_df.select("pixels", "nodata").collect()
     )
+    assert nodata > 0
     t0 = tiles_df.select("width", "height").collect()
-    assert total == sum(r.width * r.height for r in t0)
+    assert total + nodata == sum(r.width * r.height for r in t0)
 
 
 def test_dn_histogram_rejects_non_power_of_two(spark, tiles_df):
