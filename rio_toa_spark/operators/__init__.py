@@ -3,6 +3,7 @@ similarity search, text analysis."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -37,3 +38,19 @@ def binary_rows(batch, binary: str = "pixels"):
     cells = batch.column(binary)
     for i, row in enumerate(batch.drop_columns([binary]).to_pylist()):
         yield row, cells[i].as_buffer()
+
+
+def binary_offsets(sizes):
+    """int32 Arrow offsets for binary cells of the given byte sizes:
+    the write-side twin of ``binary_rows``, for a kernel that writes
+    one batch's binary outputs into a single buffer and wraps it with
+    ``pa.Array.from_buffers(pa.binary(), n, [None, offsets, data])``.
+    Raises ValueError when the cells together pass the int32 offset
+    range of ``pa.binary()``."""
+    offsets = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            "binary column of %d bytes passes the int32 offset range" % offsets[-1]
+        )
+    return offsets.astype(np.int32)

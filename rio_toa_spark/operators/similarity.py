@@ -44,18 +44,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _seq_fold_sums(P: np.ndarray) -> np.ndarray:
-    """Sequential left-to-right float64 sums over each row of P with a
-    0.0 initial accumulator — the bit-exact numpy replay of
-    ``F.aggregate(arr, lit(0.0), acc + x)`` (np.add.accumulate is
-    defined as r[i] = r[i-1] + a[i], i.e. the identical IEEE op
-    order; the prepended 0.0 column reproduces the fold's ``0.0 + x0``
-    first step, which matters only for the sign of an all-zero sum)."""
+def _seq_fold_sums(P: np.ndarray, q: np.ndarray | None = None) -> np.ndarray:
+    """Per row of P, the bit-exact numpy replay of ``dot(row, q)``
+    (``dot(row, row)`` when q is None): the float64 products
+    ``P[:, c] * q[c]`` folded left to right into a 0.0 accumulator,
+    the IEEE op order of ``F.aggregate(arr, lit(0.0), acc + x)``. The
+    ``0.0 + x0`` first step matters only for the sign of an all-zero
+    sum. P may be float32: each column widens exactly to float64
+    before its multiply, as the SQL fold casts before multiplying.
+
+    Column by column into one length-n accumulator, so the working set
+    is two length-n float64 vectors, never an (n x d) product."""
     n, d = P.shape
-    buf = np.empty((n, d + 1), dtype=np.float64)
-    buf[:, 0] = 0.0
-    buf[:, 1:] = P
-    return np.cumsum(buf, axis=1)[:, -1]
+    acc = np.zeros(n)
+    x = np.empty(n)
+    for c in range(d):
+        x[:] = P[:, c]
+        x *= x if q is None else q[c]
+        acc += x
+    return acc
 
 
 def _desc_order_key(c: np.ndarray) -> np.ndarray:
@@ -77,15 +84,14 @@ def _batch_topk_scores(V32, keys, Q, qn, k, per_query_rows=None):
 
     per_query_rows: optional list of row-index arrays restricting each
     query to a candidate subset (the IVF probe filter); None = all."""
-    V = V32.astype(np.float64, copy=False)
-    nv = np.sqrt(_seq_fold_sums(V * V))
+    nv = np.sqrt(_seq_fold_sums(V32))
     out_q, out_k, out_c = [], [], []
     for j in range(len(Q)):
         rows = per_query_rows[j] if per_query_rows is not None else None
-        Vj = V if rows is None else V[rows]
+        Vj = V32 if rows is None else V32[rows]
         if Vj.shape[0] == 0:
             continue
-        dots = _seq_fold_sums(Vj * Q[j][None, :])
+        dots = _seq_fold_sums(Vj, Q[j])
         denom = (nv if rows is None else nv[rows]) * qn[j]
         with np.errstate(invalid="ignore", divide="ignore"):
             cos = dots / denom
@@ -139,7 +145,7 @@ def _collect_queries(queries_df: DataFrame, q_key: str, q_vec: str):
     if not rows:
         return ids, np.zeros((0, 0)), np.zeros(0)
     Q = np.array([r[1] for r in rows], dtype=np.float64)
-    qn = np.sqrt(_seq_fold_sums(Q * Q))
+    qn = np.sqrt(_seq_fold_sums(Q))
     return ids, Q, qn
 
 

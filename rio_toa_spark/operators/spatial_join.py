@@ -275,6 +275,75 @@ def knn_centroids(
     raise ValueError("unknown strategy %r" % strategy)
 
 
+# Point-block budget of the broadcast kNN kernel, in elements of one
+# (block x centroids) float64 temporary: 2^16 elements = 512 KiB, so
+# the distance block and its argpartition index stay L2-resident
+# across every pass over them. An Arrow batch of ~10k points against T
+# centroids would otherwise materialize an (n x T) distance matrix
+# (~0.5 GB at T=6k) and stream it through six elementwise + selection
+# passes from DRAM. A floor of 32 points keeps the per-block numpy
+# call overhead small when T is large.
+KNN_BLOCK_ELEMS = 1 << 16
+
+
+def _knn_topk(px, py, tx, ty, k):
+    """The k nearest centroids of every point, exact: (n x kk) indices
+    into (tx, ty) in (d^2, index) order and their squared distances,
+    kk = min(k, len(tx)). Points go through in blocks of
+    KNN_BLOCK_ELEMS // len(tx) (at least 32) into preallocated
+    outputs. Bitwise-neutral: every op is row-local, so blocking
+    changes no IEEE result."""
+    T = len(tx)
+    kk = min(k, T)
+    m = min(4 * kk, T - 1)
+    bs = max(32, KNN_BLOCK_ELEMS // T)
+    n = len(px)
+    order = np.empty((n, kk), dtype=np.intp)
+    svals = np.empty((n, kk))
+    for s in range(0, n, bs):
+        order[s : s + bs], svals[s : s + bs] = _knn_block(
+            px[s : s + bs], py[s : s + bs], tx, ty, kk, m
+        )
+    return order, svals
+
+
+def _knn_block(px, py, tx, ty, kk, m):
+    """Top-kk centroids of one point block (see _knn_topk); m is the
+    argpartition pivot, 4 * kk capped at T - 1."""
+    T = len(tx)
+    # squared distance in place; rank on d^2 (monotone), take sqrt
+    # only of the k selected values -- sqrt(d^2) is the identical IEEE
+    # double as sorting on d
+    d2 = px[:, None] - tx[None, :]
+    d2 *= d2
+    dy = py[:, None] - ty[None, :]
+    dy *= dy
+    d2 += dy
+    del dy
+    # top-k via argpartition (O(T)) instead of a full row sort
+    # (O(T log T), 3x slower at T=384); deterministic (dist, tile_id)
+    # order restored by a lexsort of the slice.
+    part = np.argpartition(d2, m, axis=1)[:, : m + 1]
+    vals = np.take_along_axis(d2, part, axis=1)
+    fix = np.lexsort((part, vals), axis=1)[:, :kk]
+    order = np.take_along_axis(part, fix, axis=1)
+    svals = np.take_along_axis(vals, fix, axis=1)
+    # exactness guard: if the kth value reaches the slice's max, ties
+    # may extend past the partition window -- redo those rows with the
+    # full stable sort
+    if m + 1 < T:
+        slice_max = vals.max(axis=1)
+        risky = np.nonzero(svals[:, kk - 1] >= slice_max)[0]
+        if risky.size:
+            full = np.lexsort(
+                (np.broadcast_to(np.arange(T), (risky.size, T)), d2[risky]),
+                axis=1,
+            )[:, :kk]
+            order[risky] = full
+            svals[risky] = np.take_along_axis(d2[risky], full, axis=1)
+    return order, svals
+
+
 def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     spark = points_df.sparkSession
     # project BEFORE the opaque kernel: Spark cannot see which columns
@@ -302,57 +371,8 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     def run(batches):
         tids, tx, ty = bc.value
         tid_arr = np.array(tids)
-        T = len(tids)
-        if T == 0:  # no centroids -> no neighbors (not an error)
+        if not tids:  # no centroids -> no neighbors (not an error)
             return
-        kk = min(k, T)
-        m = min(4 * kk, T - 1)
-        # cache blocking: an Arrow batch of ~10k points against T
-        # centroids materializes an (n x T) f64 distance matrix —
-        # ~0.5 GB at T=6k — and streams it through SIX elementwise +
-        # selection passes, making the kernel DRAM-bandwidth-bound
-        # (the worst scaler on a shared-memory box, BENCH.md). Points
-        # are processed in sub-blocks sized so the two (bs x T)
-        # temporaries stay L2/L3-resident across all passes: measured
-        # 2.6x single-thread at T=6144 (22.5s -> 8.7s / 100k points,
-        # flat from bs~170 down to 64) and a much flatter 2->8-core
-        # curve. Bitwise-neutral: every op is row-local, so blocking
-        # changes no IEEE result.
-        bs = max(32, (1 << 20) // T)
-
-        def topk_block(px, py):
-            # squared distance in place (2 temporaries, not 5); rank
-            # on d^2 (monotone), take sqrt only of the k selected
-            # values — sqrt(d^2) is the identical IEEE double as
-            # sorting on d
-            d2 = px[:, None] - tx[None, :]
-            d2 *= d2
-            dy = py[:, None] - ty[None, :]
-            dy *= dy
-            d2 += dy
-            # top-k via argpartition (O(T)) instead of a full row sort
-            # (O(T log T), 3x slower at T=384); deterministic
-            # (dist, tile_id) order restored by a lexsort of the slice.
-            part = np.argpartition(d2, m, axis=1)[:, : m + 1]
-            vals = np.take_along_axis(d2, part, axis=1)
-            fix = np.lexsort((part, vals), axis=1)[:, :kk]
-            order = np.take_along_axis(part, fix, axis=1)
-            svals = np.take_along_axis(vals, fix, axis=1)
-            # exactness guard: if the kth value reaches the slice's
-            # max, ties may extend past the partition window — redo
-            # those rows with the full stable sort
-            if m + 1 < T:
-                slice_max = vals.max(axis=1)
-                risky = np.nonzero(svals[:, kk - 1] >= slice_max)[0]
-                if risky.size:
-                    full = np.lexsort(
-                        (np.broadcast_to(np.arange(T), (risky.size, T)), d2[risky]),
-                        axis=1,
-                    )[:, :kk]
-                    order[risky] = full
-                    svals[risky] = np.take_along_axis(d2[risky], full, axis=1)
-            return order, svals
-
         for batch in batches:
             keys = batch.column(point_key).to_numpy(zero_copy_only=False)
             px = batch.column(lon).to_numpy(zero_copy_only=False)
@@ -360,13 +380,8 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
             n = len(px)
             if not n:
                 continue
-            orders, sv = [], []
-            for s in range(0, n, bs):
-                o, v = topk_block(px[s : s + bs], py[s : s + bs])
-                orders.append(o)
-                sv.append(v)
-            order = np.concatenate(orders)
-            svals = np.concatenate(sv)
+            order, svals = _knn_topk(px, py, tx, ty, k)
+            kk = order.shape[1]
             yield {
                 point_key: np.repeat(keys, kk),
                 "tile_id": tid_arr[order].ravel(),

@@ -36,13 +36,14 @@ Scalability notes:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rio_toa_spark.functions import kernels, sun
 from rio_toa_spark.functions.mtl import mtl_band_value, with_parsed_mtl
-from rio_toa_spark.operators import binary_rows, map_arrow
+from rio_toa_spark.operators import binary_offsets, binary_rows, map_arrow
 
 TILE_KEY = ["scene_id", "band", "tile_row", "tile_col"]
 
@@ -81,23 +82,38 @@ def _nodata_of(value) -> int | None:
     return None if value is None or (isinstance(value, float) and np.isnan(value)) else int(value)
 
 
+def _toa_batches(batches, dst_dtype: str, compute):
+    """The TOA runner over Arrow batches: per batch, ONE output buffer
+    sized from each tile's ``height * width * itemsize``; ``compute``
+    gets each tile's zero-copy uint16 DN array, the row's scalar
+    columns and the tile's (height, width) view of that buffer to
+    write into. The buffer becomes the ``pixels`` column as is: no
+    per-tile bytes object, no copy into the Arrow array."""
+    np_dtype = np.dtype(dst_dtype)
+    for batch in batches:
+        n = batch.num_rows
+        heights = batch.column("height").to_numpy(zero_copy_only=False)
+        widths = batch.column("width").to_numpy(zero_copy_only=False)
+        offsets = binary_offsets(heights.astype(np.int64) * widths * np_dtype.itemsize)
+        data = np.empty(int(offsets[-1]), dtype=np.uint8)
+        for i, (row, buf) in enumerate(binary_rows(batch)):
+            shape = (row["height"], row["width"])
+            out = data[offsets[i] : offsets[i + 1]].view(np_dtype).reshape(shape)
+            compute(np.frombuffer(buf, "<u2").reshape(shape), row, out)
+        cols = {c: batch.column(c) for c in TILE_KEY + ["width", "height"]}
+        cols["dtype"] = [dst_dtype] * n
+        cols["pixels"] = pa.Array.from_buffers(
+            pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+        )
+        yield cols
+
+
 def _arrow_toa_op(src: DataFrame, dst_dtype: str, compute) -> DataFrame:
-    """Shared TOA runner: per tile, hand ``compute`` the zero-copy
-    uint16 DN array plus the row's scalar columns, and emit the output
-    buffer bytes under the tile key."""
-
-    def run(batches):
-        for batch in batches:
-            out = [
-                compute(np.frombuffer(buf, "<u2").reshape(row["height"], row["width"]), row)
-                for row, buf in binary_rows(batch)
-            ]
-            cols = {c: batch.column(c) for c in TILE_KEY + ["width", "height"]}
-            cols["dtype"] = [dst_dtype] * batch.num_rows
-            cols["pixels"] = out
-            yield cols
-
-    return map_arrow(src, run, TOA_OUT_SCHEMA)
+    """Shared TOA operator: ``_toa_batches`` over ``src`` through
+    ``map_arrow``, emitting the output pixels under the tile key."""
+    return map_arrow(
+        src, lambda batches: _toa_batches(batches, dst_dtype, compute), TOA_OUT_SCHEMA
+    )
 
 
 def radiance_tiles(
@@ -121,14 +137,12 @@ def radiance_tiles(
     src = tiles_df.filter(F.col("band") == band).join(F.broadcast(dim), "scene_id")
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, row):
-        arr = np.empty(dn.shape, dtype=np_dtype)
+    def compute(dn, row, out):
         ml, al, nodata = row["c_ml"], row["c_al"], _nodata_of(row["nodata"])
         for r0, r1 in _strips(dn.shape[0]):
-            arr[r0:r1] = kernels.rescale(
+            out[r0:r1] = kernels.rescale(
                 kernels.radiance(dn[r0:r1], ml, al, nodata), factor, np_dtype, clip=clip
             )
-        return arr.tobytes()
 
     return _arrow_toa_op(src, dst_dtype, compute)
 
@@ -174,11 +188,11 @@ def reflectance_tiles(
 
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, row):
+    def compute(dn, row, out):
         rows_, cols_ = dn.shape
         nodata = _nodata_of(row["nodata"])
         ml, al = row["c_ml"], row["c_al"]
-        arr = np.empty((1, rows_, cols_), dtype=np_dtype)
+        arr = out[np.newaxis]  # the depth-1 band stack
         if per_pixel_sun:
             bbox = [row["bounds_w"], row["bounds_s"], row["bounds_e"], row["bounds_n"]]
             date_s, time_s = row["c_date"], row["c_time"]
@@ -198,7 +212,6 @@ def reflectance_tiles(
                 np_dtype,
                 clip=clip,
             )
-        return arr.tobytes()
 
     return _arrow_toa_op(src, dst_dtype, compute)
 
@@ -229,15 +242,13 @@ def brightness_temp_tiles(
 
     np_dtype = np.dtype(dst_dtype)
 
-    def compute(dn, row):
-        arr = np.empty(dn.shape, dtype=np_dtype)
+    def compute(dn, row, out):
         ml, al, k1, k2 = row["c_ml"], row["c_al"], row["c_k1"], row["c_k2"]
         for r0, r1 in _strips(dn.shape[0]):
-            arr[r0:r1] = kernels.temp_rescale(
+            out[r0:r1] = kernels.temp_rescale(
                 kernels.brightness_temp(dn[r0:r1], ml, al, k1, k2, src_nodata),
                 temp_scale,
             ).astype(np_dtype)
-        return arr.tobytes()
 
     return _arrow_toa_op(src, dst_dtype, compute)
 

@@ -385,3 +385,86 @@ def test_char_trigram_scores_linear_formulation(spark):
     for lang, grams in textstats.CHAR_TRIGRAM_PROFILES.items():
         exp = sum(occurrences(t, g) for g in grams) / (len(t) - 2)
         assert row.s[lang] == pytest.approx(exp, abs=1e-12), lang
+
+
+def _fold_rows():
+    """float32 rows for the fold tests: random rows of varied scale,
+    signed zeros, float32 subnormals, +-inf and NaN."""
+    rng = np.random.default_rng(31)
+    d = 9
+    rows = list(
+        rng.standard_normal((24, d)) * 10.0 ** rng.integers(-30, 30, (24, 1))
+    )
+    tiny = np.float32(1e-45)  # the smallest float32 subnormal
+    rows += [
+        np.zeros(d),
+        np.full(d, -0.0),
+        np.array([-0.0, 0.0] * 4 + [-0.0]),
+        np.array([tiny, -tiny, 1e-40, -3e-42, 1e-39, tiny, 0.0, -0.0, 2e-38]),
+        np.r_[np.inf, np.ones(d - 1)],
+        np.r_[np.ones(d - 1), -np.inf],
+        np.r_[np.inf, -np.inf, np.ones(d - 2)],
+        np.r_[np.ones(3), np.nan, np.ones(d - 4)],
+    ]
+    q = rng.standard_normal(d)
+    q[[2, 5]] = [0.0, -0.0]
+    q[7] = 1e-40
+    # zeros signed against q: every product is -0.0, so only the fold's
+    # 0.0 start makes the sum +0.0
+    rows.append(np.where(np.signbit(q), 0.0, -0.0))
+    return np.array(rows, dtype=np.float32), q.astype(np.float32)
+
+
+def _assert_bitwise(got, expected):
+    got, expected = np.asarray(got, dtype=np.float64), np.asarray(expected)
+    nan = np.isnan(expected)
+    assert np.array_equal(np.isnan(got), nan)  # NaN payloads may differ
+    assert np.array_equal(got[~nan].view(np.uint64), expected[~nan].view(np.uint64))
+
+
+def test_seq_fold_sums_bitwise_matches_spark_dot(spark):
+    """_seq_fold_sums, plain (dot(row, row)) and query-weighted
+    (dot(row, q)), is Spark's own similarity.dot fold bit for bit,
+    including the sign of zero sums, subnormal inputs, inf/NaN and
+    empty vectors: the exactness the cosine oracles rely on."""
+    A, q = _fold_rows()
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in a], [float(x) for x in q]) for i, a in enumerate(A)],
+        "i int, a array<float>, q array<float>",
+    )
+    rows = (
+        df.select("i", similarity.dot(F.col("a"), F.col("a")).alias("aa"),
+                  similarity.dot(F.col("a"), F.col("q")).alias("aq"))
+        .orderBy("i")
+        .collect()
+    )
+    assert [r.i for r in rows] == list(range(len(A)))
+    _assert_bitwise([r.aa for r in rows], similarity._seq_fold_sums(A))
+    _assert_bitwise([r.aq for r in rows], similarity._seq_fold_sums(A, q.astype(np.float64)))
+
+    empty = spark.createDataFrame([(i, [], []) for i in range(3)], "i int, a array<float>, q array<float>")
+    zeros = [r.z for r in empty.select(similarity.dot(F.col("a"), F.col("q")).alias("z")).collect()]
+    E = np.zeros((3, 0), dtype=np.float32)
+    _assert_bitwise(zeros, similarity._seq_fold_sums(E, np.zeros(0)))
+    _assert_bitwise(zeros, similarity._seq_fold_sums(E))
+
+
+def test_batch_topk_scores_memory_budget():
+    """Scoring an 8,000 x 64 float32 batch against 8 queries folds
+    column by column: no float64 copy of the batch, no (n x d) product
+    and no cumsum buffer (each 4 MB; ~13-21 MB traced when built)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(8)
+    V32 = rng.standard_normal((8000, 64)).astype(np.float32)
+    Q = rng.standard_normal((8, 64)).astype(np.float32).astype(np.float64)
+    qn = np.sqrt(similarity._seq_fold_sums(Q))
+    keys = np.arange(8000)
+    tracemalloc.start()
+    try:
+        out_q, out_k, out_c = similarity._batch_topk_scores(V32, keys, Q, qn, 5)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(out_q) == 8 and all(len(c) == 5 for c in out_c)
+    assert peak < 2 * 2**20, peak

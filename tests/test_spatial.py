@@ -231,3 +231,63 @@ def test_knn_broadcast_empty_centroids(spark):
     pts = spark.createDataFrame([("p", 0.0, 0.0)], "url string, lon double, lat double")
     cents = spark.createDataFrame([], "tile_id string, cx double, cy double")
     assert sj.knn_centroids(pts, cents, k=3, strategy="broadcast").count() == 0
+
+
+def test_knn_broadcast_many_blocks_ties_at_block_edges(spark):
+    """2,560 lattice centroids put the point block at its floor of 32,
+    so one Arrow batch of 1,200 points runs as 38 blocks. Every third
+    point is a cell center (four centroids tie at d^2 = 0.5, k=3 cuts
+    the tie) and every third an edge midpoint (ties at 0.25 and 1.25),
+    so exact ties sit on both sides of every block edge; ids are
+    shuffled against the lattice order. Matches a numpy brute force
+    on (d^2, tile_id) exactly."""
+    rng = np.random.default_rng(2048)
+    gx, gy = np.meshgrid(np.arange(-32, 32), np.arange(-20, 20))
+    cx, cy = gx.ravel().astype(float), gy.ravel().astype(float)
+    ids = np.array(["t%05d" % i for i in rng.permutation(len(cx))])
+    assert len(cx) * 32 > sj.KNN_BLOCK_ELEMS  # block at its floor of 32
+    pts = []
+    for i in range(1200):
+        x, y = float(rng.integers(-32, 31)), float(rng.integers(-20, 19))
+        if i % 3 == 0:
+            x, y = x + 0.5, y + 0.5
+        elif i % 3 == 1:
+            x = x + 0.5
+        else:
+            x, y = x + rng.uniform(0, 1), y + rng.uniform(0, 1)
+        pts.append(("p%04d" % i, x, y))
+    k = 3
+    cents = spark.createDataFrame(
+        [(str(t), float(a), float(b)) for t, a, b in zip(ids, cx, cy)],
+        "tile_id string, cx double, cy double",
+    )
+    points = spark.createDataFrame(pts, "url string, lon double, lat double").coalesce(1)
+    got = {
+        (r.url, r.rank): (r.tile_id, r.dist)
+        for r in sj.knn_centroids(points, cents, k=k, strategy="broadcast").collect()
+    }
+    expected = {}
+    for url, x, y in pts:
+        d2 = (x - cx) ** 2 + (y - cy) ** 2
+        for rank, j in enumerate(np.lexsort((ids, d2))[:k], start=1):
+            expected[(url, rank)] = (str(ids[j]), float(np.sqrt(d2[j])))
+    assert got == expected
+
+
+def test_knn_block_step_memory_budget():
+    """A 10k-point batch against 384 centroids stays within a few
+    L2-sized (block x centroids) temporaries plus its outputs: blocks
+    of 2^20 elements made two 8 MiB temporaries (~26 MB traced)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(9)
+    tx, ty = rng.uniform(-180, 180, 384), rng.uniform(-90, 90, 384)
+    px, py = rng.uniform(-180, 180, 10_000), rng.uniform(-90, 90, 10_000)
+    tracemalloc.start()
+    try:
+        order, svals = sj._knn_topk(px, py, tx, ty, 3)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert order.shape == svals.shape == (10_000, 3)
+    assert peak < 3 * 2**20, peak

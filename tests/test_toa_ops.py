@@ -295,3 +295,71 @@ def test_truth_sidetable_agrees_with_test_oracle(fixture_paths):
         assert side[key] == truth_mod.h60(buf), key
         checked += 1
     assert checked == 32
+
+
+def test_toa_runner_one_buffer_mixed_shapes_and_dtypes():
+    """One Arrow batch of tiles of different shapes (one taller than a
+    64-row strip, one empty) through the TOA runner, for every output
+    dtype: each tile's bytes equal its own per-tile kernel call, and
+    the pixels column is one data buffer exactly as long as its cells."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rio_toa_spark.functions import kernels
+
+    rng = np.random.default_rng(15)
+    shapes = [(3, 5), (70, 9), (1, 130), (0, 4), (64, 64), (2, 1)]
+    n = len(shapes)
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "scene_id": ["s%d" % (i % 2) for i in range(n)],
+            "band": pa.array([5] * n, pa.int32()),
+            "tile_row": pa.array(range(n), pa.int32()),
+            "tile_col": pa.array([0] * n, pa.int32()),
+            "width": pa.array([w for _, w in shapes], pa.int32()),
+            "height": pa.array([h for h, _ in shapes], pa.int32()),
+            "nodata": [0.0, None, 0.0, 0.0, 7.0, None],
+            "c_ml": rng.uniform(0.001, 0.02, n),
+            "c_al": rng.uniform(-70.0, -1.0, n),
+            "pixels": [
+                rng.integers(0, 40000, h * w, dtype=np.uint16).tobytes()
+                for h, w in shapes
+            ],
+        }
+    )
+
+    def per_tile(dn, row, dtype):
+        return oracle.radiance_worker(
+            dn, row["c_ml"], row["c_al"], toa._nodata_of(row["nodata"]),
+            kernels.normalize_scale(None, dtype), np.dtype(dtype), clip=True,
+        )
+
+    schema = to_arrow_schema(toa.TOA_OUT_SCHEMA)
+    for dtype in ("uint8", "uint16", "float32", "float64"):
+
+        def compute(dn, row, out):
+            out[...] = per_tile(dn, row, dtype)
+
+        (cols,) = toa._toa_batches([batch], dtype, compute)
+        got = pa.RecordBatch.from_pydict(cols, schema=schema)
+        pixels = got.column("pixels")
+        sizes = [h * w * np.dtype(dtype).itemsize for h, w in shapes]
+        assert pixels.buffers()[2].size == sum(sizes)
+        assert got.column("dtype").to_pylist() == [dtype] * n
+        for i, (row, cell) in enumerate(zip(batch.to_pylist(), pixels.to_pylist())):
+            dn = np.frombuffer(row["pixels"], "<u2").reshape(row["height"], row["width"])
+            assert len(cell) == sizes[i]
+            assert cell == per_tile(dn, row, dtype).tobytes(), (dtype, i)
+        assert got.column("tile_row").to_pylist() == list(range(n))
+
+
+def test_binary_offsets_guard_int32():
+    """Offsets past the int32 range of pa.binary() raise; synthetic
+    sizes, so nothing of that size is allocated."""
+    from rio_toa_spark.operators import binary_offsets
+
+    ok = binary_offsets(np.array([2**30, 2**30 - 1], dtype=np.int64))
+    assert ok.dtype == np.int32 and ok.tolist() == [0, 2**30, 2**31 - 1]
+    assert binary_offsets(np.zeros(0, dtype=np.int64)).tolist() == [0]
+    with pytest.raises(ValueError, match="int32"):
+        binary_offsets(np.array([2**30, 2**30], dtype=np.int64))
