@@ -1732,7 +1732,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the pipeline queries that compose them verify them transitively:
     # minhash/simhash (inside {minhash,simhash}_lsh full-pipeline
     # twins), lang_scores (inside lang_detect), cell_assign (inside
-    # cell_rollup), pip salted/index (result-identical to
+    # cell_rollup), pip salted (result-identical to
     # pip_broadcast, tests/test_spatial.py), png_decode + thumbnail
     # (folded into media_pipeline: PNG encode -> genuine decode ->
     # resize -> features). _q_join_revenue is outside the registry:
@@ -1751,12 +1751,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf": _q_ann_ivf,
         "media_pipeline": _q_media_pipeline,
         "media_frames": _q_media_frames,
-        # spatial layer (the salted/index strategies produce the
-        # identical row multiset as broadcast and stayed oracle-green
-        # r01-r03; under the 50-row cap their driver slots went to
-        # json_struct and lang_detect_ngram — both strategies remain
-        # pytest-verified in tests/test_spatial.py and salted runs in
-        # bench.py's pip_pages_tiles_salted)
+        # spatial layer (the salted strategy produces the identical
+        # row multiset as broadcast and stayed oracle-green r01-r03;
+        # under the 50-row cap its driver slot went to json_struct /
+        # lang_detect_ngram — it remains pytest-verified in
+        # tests/test_spatial.py and runs in bench.py's
+        # pip_pages_tiles_salted)
         "pip_broadcast": _q_pip_broadcast,
         "json_struct": _q_json_struct,
         "lang_detect_ngram": _q_lang_detect_ngram,

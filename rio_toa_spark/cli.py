@@ -413,7 +413,7 @@ def main(argv=None):
     p.add_argument("--resume", action="store_true")
     p.add_argument("--chunk-partitions", type=int, default=0)
     p.add_argument("--level", type=int, default=6)
-    p.add_argument("--strategy", default="broadcast", choices=["broadcast", "salted", "index"])
+    p.add_argument("--strategy", default="broadcast", choices=["broadcast", "salted"])
     p.set_defaults(fn=cmd_pipjoin)
 
     args = ap.parse_args(argv)

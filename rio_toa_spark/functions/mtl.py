@@ -3,9 +3,11 @@
 The reference parses ODL text (GROUP/END_GROUP blocks) into a nested
 dict on the driver (rio_toa/toa_utils.py:58-108, loader :50-55, key
 lookup :19-47, bounds :111-118). Here the same grammar is parsed by a
-vectorized pandas UDF over a ``mtl_txt`` string column, emitted as a
-JSON string, and lifted to a typed struct with ``from_json`` — so MTL
-ingestion is a distributed columnar operation, not a driver loop.
+vectorized Arrow UDF (``arrow_udf``: Arrow arrays in and out, so the
+Python worker never loads pandas) over a ``mtl_txt`` string column,
+emitted as a JSON string, and lifted to a typed struct with
+``from_json`` — so MTL ingestion is a distributed columnar operation,
+not a driver loop.
 Key lookup and corner bounds are columnar too: ``mtl_band_value``
 (band-suffix map access) and ``spatial_join.scene_footprints``.
 
@@ -18,11 +20,13 @@ from __future__ import annotations
 import json
 import re
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from rio_toa_spark.operators import arrow_column
 
 _GROUP_RE = re.compile(r"GROUP\s=\s(.*)")
 _END_RE = re.compile(r"END_GROUP\s=\s(.*)")
@@ -75,10 +79,14 @@ def parse_mtl_txt(mtl_text: str) -> dict:
     return stack[0]
 
 
-@pandas_udf(T.StringType())
-def parse_mtl_txt_udf(texts: pd.Series) -> pd.Series:
-    """Vectorized: ODL text column → JSON string column."""
-    return texts.map(lambda t: json.dumps(parse_mtl_txt(t)) if t is not None else None)
+@arrow_udf(T.StringType())
+def parse_mtl_txt_udf(texts: pa.Array) -> pa.Array:
+    """Vectorized: ODL text column → JSON string column (null stays
+    null)."""
+    return arrow_column(
+        [json.dumps(parse_mtl_txt(t)) if t is not None else None for t in texts.to_pylist()],
+        pa.string(),
+    )
 
 
 # Typed schema for the MTL groups the engine actually reads; everything

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rio_toa_spark.operators import map_arrow
+from rio_toa_spark.operators import map_arrow, numpy_view, take, value_offsets
 from rio_toa_spark.operators.textstats import portable_hash64
 
 # Mersenne prime 2^31-1: (a * (h % p) + b) stays < 2^62, so the mix
@@ -563,6 +563,7 @@ def _bucket_jaccard_verify(threshold: float):
     result. That uniqueness needs one doc per key: a bucket holding
     the same key twice raises ValueError."""
     import numpy as np
+    import pyarrow.compute as pc
 
     # cached upper-triangle index pairs per bucket size (bucket sizes
     # repeat heavily; np.triu_indices is ~40% of the kernel's cost)
@@ -575,15 +576,14 @@ def _bucket_jaccard_verify(threshold: float):
             _triu_cache[b] = iu
         return iu
 
-    def _passing_pairs(ss):
+    def _passing_pairs(flat, lens):
         """Positions (i < j in sorted bucket order) and jaccards of the
-        member pairs at or above the threshold. A function of its own
-        so the n x n temporaries are freed before the caller maps
-        positions to keys."""
-        n = len(ss)
-        arrs = [np.frombuffer(s, np.int32) for s in ss]
-        lens = np.fromiter((a.size for a in arrs), np.int64, n)
-        uniq, inv = np.unique(np.concatenate(arrs), return_inverse=True)
+        member pairs at or above the threshold, for members whose int32
+        shingle sets lie back to back in ``flat`` with sizes ``lens``.
+        A function of its own so the n x n temporaries are freed
+        before the caller maps positions to keys."""
+        n = len(lens)
+        uniq, inv = np.unique(flat, return_inverse=True)
         M = np.zeros((n, uniq.size), np.float32)
         M[np.repeat(np.arange(n), lens), inv] = 1.0
         inter = (M @ M.T).astype(np.float64)
@@ -594,48 +594,68 @@ def _bucket_jaccard_verify(threshold: float):
         keep = jv >= threshold  # NaN (0/0) compares False, like SQL NULL/NaN
         return iu[keep], ju[keep], jv[keep]
 
-    def _flat(col):
-        """Flat member values of a (null-free) list column plus each
-        bucket row's [start, end) offsets into them."""
-        offs = col.offsets.to_numpy()
-        return col.flatten().to_numpy(zero_copy_only=False), offs - offs[0]
+    def _members(col):
+        """A (null-free) list<binary> column read in place: each bucket
+        row's [start, end) into its members, each member's [start, end)
+        into the shared bytes, and those bytes."""
+        members = col.values
+        data = members.buffers()[2]
+        return (
+            value_offsets(col),
+            value_offsets(members),
+            np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8),
+        )
+
+    def _check_unique_keys(keys, rows):
+        """Raise on a key repeated inside one bucket row (members are
+        sorted, so a repeat is two equal neighbours in the same row)."""
+        lo, hi = int(rows[0]), int(rows[-1])
+        if hi - lo < 2:
+            return
+        same = numpy_view(pc.equal(keys.slice(lo + 1, hi - lo - 1), keys.slice(lo, hi - lo - 1)))
+        row_start = np.zeros(len(same), bool)
+        row_start[rows[1:-1] - lo - 1] = True
+        dup = np.nonzero(same & ~row_start)[0]
+        if dup.size:
+            raise ValueError(
+                "duplicate doc key %s in ngram_jaccard_pairs input: "
+                "the LSH path needs one row per key" % keys[lo + 1 + int(dup[0])].as_py()
+            )
 
     def run(batches):
         for batch in batches:
             out_a: list = []
             out_b: list = []
             out_j: list = []
-            ks_flat, ks_off = _flat(batch.column("ks"))
-            ss_flat, ss_off = _flat(batch.column("ss"))
-            hs_flat, hs_off = _flat(batch.column("hs"))
+            keys = batch.column("ks").values
+            ks_rows = value_offsets(batch.column("ks"))
+            _check_unique_keys(keys, ks_rows)
+            ss_rows, ss_off, ss_data = _members(batch.column("ss"))
+            hs_rows, hs_off, hs_data = _members(batch.column("hs"))
             band_col = batch.column("band").to_pylist()
             for r in range(batch.num_rows):
-                ks = ks_flat[ks_off[r] : ks_off[r + 1]]
-                dup = ks[1:] == ks[:-1]
-                if dup.any():
-                    raise ValueError(
-                        "duplicate doc key %s in ngram_jaccard_pairs input: "
-                        "the LSH path needs one row per key" % ks[1:][dup][0]
-                    )
-                ia, ib, jv = _passing_pairs(ss_flat[ss_off[r] : ss_off[r + 1]])
+                m0, m1 = ss_rows[r], ss_rows[r + 1]
+                ia, ib, jv = _passing_pairs(
+                    ss_data[ss_off[m0] : ss_off[m1]].view(np.int32),
+                    np.diff(ss_off[m0 : m1 + 1]) // 4,
+                )
                 if not ia.size:
                     continue
                 if band_col[r]:
-                    hmat = np.frombuffer(
-                        b"".join(hs_flat[hs_off[r] : hs_off[r + 1]]), np.int64
-                    ).reshape(len(ks), -1)[:, : band_col[r]]
+                    h0, h1 = hs_off[hs_rows[r]], hs_off[hs_rows[r + 1]]
+                    hmat = hs_data[h0:h1].view(np.int64).reshape(m1 - m0, -1)[:, : band_col[r]]
                     first = ~(hmat[ia] == hmat[ib]).any(axis=1)
                     if not first.all():
                         ia, ib, jv = ia[first], ib[first], jv[first]
                         if not ia.size:
                             continue
-                out_a.append(ks[ia])
-                out_b.append(ks[ib])
+                out_a.append(ks_rows[r] + ia)
+                out_b.append(ks_rows[r] + ib)
                 out_j.append(jv)
             if out_a:
                 yield {
-                    "a": np.concatenate(out_a),
-                    "b": np.concatenate(out_b),
+                    "a": take(keys, np.concatenate(out_a)),
+                    "b": take(keys, np.concatenate(out_b)),
                     "jaccard": np.concatenate(out_j),
                 }
 

@@ -141,12 +141,6 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
     provenance those become invisible fake features."""
     schema = T.StructType([df.schema[key]] + _DECODED_FIELDS + [_STATUS_FIELD])
 
-    def _decode_one(p: bytes) -> tuple[np.ndarray, str]:
-        still = _decode_still(p)
-        if still is None:
-            return _fake_decode(p), "stub"
-        return still[0], "genuine_" + still[1]
-
     # decoding multiplies bytes (a few-KB JPEG becomes ~100 KB of
     # pixels), so the input batch's byte bound says nothing about the
     # output's. Cut output frames at the same conf that bounds the
@@ -154,31 +148,45 @@ def decode_image(df: DataFrame, payload: str = "payload", key: str = "media_id")
     max_bytes = _parse_bytes(
         df.sparkSession.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
     )
+    return map_arrow(df, lambda batches: _decode_frames(batches, payload, key, max_bytes), schema)
 
-    def _frame(keys, decoded: list) -> dict:
+
+def _decode_image_payload(p: bytes) -> tuple[np.ndarray, str]:
+    """One image payload's pixels and ``decode_status``."""
+    still = _decode_still(p)
+    if still is None:
+        return _fake_decode(p), "stub"
+    return still[0], "genuine_" + still[1]
+
+
+def _decode_frames(batches, payload: str, key: str, max_bytes: int):
+    """``decode_image``'s kernel: output frames of at most about
+    ``max_bytes`` decoded pixels. A frame's pixels go into one Arrow
+    data buffer (``arrow_batch`` joins the arrays), so a frame holds
+    its decoded arrays and that one buffer, not a bytes copy of each
+    array as well."""
+
+    def frame(keys, decoded: list) -> dict:
         return {
             key: keys,
             "height": [d.shape[0] for d, _ in decoded],
             "width": [d.shape[1] for d, _ in decoded],
             "channels": [d.shape[2] for d, _ in decoded],
-            "pixels": [d.tobytes() for d, _ in decoded],
+            "pixels": [d for d, _ in decoded],
             "decode_status": [s for _, s in decoded],
         }
 
-    def run(batches):
-        for batch in batches:
-            keys = batch.column(key)
-            start, size, decoded = 0, 0, []
-            for p in batch.column(payload).to_pylist():
-                decoded.append(_decode_one(p))
-                size += decoded[-1][0].nbytes
-                if size >= max_bytes:
-                    yield _frame(keys.slice(start, len(decoded)), decoded)
-                    start, size, decoded = start + len(decoded), 0, []
-            if decoded:
-                yield _frame(keys.slice(start), decoded)
-
-    return map_arrow(df, run, schema)
+    for batch in batches:
+        keys = batch.column(key)
+        start, size, decoded = 0, 0, []
+        for p in batch.column(payload).to_pylist():
+            decoded.append(_decode_image_payload(p))
+            size += decoded[-1][0].nbytes
+            if size >= max_bytes:
+                yield frame(keys.slice(start, len(decoded)), decoded)
+                start, size, decoded = start + len(decoded), 0, []
+        if decoded:
+            yield frame(keys.slice(start), decoded)
 
 
 def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str = "media_id") -> DataFrame:
@@ -198,7 +206,7 @@ def resize_image(decoded_df: DataFrame, out_h: int = 8, out_w: int = 8, key: str
                 )
                 ys = (np.arange(out_h) * row["height"] // out_h).astype(int)
                 xs = (np.arange(out_w) * row["width"] // out_w).astype(int)
-                out.append(arr[np.ix_(ys, xs)].tobytes())
+                out.append(arr[np.ix_(ys, xs)])
             yield {
                 key: batch.column(key),
                 "height": [out_h] * len(out),
@@ -284,7 +292,7 @@ def decode_audio(df: DataFrame, payload: str = "payload", key: str = "media_id")
                 "n_samples": [s.shape[0] for s, _, _ in decoded],
                 "n_channels": [s.shape[1] for s, _, _ in decoded],
                 "sample_rate": [r for _, r, _ in decoded],
-                "samples": [s.astype("<i2").tobytes() for s, _, _ in decoded],
+                "samples": [s.astype("<i2", copy=False) for s, _, _ in decoded],
                 "decode_status": [st for _, _, st in decoded],
             }
 
@@ -403,7 +411,7 @@ def sample_video_frames(
                     hs.append(arr.shape[0])
                     ws.append(arr.shape[1])
                     cs.append(arr.shape[2])
-                    bufs.append(arr.tobytes())
+                    bufs.append(arr)
                     stats.append(status)
             yield {
                 key: keys,

@@ -17,12 +17,14 @@ Deterministic tie-break everywhere: (distance DESC cosine, id ASC).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from rio_toa_spark.operators import map_arrow
+from rio_toa_spark.operators import map_arrow, numpy_view, take, value_offsets
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -80,7 +82,8 @@ def _desc_order_key(c: np.ndarray) -> np.ndarray:
 def _batch_topk_scores(V32, keys, Q, qn, k, per_query_rows=None):
     """Score one corpus batch against every query with the exact
     sequential-fold cosine and yield per-(query, batch) top-k
-    candidate triples (q_index, key, cosine).
+    candidate triples (q_index, key, cosine). ``keys`` only orders
+    equal cosines (ascending); the kernels pass ``_key_order`` ranks.
 
     per_query_rows: optional list of row-index arrays restricting each
     query to a candidate subset (the IVF probe filter); None = all."""
@@ -115,12 +118,12 @@ def _list_matrix(col) -> np.ndarray:
     0.44 s vs ~0.1 s at 80k x 64). Every row must hold the same number
     of values: the row lengths come from the list offsets, so a ragged
     column raises instead of being re-cut into equal rows."""
-    lens = np.diff(col.offsets.to_numpy())
+    lens = np.diff(value_offsets(col))
     if lens.size and (lens != lens[0]).any():
         raise ValueError(
             "ragged embedding column: row lengths %d..%d" % (lens.min(), lens.max())
         )
-    flat = col.flatten().to_numpy(zero_copy_only=False)
+    flat = numpy_view(col.flatten())
     return flat.reshape(len(col), lens[0] if lens.size else 0)
 
 
@@ -138,15 +141,27 @@ def _vectors_to_matrix(df: DataFrame, vec: str) -> np.ndarray:
 
 def _collect_queries(queries_df: DataFrame, q_key: str, q_vec: str):
     """Driver-side query table (queries are few — the same boundedness
-    contract as the broadcast join this replaces). Returns (ids, Q
-    float64 matrix, per-query sequential-fold norms)."""
+    contract as the broadcast join this replaces). Returns (ids as an
+    Arrow array, Q float64 matrix, per-query sequential-fold norms)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     rows = queries_df.select(q_key, q_vec).collect()
-    ids = [r[0] for r in rows]
+    ids = pa.array([r[0] for r in rows], to_arrow_type(queries_df.schema[q_key].dataType))
     if not rows:
         return ids, np.zeros((0, 0)), np.zeros(0)
     Q = np.array([r[1] for r in rows], dtype=np.float64)
     qn = np.sqrt(_seq_fold_sums(Q))
     return ids, Q, qn
+
+
+def _key_order(col) -> tuple[np.ndarray, np.ndarray]:
+    """A key column's rows in ascending key order (stable), and each
+    row's rank in that order: the ranks stand in for the keys in the
+    (cosine desc, key asc) tie-break, whatever the key's type."""
+    by_key = numpy_view(pc.sort_indices(col))
+    ranks = np.empty_like(by_key)
+    ranks[by_key] = np.arange(len(by_key))
+    return by_key, ranks
 
 
 def cosine_topk(
@@ -182,9 +197,8 @@ def cosine_topk(
 
     def score(batches):
         q_ids_l, Q_l, qn_l = bc.value
-        if not q_ids_l:
+        if not len(q_ids_l):
             return
-        qid_arr = np.array(q_ids_l)
         for batch in batches:
             if batch.column(vec).null_count:
                 # a NULL vector scores NULL cosine in the SQL form and
@@ -193,12 +207,12 @@ def cosine_topk(
             if not batch.num_rows:
                 continue
             V32 = _list_matrix(batch.column(vec))
-            keys = batch.column(key).to_numpy(zero_copy_only=False)
-            out_q, out_k, out_c = _batch_topk_scores(V32, keys, Q_l, qn_l, k)
+            by_key, ranks = _key_order(batch.column(key))
+            out_q, out_k, out_c = _batch_topk_scores(V32, ranks, Q_l, qn_l, k)
             if out_q:
                 yield {
-                    q_key: qid_arr[np.concatenate(out_q)],
-                    key: np.concatenate(out_k),
+                    q_key: take(q_ids_l, np.concatenate(out_q)),
+                    key: take(batch.column(key), by_key[np.concatenate(out_k)]),
                     "cosine": np.concatenate(out_c),
                 }
 
@@ -301,9 +315,8 @@ def cosine_topk_ivf(
 
     def assign_and_score(batches):
         q_ids_l, Q_l, qn_l, probes_l, C_l = bc.value
-        if not q_ids_l:
+        if not len(q_ids_l):
             return
-        qid_arr = np.array(q_ids_l)
         # the list assignment below is a BLAS matmul over a whole Arrow
         # batch, so its float sums depend on the batch's shape. Safe
         # for the exact ann_ivf oracle: that variation is bounded far
@@ -313,7 +326,7 @@ def cosine_topk_ivf(
             if not batch.num_rows:
                 continue
             V32 = _list_matrix(batch.column(vec))
-            keys = batch.column(key).to_numpy(zero_copy_only=False)
+            by_key, ranks = _key_order(batch.column(key))
             # argmax of dot products; ties -> lowest list id (argmax
             # first-occurrence), matching a deterministic assignment
             assign = np.argmax(V32 @ C_l, axis=1)
@@ -322,12 +335,12 @@ def cosine_topk_ivf(
                 for j in range(len(q_ids_l))
             ]
             out_q, out_k, out_c = _batch_topk_scores(
-                V32, keys, Q_l, qn_l, k, per_query_rows=rows_per_q
+                V32, ranks, Q_l, qn_l, k, per_query_rows=rows_per_q
             )
             if out_q:
                 yield {
-                    q_key: qid_arr[np.concatenate(out_q)],
-                    key: np.concatenate(out_k),
+                    q_key: take(q_ids_l, np.concatenate(out_q)),
+                    key: take(batch.column(key), by_key[np.concatenate(out_k)]),
                     "cosine": np.concatenate(out_c),
                 }
 

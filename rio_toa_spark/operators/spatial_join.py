@@ -9,7 +9,7 @@ Design:
   Catalyst can plan natively; an exact inclusive bbox predicate is the
   refine step. Because a point has exactly one cell, the cell join
   introduces no duplicate (point, footprint) pairs — no dedup pass.
-* Three physical strategies, all proven result-identical in tests:
+* Two physical strategies, proven result-identical in tests:
     - 'broadcast' (default): broadcast the exploded footprint side;
       zero shuffle on the page side. Right whenever footprints fit the
       broadcast threshold (scenes/tiles are dimension-sized even at
@@ -18,8 +18,6 @@ Design:
       pmod(xxhash64(url), S) and the footprint side replicated S ways.
       The explicit skew treatment for hot cells when the footprint
       side outgrows broadcast; AQE skew-join remains on as backstop.
-    - 'index': an Arrow batch kernel with a broadcast RectIndex (the
-      STRtree analogue) — pure map, candidate+refine fused in numpy.
 * kNN page->tile: broadcast tile centroids into an Arrow batch kernel
   (exact, vectorized) or cell-ring candidate expansion + windowed
   row_number for the non-broadcastable case. Deterministic
@@ -34,13 +32,13 @@ the expression.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rio_toa_spark.operators import map_arrow
+from rio_toa_spark.operators import map_arrow, numpy_view, take
 from rio_toa_spark.spatial import cells as cell_mod
-from rio_toa_spark.spatial.index import RectIndex
 
 DEFAULT_LEVEL = cell_mod.DEFAULT_LEVEL
 
@@ -164,10 +162,6 @@ def pip_join(
     footprints_df except fw/fs/fe/fn). Inclusive boundaries, matching
     the DuckDB oracle's BETWEEN semantics.
     """
-    fp_id_cols = [c for c in footprints_df.columns if c not in ("fw", "fs", "fe", "fn")]
-    if strategy == "index":
-        return _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat)
-
     pts = with_cell(points_df, lon, lat, level)
     cover = _explode_cover(footprints_df, level)
     refine = "%s BETWEEN fw AND fe AND %s BETWEEN fs AND fn" % (lon, lat)
@@ -184,44 +178,6 @@ def pip_join(
         raise ValueError("unknown strategy %r" % strategy)
 
     return joined.drop("cell", "fw", "fs", "fe", "fn")
-
-
-def _pip_index_join(points_df, footprints_df, fp_id_cols, lon, lat):
-    """Broadcast-RectIndex refine inside an Arrow batch kernel (the
-    STRtree-style plan): candidate search + exact containment fused,
-    zero shuffle."""
-    spark = points_df.sparkSession
-    fps = footprints_df.select("fw", "fs", "fe", "fn", *fp_id_cols).collect()
-    idx = RectIndex(
-        [r.fw for r in fps],
-        [r.fs for r in fps],
-        [r.fe for r in fps],
-        [r.fn for r in fps],
-        np.arange(len(fps), dtype=np.int64),
-    )
-    payload = [[getattr(r, c) for c in fp_id_cols] for r in fps]
-    bc = spark.sparkContext.broadcast((idx, payload))
-
-    pt_schema = points_df.schema
-    out_schema = T.StructType(
-        list(pt_schema.fields)
-        + [footprints_df.schema[c] for c in fp_id_cols]
-    )
-
-    def run(batches):
-        index, fp_payload = bc.value
-        for batch in batches:
-            pt_idx, box_ids = index.query_points(
-                batch.column(lon).to_numpy(zero_copy_only=False),
-                batch.column(lat).to_numpy(zero_copy_only=False),
-            )
-            left = batch.take(pt_idx)
-            cols = {name: left.column(name) for name in left.schema.names}
-            for j, col in enumerate(fp_id_cols):
-                cols[col] = [fp_payload[int(b)][j] for b in box_ids]
-            yield cols
-
-    return map_arrow(points_df, run, out_schema)
 
 
 # ------------------------------------------------------------------ kNN
@@ -349,12 +305,17 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     # project BEFORE the opaque kernel: Spark cannot see which columns
     # a Python kernel touches and would ship (and scan) every page column —
     # including the ~0.5 KB html payloads — through Arrow into Python
-    # (guide rule; measured 2.1 s -> 1.0 s on the 400k-page bench)
-    points_df = points_df.select(point_key, lon, lat)
+    # (guide rule; measured 2.1 s -> 1.0 s on the 400k-page bench).
+    # A point without coordinates has no neighbours, as in the cells
+    # strategy (its cell join drops it); the kernel reads the
+    # coordinates as null-free numpy views.
+    points_df = points_df.select(point_key, lon, lat).where(
+        "%s IS NOT NULL AND %s IS NOT NULL" % (lon, lat)
+    )
     # Spark's ascending tile_id order, sorted on the driver: nulls
     # first, then code-point order (which is Spark's UTF-8 byte order)
     tile_rows = sorted(tiles.collect(), key=lambda r: (r.tile_id is not None, r.tile_id or ""))
-    ids = [r.tile_id for r in tile_rows]
+    ids = pa.array([r.tile_id for r in tile_rows], pa.string())
     cx = np.array([r.cx for r in tile_rows])
     cy = np.array([r.cy for r in tile_rows])
     bc = spark.sparkContext.broadcast((ids, cx, cy))
@@ -370,21 +331,19 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
 
     def run(batches):
         tids, tx, ty = bc.value
-        tid_arr = np.array(tids)
-        if not tids:  # no centroids -> no neighbors (not an error)
+        if not len(tids):  # no centroids -> no neighbors (not an error)
             return
         for batch in batches:
-            keys = batch.column(point_key).to_numpy(zero_copy_only=False)
-            px = batch.column(lon).to_numpy(zero_copy_only=False)
-            py = batch.column(lat).to_numpy(zero_copy_only=False)
+            px = numpy_view(batch.column(lon))
+            py = numpy_view(batch.column(lat))
             n = len(px)
             if not n:
                 continue
             order, svals = _knn_topk(px, py, tx, ty, k)
             kk = order.shape[1]
             yield {
-                point_key: np.repeat(keys, kk),
-                "tile_id": tid_arr[order].ravel(),
+                point_key: take(batch.column(point_key), np.repeat(np.arange(n), kk)),
+                "tile_id": take(tids, order.ravel()),
                 "dist": np.sqrt(svals).ravel(),
                 "rank": np.tile(np.arange(1, kk + 1), n),
             }

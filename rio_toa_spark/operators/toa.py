@@ -43,7 +43,14 @@ from pyspark.sql import types as T
 
 from rio_toa_spark.functions import kernels, sun
 from rio_toa_spark.functions.mtl import mtl_band_value, with_parsed_mtl
-from rio_toa_spark.operators import binary_offsets, binary_rows, map_arrow
+from rio_toa_spark.operators import (
+    arrow_batch,
+    binary_offsets,
+    binary_rows,
+    map_arrow,
+    numpy_view,
+    take,
+)
 
 TILE_KEY = ["scene_id", "band", "tile_row", "tile_col"]
 
@@ -92,8 +99,8 @@ def _toa_batches(batches, dst_dtype: str, compute):
     np_dtype = np.dtype(dst_dtype)
     for batch in batches:
         n = batch.num_rows
-        heights = batch.column("height").to_numpy(zero_copy_only=False)
-        widths = batch.column("width").to_numpy(zero_copy_only=False)
+        heights = numpy_view(batch.column("height"))
+        widths = numpy_view(batch.column("width"))
         offsets = binary_offsets(heights.astype(np.int64) * widths * np_dtype.itemsize)
         data = np.empty(int(offsets[-1]), dtype=np.uint8)
         for i, (row, buf) in enumerate(binary_rows(batch)):
@@ -397,26 +404,26 @@ def value_histogram(toa_df: DataFrame, bucket_scale: float = 1.0 / 64) -> DataFr
 
     def run(batches):
         for batch in batches:
-            cols = {f.name: [] for f in _HIST_PARTIAL_SCHEMA}
-            for row, buf in binary_rows(batch):
+            # per output row: its tile's row in the batch, whose scene_id
+            # and band one Arrow take repeats
+            cols = {"tile": [], "bucket": [], "value": [], "n": []}
+            for i, (row, buf) in enumerate(binary_rows(batch)):
                 arr = np.frombuffer(buf, dtype=np.dtype(row["dtype"]))
                 if np.issubdtype(arr.dtype, np.floating):
                     arr = arr[np.isfinite(arr)]
                 vals, counts = np.unique(arr, return_counts=True)
                 # uint8/uint16 widen exactly into f32 (< 2^24)
                 f32 = vals.astype(np.float32, copy=False)
-                k = len(vals)
-                cols["scene_id"].append(
-                    np.repeat(np.array([row["scene_id"]], dtype=object), k)
-                )
-                cols["band"].append(np.full(k, row["band"], dtype=np.int32))
+                cols["tile"].append(np.full(len(vals), i, dtype=np.int64))
                 cols["bucket"].append(
                     np.floor(f32 * scale).astype(np.int32)
                 )
                 cols["value"].append(f32.astype(np.float64))
                 cols["n"].append(counts.astype(np.int64))
-            if cols["scene_id"]:
-                yield {k: np.concatenate(v) for k, v in cols.items()}
+            if cols["tile"]:
+                out = {k: np.concatenate(v) for k, v in cols.items()}
+                tiles = take(batch.select(["scene_id", "band"]), out.pop("tile"))
+                yield {"scene_id": tiles.column(0), "band": tiles.column(1), **out}
 
     per_value = (
         map_arrow(toa_df, run, _HIST_PARTIAL_SCHEMA)
@@ -442,8 +449,6 @@ def mosaic_scene(tiles_like_df: DataFrame) -> DataFrame:
     (the same bound the reference's single-file output has), and groups
     parallelize across (scene, band) pairs.
     """
-    has_dtype = "dtype" in tiles_like_df.columns
-    has_bounds = "bounds_w" in tiles_like_df.columns
     out_schema = T.StructType(
         [
             tiles_like_df.schema["scene_id"],
@@ -464,55 +469,75 @@ def mosaic_scene(tiles_like_df: DataFrame) -> DataFrame:
     pa_out = to_arrow_schema(out_schema)
 
     def assemble(key, tbl):
-        import pyarrow as pa
-
-        scene_id, band = (k.as_py() for k in key)
-        tiles = list(binary_rows(tbl))
-        dtype = tiles[0][0]["dtype"] if has_dtype else "uint16"
-        np_dtype = np.dtype(dtype)
-        # the grid is anchored at the group's own min indices (a
-        # subsetted input need not start at tile 0,0), and a HOLE in
-        # the grid is a hard error — np.block on a None cell would
-        # otherwise die with an opaque executor TypeError
-        r0 = min(row["tile_row"] for row, _ in tiles)
-        c0 = min(row["tile_col"] for row, _ in tiles)
-        n_rows = max(row["tile_row"] for row, _ in tiles) - r0 + 1
-        n_cols = max(row["tile_col"] for row, _ in tiles) - c0 + 1
-        grid = [[None] * n_cols for _ in range(n_rows)]
-        for row, buf in tiles:
-            grid[row["tile_row"] - r0][row["tile_col"] - c0] = np.frombuffer(
-                buf, dtype=np_dtype
-            ).reshape(row["height"], row["width"])
-        missing = [
-            (r + r0, c + c0)
-            for r in range(n_rows)
-            for c in range(n_cols)
-            if grid[r][c] is None
-        ]
-        if missing:
-            raise ValueError(
-                "mosaic_scene: scene %s band %s is missing tiles %s — "
-                "cannot assemble a contiguous raster" % (scene_id, band, missing[:8])
-            )
-        full = np.block(grid)
-
-        def bound(name, agg):
-            return agg(row[name] for row, _ in tiles) if has_bounds else None
-
-        return pa.Table.from_pydict(
-            {
-                "scene_id": [scene_id],
-                "band": [band],
-                "height": [full.shape[0]],
-                "width": [full.shape[1]],
-                "dtype": [dtype],
-                "bounds_w": [bound("bounds_w", min)],
-                "bounds_s": [bound("bounds_s", min)],
-                "bounds_e": [bound("bounds_e", max)],
-                "bounds_n": [bound("bounds_n", max)],
-                "pixels": [full.tobytes()],
-            },
-            schema=pa_out,
-        )
+        return _mosaic(key, tbl, pa_out)
 
     return tiles_like_df.groupBy("scene_id", "band").applyInArrow(assemble, out_schema)
+
+
+def _mosaic(key, tbl: pa.Table, pa_out: pa.Schema) -> pa.Table:
+    """One (scene, band) group of tiles as one ``mosaic_scene`` row.
+    The raster's own buffer becomes the pixels cell: the scene-band is
+    held once, not again as bytes and as an Arrow copy."""
+    scene_id, band = (k.as_py() for k in key)
+    tiles = list(binary_rows(tbl))
+    dtype = tiles[0][0]["dtype"] if "dtype" in tbl.column_names else "uint16"
+    np_dtype = np.dtype(dtype)
+    # the grid is anchored at the group's own min indices (a
+    # subsetted input need not start at tile 0,0), and a HOLE in
+    # the grid is a hard error — a None cell would otherwise die
+    # with an opaque executor error
+    r0 = min(row["tile_row"] for row, _ in tiles)
+    c0 = min(row["tile_col"] for row, _ in tiles)
+    n_rows = max(row["tile_row"] for row, _ in tiles) - r0 + 1
+    n_cols = max(row["tile_col"] for row, _ in tiles) - c0 + 1
+    grid = [[None] * n_cols for _ in range(n_rows)]
+    for row, buf in tiles:
+        grid[row["tile_row"] - r0][row["tile_col"] - c0] = np.frombuffer(
+            buf, dtype=np_dtype
+        ).reshape(row["height"], row["width"])
+    missing = [
+        (r + r0, c + c0)
+        for r in range(n_rows)
+        for c in range(n_cols)
+        if grid[r][c] is None
+    ]
+    if missing:
+        raise ValueError(
+            "mosaic_scene: scene %s band %s is missing tiles %s — "
+            "cannot assemble a contiguous raster" % (scene_id, band, missing[:8])
+        )
+    # one preallocated raster, each tile copied into its place
+    # (np.block concatenates small grids row by row: a second raster)
+    ys = np.cumsum([0] + [grid[r][0].shape[0] for r in range(n_rows)])
+    xs = np.cumsum([0] + [grid[0][c].shape[1] for c in range(n_cols)])
+    full = np.empty((ys[-1], xs[-1]), np_dtype)
+    for r in range(n_rows):
+        for c in range(n_cols):
+            cell = full[ys[r] : ys[r + 1], xs[c] : xs[c + 1]]
+            if grid[r][c].shape != cell.shape:
+                raise ValueError(
+                    "mosaic_scene: scene %s band %s tile %s is %s, its grid cell %s"
+                    % (scene_id, band, (r + r0, c + c0), grid[r][c].shape, cell.shape)
+                )
+            cell[...] = grid[r][c]
+
+    def bound(name, agg):
+        if "bounds_w" not in tbl.column_names:
+            return pa.nulls(1, pa.float64())
+        return [agg(row[name] for row, _ in tiles)]
+
+    cols = {
+        "scene_id": [scene_id],
+        "band": [band],
+        "height": [full.shape[0]],
+        "width": [full.shape[1]],
+        "dtype": [dtype],
+        "bounds_w": bound("bounds_w", min),
+        "bounds_s": bound("bounds_s", min),
+        "bounds_e": bound("bounds_e", max),
+        "bounds_n": bound("bounds_n", max),
+        "pixels": pa.Array.from_buffers(
+            pa.binary(), 1, [None, pa.py_buffer(binary_offsets([full.nbytes])), pa.py_buffer(full)]
+        ),
+    }
+    return pa.Table.from_batches([arrow_batch(cols, pa_out)])

@@ -5,9 +5,10 @@ on a single host:
 
 * AQE on (runtime coalescing + skew-join splitting backstops the
   explicit salting done by the spatial layer).
-* Arrow execution for every Python boundary (the ``mapInArrow``
-  kernels of ``operators.map_arrow`` and the few remaining pandas
-  UDFs). Batch size is left to Spark's own two defaults, 10,000
+* Arrow execution for every Python boundary: the ``mapInArrow``
+  kernels of ``operators.map_arrow``, the MTL ``arrow_udf`` and the
+  one pandas kernel left (the MinHash signature stage of
+  ``dedup.ngram_jaccard_pairs``, a ``mapInPandas``). Batch size is left to Spark's own two defaults, 10,000
   records and 64 MiB (``spark.sql.execution.arrow.maxBytesPerBatch``)
   per batch: the byte
   bound binds first on half-MiB binary tile rows, the record bound on

@@ -134,7 +134,7 @@ def geotiff_to_tiles(
                             rows["bounds_s"].append(wgs[1])
                             rows["bounds_e"].append(wgs[2])
                             rows["bounds_n"].append(wgs[3])
-                            rows["pixels"].append(arr.tobytes())
+                            rows["pixels"].append(arr)
             yield rows
 
     return map_arrow(spec_df, read_windows, tile_schema)

@@ -60,3 +60,47 @@ def test_mosaic_subgrid_not_anchored_at_zero(spark, tiles_df):
     assert out
     for r in out:
         assert r.height == 128 and r.width == 256  # 1x2 strip of 128px tiles
+
+
+def test_mosaic_holds_the_raster_once():
+    """One group's mosaic wraps the raster's own buffer: the raster is
+    held once (the tiles are read-only views), not again as bytes and
+    as an Arrow copy (3x). Bytes equal np.block's."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    rng = np.random.default_rng(4)
+    grid = [[rng.integers(0, 1 << 16, (128, 128), dtype=np.uint16) for _ in range(4)] for _ in range(4)]
+    cells = [(r, c) for r in range(4) for c in range(4)]
+    tbl = pa.table(
+        {
+            "scene_id": ["S"] * 16,
+            "band": pa.array([5] * 16, pa.int32()),
+            "tile_row": pa.array([r for r, _ in cells], pa.int32()),
+            "tile_col": pa.array([c for _, c in cells], pa.int32()),
+            "height": pa.array([128] * 16, pa.int32()),
+            "width": pa.array([128] * 16, pa.int32()),
+            "pixels": [grid[r][c].tobytes() for r, c in cells],
+        }
+    )
+    pa_out = pa.schema(
+        [("scene_id", pa.string()), ("band", pa.int32()), ("height", pa.int32()), ("width", pa.int32())]
+        + [("dtype", pa.string())]
+        + [(b, pa.float64()) for b in ("bounds_w", "bounds_s", "bounds_e", "bounds_n")]
+        + [("pixels", pa.binary())]
+    )
+    raster = np.block(grid)
+    key = (pa.scalar("S"), pa.scalar(5, pa.int32()))
+    arrow0 = pa.total_allocated_bytes()
+    tracemalloc.start()
+    try:
+        out = toa._mosaic(key, tbl, pa_out)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    arrow_held = pa.total_allocated_bytes() - arrow0
+    row = out.to_pylist()[0]
+    assert row["pixels"] == raster.tobytes()
+    assert (row["height"], row["width"], row["dtype"], row["bounds_w"]) == (512, 512, "uint16", None)
+    assert peak + arrow_held < 2 * raster.nbytes, (peak, arrow_held)

@@ -50,3 +50,18 @@ def test_distributed_extractor_matches_driver_parse(spark, scenes_df, fixture_pa
         assert row.e == meta["IMAGE_ATTRIBUTES"]["SUN_ELEVATION"]
         assert row.m5 == meta["RADIOMETRIC_RESCALING"]["RADIANCE_MULT_BAND_5"]
         assert row.d == meta["PRODUCT_METADATA"]["DATE_ACQUIRED"]
+
+
+def test_arrow_udf_equals_driver_parse(spark, scenes_df, fixture_paths):
+    """``parse_mtl_txt_udf`` (an Arrow UDF) gives ``json.dumps`` of the
+    driver parse on every fixture scene, and null for a null text. It
+    stays one ``ArrowEvalPython`` node, the node the benchmark's ``mtl``
+    layer is attributed from."""
+    parsed = scenes_df.select("scene_id", mtl_mod.parse_mtl_txt_udf(F.col("mtl_txt")).alias("j"))
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [parse_mtl_txt_udf(") == 1, plan
+    got = {r.scene_id: r.j for r in parsed.collect()}
+    rows = pq.read_table(fixture_paths["scenes"]).to_pylist()
+    assert got == {r["scene_id"]: json.dumps(mtl_mod.parse_mtl_txt(r["mtl_txt"])) for r in rows}
+    nulls = spark.createDataFrame([(None,)], "mtl_txt string")
+    assert nulls.select(mtl_mod.parse_mtl_txt_udf("mtl_txt").alias("j")).collect()[0].j is None

@@ -470,3 +470,40 @@ def test_png_adam7_16bit():
     got = decode_png(data)
     assert got.dtype == np.uint16
     assert np.array_equal(got, arr)
+
+
+def test_decode_frame_memory_budget():
+    """A 64-image decode frame holds its decoded arrays plus ONE data
+    buffer that the Arrow pixels column wraps: per-row tobytes() copies
+    then a from_pydict copy held ~3x the frame's pixels."""
+    import tracemalloc
+
+    from rio_toa_spark.functions.png import encode_png
+    from rio_toa_spark.operators import arrow_batch
+
+    imgs = [np.full((64, 64, 3), i, np.uint8) for i in range(64)]
+    batch = pa.RecordBatch.from_pydict(
+        {"media_id": list(range(64)), "payload": [encode_png(a) for a in imgs]},
+        schema=pa.schema([("media_id", pa.int64()), ("payload", pa.binary())]),
+    )
+    out_schema = pa.schema(
+        [("media_id", pa.int64())]
+        + [(c, pa.int32()) for c in ("height", "width", "channels")]
+        + [("pixels", pa.binary()), ("decode_status", pa.string())]
+    )
+    pixels = sum(a.nbytes for a in imgs)
+    arrow0 = pa.total_allocated_bytes()
+    tracemalloc.start()
+    try:
+        frames = [
+            arrow_batch(cols, out_schema)
+            for cols in mm._decode_frames(iter([batch]), "payload", "media_id", 1 << 26)
+        ]
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    arrow_held = pa.total_allocated_bytes() - arrow0
+    assert [f.num_rows for f in frames] == [64]
+    assert frames[0].column("pixels").to_pylist() == [a.tobytes() for a in imgs]
+    assert set(frames[0].column("decode_status").to_pylist()) == {"genuine_png"}
+    assert peak + arrow_held < 2.25 * pixels, (peak, arrow_held, pixels)

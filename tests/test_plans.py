@@ -224,7 +224,6 @@ def test_kernels_cross_into_python_as_arrow(spark, tiles_df, scenes_df, pages_df
     )
     arrow_plans = {
         "knn broadcast": sj.knn_join(pages_df, tiles_df, k=2),
-        "pip index": sj.pip_join(pages_df, sj.scene_footprints(scenes_df), strategy="index"),
         "cosine_topk": similarity.cosine_topk(emb, queries, k=3),
         "cosine_topk_ivf": similarity.cosine_topk_ivf(emb, queries, k=3, n_centroids=2, n_probe=1),
         "image chain": mm.image_features(mm.resize_image(mm.decode_image(media))),

@@ -76,7 +76,7 @@ def pip_expected(fixture_paths):
     return _brute_force_pip(fixture_paths)
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "salted", "index"])
+@pytest.mark.parametrize("strategy", ["broadcast", "salted"])
 def test_pip_join_strategies_exact(spark, pages_df, scenes_df, pip_expected, strategy):
     fps = sj.scene_footprints(scenes_df)
     out = sj.pip_join(pages_df, fps, level=LEVEL, strategy=strategy)
@@ -231,6 +231,16 @@ def test_knn_broadcast_empty_centroids(spark):
     pts = spark.createDataFrame([("p", 0.0, 0.0)], "url string, lon double, lat double")
     cents = spark.createDataFrame([], "tile_id string, cx double, cy double")
     assert sj.knn_centroids(pts, cents, k=3, strategy="broadcast").count() == 0
+
+
+def test_knn_broadcast_skips_points_without_coordinates(spark):
+    pts = spark.createDataFrame(
+        [("p", 0.0, 0.0), ("no_lon", None, 0.0), ("no_lat", 0.0, None)],
+        "url string, lon double, lat double",
+    )
+    cents = spark.createDataFrame([("t0", 1.0, 0.0)], "tile_id string, cx double, cy double")
+    out = sj.knn_centroids(pts, cents, k=1, strategy="broadcast").collect()
+    assert [(r.url, r.tile_id, r.dist) for r in out] == [("p", "t0", 1.0)]
 
 
 def test_knn_broadcast_many_blocks_ties_at_block_edges(spark):
