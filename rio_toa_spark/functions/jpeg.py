@@ -2,22 +2,31 @@
 exercises a GENUINE JPEG decode without an external image library
 (no libjpeg binding needed) — the JPEG sibling of functions/png.py.
 
-Decoder: baseline sequential DCT (SOF0) AND progressive DCT (SOF2,
+Decoder: baseline sequential DCT (SOF0) and progressive DCT (SOF2,
 T.81 Annex G: spectral selection + successive approximation, DC and
 AC refinement scans, EOBRUN), 8-bit, grayscale or YCbCr with 4:4:4 /
-4:2:0 / 4:2:2 sampling, restart markers honored. Progressive matters
-for real web corpora, where SOF2 files are a double-digit share — a
-baseline-only decoder silently routes them to the stub.
-Encoder: baseline 4:4:4/4:2:0 (or grayscale), Annex K tables scaled
-by a quality factor, plus a progressive variant (spectral-selection
-scans; DC successively approximated) — exists so tests can mint real
-JPEG payloads in an environment with no other JPEG producer.
+4:2:0 / 4:2:2 sampling, restart markers honored. One coefficient
+path serves both: every scan, interleaved or not, decodes into a
+per-component store of quantized coefficients, and one
+reconstruction (dequantize, per-block IDCT, upsample, colour
+convert) runs at EOI. A baseline scan is the one-scan case of the
+progressive process: the full-band first pass Ss=0, Se=63, Ah=Al=0.
+Progressive matters for real web corpora, where SOF2 files are a
+double-digit share — a baseline-only decoder silently routes them to
+the stub.
+Encoder: baseline 4:4:4/4:2:0/4:2:2 (or grayscale), Annex K tables
+scaled by a quality factor, as one interleaved scan, plus a
+progressive variant (spectral-selection scans; DC successively
+approximated) — exists so tests can mint real JPEG payloads in an
+environment with no other JPEG producer. Both share one front end
+(quantized zigzag blocks), one header writer and one scan writer.
 
 The lossiness of JPEG means round-trips are asserted by PSNR, not
 bitwise; the decoder is additionally pinned by spec-level fixtures
-(hand-assembled streams with known pixel values, including AC
-successive-approximation refinement which our encoder does not emit)
-in tests/test_jpeg.py so encoder and decoder bugs cannot cancel.
+(hand-assembled streams with known pixel values, including
+non-interleaved baseline scans and AC successive-approximation
+refinement, neither of which our encoder emits) in tests/test_jpeg.py
+so encoder and decoder bugs cannot cancel.
 """
 
 from __future__ import annotations
@@ -253,6 +262,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             n = seg[5]
             for i in range(n):
                 cid, hv, tq = seg[6 + 3 * i], seg[7 + 3 * i], seg[8 + 3 * i]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0xF <= 4):
+                    raise ValueError("JPEG sampling factors must be 1..4")
                 comps.append((cid, hv >> 4, hv & 0xF, tq))
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             # extended-sequential/lossless/differential/arithmetic
@@ -288,21 +299,21 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 if idx is None:
                     raise ValueError("SOS references undefined component id %d" % cid)
                 scan.append((idx, tables >> 4, tables & 0xF))
-            reader = _BitReader(data, pos + seg_len)
-            if not progressive:
-                return _decode_scan(
-                    reader, comps, scan, qt, huff, width, height, restart_interval
-                )
-            # progressive: accumulate coefficients scan by scan; the
-            # image is reconstructed at EOI
-            if not comps:
-                raise ValueError("SOS before SOF in JPEG stream")
             ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
+            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
+            if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
+                raise ValueError("baseline scan must be Ss=0, Se=63, Ah=Al=0")
+            if progressive and ss == 0 and se != 0:
+                raise ValueError("progressive scan mixes DC and AC bands")
+            if progressive and ss > 0 and ns != 1:
+                raise ValueError("progressive AC scan must be single-component")
             if coef_store is None:
-                coef_store = _alloc_coef_store(comps, width, height)
-            _decode_progressive_scan(
+                coef_store = [
+                    np.zeros((rows, cols, 64), dtype=np.int32)
+                    for (rows, cols), _ in _grids(comps, width, height)[2]
+                ]
+            reader = _BitReader(data, pos + seg_len)
+            _read_scan(
                 reader, comps, scan, coef_store, huff,
                 width, height, restart_interval, ss, se, ah, al,
             )
@@ -317,83 +328,16 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             pos = p
             continue
         pos += seg_len
-    if progressive and coef_store is not None:
-        return _reconstruct_progressive(comps, coef_store, qt, width, height)
-    raise ValueError("no SOS segment in JPEG stream")
-
-
-def _decode_scan(reader, comps, scan, qt, huff, width, height, restart_interval):
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-    planes = []
-    for cid, h, v, tq in comps:
-        planes.append(np.zeros((mcuy * v * 8, mcux * h * 8), dtype=np.float64))
-    pred = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                reader.align_to_marker()
-                pred = [0] * len(comps)
-            mcu_count += 1
-            for comp_idx, tdc, tac in scan:
-                cid, h, v, tq = comps[comp_idx]
-                for by in range(v):
-                    for bx in range(h):
-                        coef = np.zeros(64, dtype=np.float64)
-                        t = _decode_huff(reader, huff[(0, tdc)])
-                        diff = _extend(reader.read_bits(t), t)
-                        pred[comp_idx] += diff
-                        coef[0] = pred[comp_idx]
-                        k = 1
-                        while k < 64:
-                            rs = _decode_huff(reader, huff[(1, tac)])
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            coef[k] = _extend(reader.read_bits(s), s)
-                            k += 1
-                        block = coef[np.argsort(_ZZ)].reshape(8, 8) * qt[tq]
-                        # coef order after zigzag inversion is [v, u]
-                        px = _DCT_M @ block @ _DCT_M.T + 128.0
-                        y0 = (my * v + by) * 8
-                        x0 = (mx * h + bx) * 8
-                        planes[comp_idx][y0 : y0 + 8, x0 : x0 + 8] = px
-    return _finish_planes(comps, planes, hmax, vmax, width, height)
-
-
-def _finish_planes(comps, planes, hmax, vmax, width, height) -> np.ndarray:
-    """Upsample each plane to full MCU-grid resolution, crop, and
-    color-convert — shared by the baseline and progressive paths."""
-    out_planes = []
-    for (cid, h, v, tq), plane in zip(comps, planes):
-        if h != hmax or v != vmax:
-            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
-        out_planes.append(plane[:height, :width])
-    if len(out_planes) == 1:
-        y = np.clip(np.round(out_planes[0]), 0, 255).astype(np.uint8)
-        return y[:, :, None]
-    y, cb, cr = out_planes[0], out_planes[1] - 128.0, out_planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-# --------------------------------------------- progressive (SOF2, Annex G)
+    if coef_store is None:
+        raise ValueError("no SOS segment in JPEG stream")
+    return _reconstruct(comps, coef_store, qt, width, height)
 
 
 def _grids(comps, width, height):
-    """Per-component block geometry: (padded MCU-grid block shape,
-    real block shape). Interleaved scans address the padded grid in
-    MCU order; non-interleaved scans raster over the real grid."""
+    """MCU columns and rows, and per component its block grids:
+    (padded MCU-grid shape, real shape). Interleaved scans address the
+    padded grid in MCU order; single-component scans raster over the
+    real grid."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     mcux = -(-width // (8 * hmax))
@@ -403,61 +347,57 @@ def _grids(comps, width, height):
         comp_w = -(-width * h // hmax)
         comp_h = -(-height * v // vmax)
         out.append(((mcuy * v, mcux * h), (-(-comp_h // 8), -(-comp_w // 8))))
-    return hmax, vmax, mcux, mcuy, out
+    return mcux, mcuy, out
 
 
-def _alloc_coef_store(comps, width, height):
-    _, _, _, _, grids = _grids(comps, width, height)
-    return [np.zeros((pad[0], pad[1], 64), dtype=np.int32) for pad, _ in grids]
+def _scan_units(comps, cis, width, height):
+    """The blocks of one scan over components ``cis``, in T.81 coding
+    order: one list of (comp_idx, by, bx) per restart unit. An
+    interleaved scan walks the MCUs (each v x h blocks of every scan
+    component, in scan order); a single-component scan rasters over
+    its component's real grid, one block per unit (T.81 A.2)."""
+    mcux, mcuy, grids = _grids(comps, width, height)
+    if len(cis) == 1:
+        ci = cis[0]
+        rows, cols = grids[ci][1]
+        for by in range(rows):
+            for bx in range(cols):
+                yield [(ci, by, bx)]
+        return
+    for my in range(mcuy):
+        for mx in range(mcux):
+            yield [
+                (ci, my * comps[ci][2] + by, mx * comps[ci][1] + bx)
+                for ci in cis
+                for by in range(comps[ci][2])
+                for bx in range(comps[ci][1])
+            ]
 
 
-def _decode_progressive_scan(
+def _read_scan(
     reader, comps, scan, coef_store, huff,
     width, height, restart_interval, ss, se, ah, al,
 ):
-    """One SOF2 scan (T.81 G.1.2): DC (ss==0) or AC band (ss>0),
-    first pass (ah==0) or successive-approximation refinement."""
-    hmax, vmax, mcux, mcuy, grids = _grids(comps, width, height)
-    if ss == 0 and se != 0:
-        raise ValueError("progressive scan mixes DC and AC bands")
-    if ss > 0 and len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-
-    state = {"eobrun": 0, "pred": [0] * len(comps), "count": 0}
-
-    def boundary():
-        if restart_interval and state["count"] and state["count"] % restart_interval == 0:
+    """One scan into the coefficient store (T.81 G.1.2): per block the
+    DC coefficient when ss == 0, then the AC band max(ss, 1)..se, as a
+    first pass (ah == 0) or a successive-approximation refinement. A
+    baseline scan is the full-band first pass ss=0, se=63, ah=al=0."""
+    tables = {ci: (tdc, tac) for ci, tdc, tac in scan}
+    ac_pass = _ac_first_pass if ah == 0 else _ac_refine_pass
+    state = {"eobrun": 0, "pred": [0] * len(comps)}
+    units = _scan_units(comps, [ci for ci, _, _ in scan], width, height)
+    for i, blocks in enumerate(units):
+        if restart_interval and i and i % restart_interval == 0:
             reader.align_to_marker()
             state["pred"] = [0] * len(comps)
             state["eobrun"] = 0
-        state["count"] += 1
-
-    if len(scan) > 1:
-        # interleaved (DC) scan: MCU order over the padded grid
-        for my in range(mcuy):
-            for mx in range(mcux):
-                boundary()
-                for comp_idx, tdc, _tac in scan:
-                    cid, h, v, tq = comps[comp_idx]
-                    for by in range(v):
-                        for bx in range(h):
-                            blk = coef_store[comp_idx][my * v + by, mx * h + bx]
-                            _dc_pass(reader, blk, huff, tdc, ah, al, state, comp_idx)
-    else:
-        # non-interleaved: raster over the component's real block grid
-        comp_idx, tdc, tac = scan[0]
-        nrows, ncols = grids[comp_idx][1]
-        store = coef_store[comp_idx]
-        for by in range(nrows):
-            for bx in range(ncols):
-                boundary()
-                blk = store[by, bx]
-                if ss == 0:
-                    _dc_pass(reader, blk, huff, tdc, ah, al, state, comp_idx)
-                elif ah == 0:
-                    _ac_first_pass(reader, blk, huff, tac, ss, se, al, state)
-                else:
-                    _ac_refine_pass(reader, blk, huff, tac, ss, se, al, state)
+        for ci, by, bx in blocks:
+            blk = coef_store[ci][by, bx]
+            tdc, tac = tables[ci]
+            if ss == 0:
+                _dc_pass(reader, blk, huff, tdc, ah, al, state, ci)
+            if se:
+                ac_pass(reader, blk, huff, tac, max(ss, 1), se, al, state)
 
 
 def _dc_pass(reader, blk, huff, tdc, ah, al, state, comp_idx):
@@ -489,7 +429,7 @@ def _ac_first_pass(reader, blk, huff, tac, ss, se, al, state):
             break
         k += r
         if k > se:
-            raise ValueError("progressive AC run overflows band")
+            raise ValueError("AC run overflows band")
         blk[k] = _extend(reader.read_bits(s), s) << al
         k += 1
 
@@ -545,15 +485,12 @@ def _ac_refine_pass(reader, blk, huff, tac, ss, se, al, state):
         state["eobrun"] -= 1
 
 
-def _reconstruct_progressive(comps, coef_store, qt, width, height) -> np.ndarray:
-    """Dequantize + IDCT every accumulated block and assemble exactly
-    like the baseline path — per-block `M @ (coef * qt) @ M.T`, the
-    IDENTICAL float64 op order `_decode_scan` uses, so a progressive
-    stream decodes bit-for-bit the same as a baseline stream carrying
-    the same quantized coefficients. (A vectorized einsum over the
-    block grid sums in a different order; values that straddle a .5
-    rounding boundary then flip by one — caught by the
-    progressive==baseline hypothesis property.)"""
+def _reconstruct(comps, coef_store, qt, width, height) -> np.ndarray:
+    """Dequantize + IDCT every stored block, upsample each plane to
+    full MCU-grid resolution, crop, and colour-convert. The IDCT is
+    per block, `M @ (coef * q) @ M.T`, on purpose: a vectorized einsum
+    over the block grid sums in a different order, and values that
+    straddle a .5 rounding boundary then flip by one."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     inv_zz = np.argsort(_ZZ)
@@ -570,8 +507,18 @@ def _reconstruct_progressive(comps, coef_store, qt, width, height) -> np.ndarray
                 plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
                     _DCT_M @ block @ _DCT_M.T + 128.0
                 )
-        planes.append(plane)
-    return _finish_planes(comps, planes, hmax, vmax, width, height)
+        if h != hmax or v != vmax:
+            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
+        planes.append(plane[:height, :width])
+    if len(planes) == 1:
+        y = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
+        return y[:, :, None]
+    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
+    r = y + 1.402 * cr
+    g = y - 0.344136 * cb - 0.714136 * cr
+    b = y + 1.772 * cb
+    rgb = np.stack([r, g, b], axis=2)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
 # --------------------------------------------------------------- encoder
@@ -606,40 +553,137 @@ def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(out, 1, 255).astype(np.int32)
 
 
-def _encode_block(bw, block, q, dc_codes, ac_codes, pred):
-    coef = _DCT_M.T @ (block - 128.0) @ _DCT_M
-    # coefficients are [v, u]; quantize then zigzag
-    qc = np.round(coef / q).astype(np.int64)
-    zz = qc.reshape(-1)[_ZZ]
-    diff = int(zz[0]) - pred
-    t = int(diff).bit_length() if diff else 0
-    code, length = dc_codes[t]
-    bw.write(code, length)
-    if t:
-        v = diff if diff > 0 else diff + (1 << t) - 1
-        bw.write(v & ((1 << t) - 1), t)
-    run = 0
-    last_nz = np.nonzero(zz[1:])[0]
-    end = (last_nz[-1] + 2) if last_nz.size else 1
-    for k in range(1, end):
-        c = int(zz[k])
-        if c == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]
-            bw.write(code, length)
-            run -= 16
-        s = abs(c).bit_length()
-        code, length = ac_codes[(run << 4) | s]
-        bw.write(code, length)
-        v = c if c > 0 else c + (1 << s) - 1
-        bw.write(v & ((1 << s) - 1), s)
-        run = 0
-    if end < 64:
-        code, length = ac_codes[0x00]
-        bw.write(code, length)
-    return int(zz[0])
+# encoder Huffman codes, [luma, chroma]: symbol -> (code, length)
+_DC_CODES = [_encode_codes(*_DC_LUMA), _encode_codes(*_DC_CHROMA)]
+_AC_CODES = [_encode_codes(*_AC_LUMA), _encode_codes(*_AC_CHROMA)]
+
+# luma (h, v) sampling factors per chroma layout; chroma is 1x1
+_SAMPLING = {"444": (1, 1), "420": (2, 2), "422": (2, 1)}
+
+
+def _segment(marker: int, payload: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+
+def _quantized_blocks(arr, quality, subsampling, layouts):
+    """The encoder front end: uint8 (H, W[, C]) -> (height, width,
+    frame components (id, h, v, tq), quantization tables, per
+    component its quantized coefficients (by, bx, 64) in zigzag order
+    over the padded MCU grid). Colour convert, edge-pad to whole MCUs,
+    average chroma over each (h, v) cell, then a per-block forward
+    DCT `M.T @ B @ M` and quantize (per block on purpose: a vectorized
+    einsum sums in a different order, and a coefficient on a .5
+    quantization boundary then rounds the other way)."""
+    arr = np.asarray(arr, dtype=np.uint8)
+    if arr.ndim == 2:
+        arr = arr[:, :, None]
+    h, w, c = arr.shape
+    if c not in (1, 3):
+        raise ValueError("JPEG encoder supports 1 or 3 channels, got %d" % c)
+    if subsampling not in layouts:
+        raise ValueError(
+            "subsampling must be %s or %r"
+            % (", ".join(repr(s) for s in layouts[:-1]), layouts[-1])
+        )
+    hs, vs = _SAMPLING[subsampling] if c == 3 else (1, 1)
+    qtabs = [_quality_scale(_K1_LUMA, quality), _quality_scale(_K2_CHROMA, quality)][: min(c, 2)]
+    if c == 3:
+        f = arr.astype(np.float64)
+        planes = [
+            0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2],
+            -0.168736 * f[..., 0] - 0.331264 * f[..., 1] + 0.5 * f[..., 2] + 128.0,
+            0.5 * f[..., 0] - 0.418688 * f[..., 1] - 0.081312 * f[..., 2] + 128.0,
+        ]
+    else:
+        planes = [arr[..., 0].astype(np.float64)]
+    comps = [(1, hs, vs, 0), (2, 1, 1, 1), (3, 1, 1, 1)][:c]
+    ph, pw = -(-h // (8 * vs)) * 8 * vs, -(-w // (8 * hs)) * 8 * hs
+    blocks = []
+    for i, p in enumerate(planes):
+        p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
+        if i and (hs, vs) != (1, 1):
+            p = p.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
+        q = qtabs[min(i, 1)]
+        ny, nx = p.shape[0] // 8, p.shape[1] // 8
+        qz = np.empty((ny, nx, 64), dtype=np.int64)
+        for by in range(ny):
+            for bx in range(nx):
+                coef = _DCT_M.T @ (p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0) @ _DCT_M
+                qz[by, bx] = np.round(coef / q).reshape(-1)
+        blocks.append(qz[:, :, _ZZ])
+    return h, w, comps, qtabs, blocks
+
+
+def _headers(sof, h, w, comps, qtabs, restart_interval) -> bytearray:
+    """SOI, DQT, SOF (0xC0 baseline / 0xC2 progressive), the Annex K
+    DHT tables and, with a restart interval, DRI."""
+    out = bytearray(b"\xff\xd8")
+    for tq, q in enumerate(qtabs):
+        out += _segment(0xDB, bytes([tq]) + bytes(q.reshape(-1)[_ZZ].astype(np.uint8)))
+    frame = bytearray([8]) + struct.pack(">HH", h, w) + bytes([len(comps)])
+    for cid, hs, vs, tq in comps:
+        frame += bytes([cid, hs << 4 | vs, tq])
+    out += _segment(sof, bytes(frame))
+    for tc, th, (bits, values) in (
+        (0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)
+    )[: 2 * len(qtabs)]:
+        out += _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(values))
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    return out
+
+
+def _put(bw, codes, run, value):
+    """Huffman symbol (run << 4 | size) then ``value`` in size bits
+    (T.81 F.1.2.1); run=0, value=0 is EOB and run=15, value=0 ZRL."""
+    s = abs(value).bit_length()
+    bw.write(*codes[run << 4 | s])
+    if s:
+        bw.write(value if value > 0 else value + (1 << s) - 1, s)
+
+
+def _write_scan(out, h, w, comps, blocks, cis, restart_interval, ss, se, ah, al):
+    """Append one scan over components ``cis`` to ``out``: its SOS
+    header, then per block the DC coefficient when ss == 0 (first
+    pass: the difference of coef >> al; refinement: bit al) and the AC
+    band max(ss, 1)..se run-length coded (first pass at al=0 only).
+    RSTn every ``restart_interval`` units resets the DC predictors."""
+    sos = bytearray([len(cis)])
+    for ci in cis:
+        t = min(ci, 1)
+        sos += bytes([ci + 1, t << 4 | t])
+    out += _segment(0xDA, bytes(sos + bytes([ss, se, ah << 4 | al])))
+    bw = _BitWriter()
+    pred = [0] * len(comps)
+    for i, unit in enumerate(_scan_units(comps, cis, w, h)):
+        if restart_interval and i and i % restart_interval == 0:
+            bw.flush()
+            bw.out += bytes([0xFF, 0xD0 + (i // restart_interval - 1) % 8])
+            pred = [0] * len(comps)
+        for ci, by, bx in unit:
+            zz = blocks[ci][by, bx]
+            t = min(ci, 1)
+            if ss == 0 and ah:
+                bw.write((int(zz[0]) >> al) & 1, 1)
+            elif ss == 0:
+                dc = int(zz[0]) >> al
+                _put(bw, _DC_CODES[t], 0, dc - pred[ci])
+                pred[ci] = dc
+            if se:
+                band = zz[max(ss, 1) : se + 1]
+                nz = np.flatnonzero(band)
+                k0 = 0
+                for k in nz.tolist():
+                    run = k - k0
+                    while run > 15:
+                        _put(bw, _AC_CODES[t], 15, 0)
+                        run -= 16
+                    _put(bw, _AC_CODES[t], run, int(band[k]))
+                    k0 = k + 1
+                if k0 < len(band):
+                    _put(bw, _AC_CODES[t], 0, 0)  # EOB
+    bw.flush()
+    out += bw.out
 
 
 def encode_jpeg(
@@ -652,138 +696,16 @@ def encode_jpeg(
     (Annex K tables scaled by quality; chroma subsampling '444',
     '420' — 2x2-averaged chroma, MCUs of four luma blocks + Cb + Cr —
     or '422': horizontally-averaged chroma, MCUs of two luma blocks +
-    Cb + Cr). ``restart_interval`` > 0
+    Cb + Cr), one interleaved full-band scan. ``restart_interval`` > 0
     emits DRI + RSTn markers every that many MCUs (resetting the DC
     predictors), exercising the decoder's resync path."""
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, c = arr.shape
-    if c not in (1, 3):
-        raise ValueError("JPEG encoder supports 1 or 3 channels, got %d" % c)
-    if subsampling not in ("444", "420", "422"):
-        raise ValueError("subsampling must be '444', '420' or '422'")
-    sub2 = c == 3 and subsampling == "420"
-    sub22 = c == 3 and subsampling == "422"
-    luma_hv = 0x22 if sub2 else (0x21 if sub22 else 0x11)
-    ql = _quality_scale(_K1_LUMA, quality)
-    qc = _quality_scale(_K2_CHROMA, quality)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes(ql.reshape(-1)[_ZZ].astype(np.uint8)))
-    if c == 3:
-        out += seg(0xDB, bytes([1]) + bytes(qc.reshape(-1)[_ZZ].astype(np.uint8)))
-    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([c])
-    for i in range(c):
-        sof += bytes([i + 1, luma_hv if i == 0 else 0x11, 0 if i == 0 else 1])
-    out += seg(0xC0, bytes(sof))
-    for tc, th, (bits, values) in (
-        (0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)
-    )[: 2 if c == 1 else 4]:
-        out += seg(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(values))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytearray([c])
-    for i in range(c):
-        sos += bytes([i + 1, 0x00 if i == 0 else 0x11])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, bytes(sos))
-
-    if c == 3:
-        f = arr.astype(np.float64)
-        y = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-        cb = -0.168736 * f[..., 0] - 0.331264 * f[..., 1] + 0.5 * f[..., 2] + 128.0
-        cr = 0.5 * f[..., 0] - 0.418688 * f[..., 1] - 0.081312 * f[..., 2] + 128.0
-        planes = [(y, ql, 0), (cb, qc, 1), (cr, qc, 1)]
-    else:
-        planes = [(arr[..., 0].astype(np.float64), ql, 0)]
-
-    dc_codes = [_encode_codes(*_DC_LUMA), _encode_codes(*_DC_CHROMA)]
-    ac_codes = [_encode_codes(*_AC_LUMA), _encode_codes(*_AC_CHROMA)]
-    bw = _BitWriter()
-    mcu_state = {"idx": 0, "rst": 0}
-
-    def mcu_boundary(pred):
-        """Emit an RSTn marker (and reset DC predictors) every
-        restart_interval MCUs."""
-        i = mcu_state["idx"]
-        mcu_state["idx"] += 1
-        if restart_interval and i and i % restart_interval == 0:
-            bw.flush()
-            bw.out += bytes([0xFF, 0xD0 + (mcu_state["rst"] % 8)])
-            mcu_state["rst"] += 1
-            for j in range(len(pred)):
-                pred[j] = 0
-
-    if sub22:
-        # 4:2:2 MCU = two side-by-side 8x8 luma blocks + one Cb + one
-        # Cr (chroma downsampled horizontally only)
-        ph, pw = -(-h // 8) * 8, -(-w // 16) * 16
-        y = np.pad(planes[0][0], ((0, ph - h), (0, pw - w)), mode="edge")
-        chroma = []
-        for p, q, tid in planes[1:]:
-            p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-            chroma.append(p.reshape(ph, pw // 2, 2).mean(axis=2))
-        pred = [0, 0, 0]
-        for my in range(ph // 8):
-            for mx in range(pw // 16):
-                mcu_boundary(pred)
-                for bx in (0, 1):
-                    x0 = mx * 16 + bx * 8
-                    pred[0] = _encode_block(
-                        bw, y[my * 8 : my * 8 + 8, x0 : x0 + 8], ql,
-                        dc_codes[0], ac_codes[0], pred[0]
-                    )
-                for i, p in enumerate(chroma):
-                    x0 = mx * 8
-                    pred[i + 1] = _encode_block(
-                        bw, p[my * 8 : my * 8 + 8, x0 : x0 + 8], qc,
-                        dc_codes[1], ac_codes[1], pred[i + 1]
-                    )
-    elif not sub2:
-        # pad every plane to a multiple of 8 by edge replication
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        padded = [
-            (np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge"), q, tid)
-            for p, q, tid in planes
-        ]
-        pred = [0] * len(padded)
-        for by in range(ph // 8):
-            for bx in range(pw // 8):
-                mcu_boundary(pred)
-                for i, (p, q, tid) in enumerate(padded):
-                    block = p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                    pred[i] = _encode_block(bw, block, q, dc_codes[tid], ac_codes[tid], pred[i])
-    else:
-        # 4:2:0 MCU = four 8x8 luma blocks + one 8x8 Cb + one 8x8 Cr
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        y = np.pad(planes[0][0], ((0, ph - h), (0, pw - w)), mode="edge")
-        chroma = []
-        for p, q, tid in planes[1:]:
-            p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-            p = p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            chroma.append(p)
-        pred = [0, 0, 0]
-        for my in range(ph // 16):
-            for mx in range(pw // 16):
-                mcu_boundary(pred)
-                for by, bx in ((0, 0), (0, 1), (1, 0), (1, 1)):
-                    y0, x0 = my * 16 + by * 8, mx * 16 + bx * 8
-                    pred[0] = _encode_block(
-                        bw, y[y0 : y0 + 8, x0 : x0 + 8], ql, dc_codes[0], ac_codes[0], pred[0]
-                    )
-                for i, p in enumerate(chroma):
-                    y0, x0 = my * 8, mx * 8
-                    pred[i + 1] = _encode_block(
-                        bw, p[y0 : y0 + 8, x0 : x0 + 8], qc, dc_codes[1], ac_codes[1], pred[i + 1]
-                    )
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    h, w, comps, qtabs, blocks = _quantized_blocks(
+        arr, quality, subsampling, ("444", "420", "422")
+    )
+    out = _headers(0xC0, h, w, comps, qtabs, restart_interval)
+    cis = list(range(len(comps)))
+    _write_scan(out, h, w, comps, blocks, cis, restart_interval, 0, 63, 0, 0)
+    return bytes(out + b"\xff\xd9")
 
 
 def encode_jpeg_progressive(
@@ -794,7 +716,8 @@ def encode_jpeg_progressive(
 ) -> bytes:
     """uint8 (H, W), (H, W, 1) or (H, W, 3) -> progressive (SOF2)
     JPEG bytes, 4:4:4 or 4:2:0 (the dominant shape of real web
-    progressive files). Scan script: interleaved DC at Al=1, DC
+    progressive files), carrying the same quantized coefficients as
+    ``encode_jpeg``. Scan script: interleaved DC at Al=1, DC
     refinement at Al=0 (successive approximation), then one full
     spectral-selection AC scan (1..63, Al=0) per component in its own
     non-interleaved block raster — the minimal script that exercises
@@ -803,194 +726,10 @@ def encode_jpeg_progressive(
     data. (AC successive approximation is exercised by hand-built
     spec fixtures in tests/test_jpeg.py; this encoder does not emit
     it.)"""
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    h, w, c = arr.shape
-    if c not in (1, 3):
-        raise ValueError("JPEG encoder supports 1 or 3 channels, got %d" % c)
-    if subsampling not in ("444", "420"):
-        raise ValueError("subsampling must be '444' or '420'")
-    sub2 = c == 3 and subsampling == "420"
-    ql = _quality_scale(_K1_LUMA, quality)
-    qc = _quality_scale(_K2_CHROMA, quality)
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes(ql.reshape(-1)[_ZZ].astype(np.uint8)))
-    if c == 3:
-        out += seg(0xDB, bytes([1]) + bytes(qc.reshape(-1)[_ZZ].astype(np.uint8)))
-    sof = bytearray([8]) + struct.pack(">HH", h, w) + bytes([c])
-    luma_hv = 0x22 if sub2 else 0x11
-    for i in range(c):
-        sof += bytes([i + 1, luma_hv if i == 0 else 0x11, 0 if i == 0 else 1])
-    out += seg(0xC2, bytes(sof))
-    for tc, th, (bits, values) in (
-        (0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)
-    )[: 2 if c == 1 else 4]:
-        out += seg(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(values))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-
-    # quantized coefficients per component, zigzag order, over each
-    # component's PADDED (MCU-grid) block raster; real_grid tracks the
-    # sub-rectangle of blocks the non-interleaved AC scans must cover
-    if c == 3:
-        f = arr.astype(np.float64)
-        y = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-        cb = -0.168736 * f[..., 0] - 0.331264 * f[..., 1] + 0.5 * f[..., 2] + 128.0
-        cr = 0.5 * f[..., 0] - 0.418688 * f[..., 1] - 0.081312 * f[..., 2] + 128.0
-        planes = [(y, ql, 0), (cb, qc, 1), (cr, qc, 1)]
-    else:
-        planes = [(arr[..., 0].astype(np.float64), ql, 0)]
-
-    if sub2:
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        padded = []
-        yp = np.pad(planes[0][0], ((0, ph - h), (0, pw - w)), mode="edge")
-        padded.append((yp, ql))
-        for p, q, tid in planes[1:]:
-            p = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-            padded.append((p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3)), q))
-        # real AC grids: luma ceil(h/8) x ceil(w/8) (may be smaller
-        # than the padded 16-aligned grid); chroma real == padded
-        real_grid = [(-(-h // 8), -(-w // 8))] + [
-            (-(-(-(-h // 2)) // 8), -(-(-(-w // 2)) // 8))
-        ] * 2
-    else:
-        ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-        padded = [
-            (np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge"), q)
-            for p, q, tid in planes
-        ]
-        real_grid = [(ph // 8, pw // 8)] * c
-
-    comp_zz = []
-    for p, q in padded:
-        hh, ww = p.shape
-        ny, nx = hh // 8, ww // 8
-        # per-block forward DCT with the IDENTICAL float64 op order as
-        # the baseline encoder's _encode_block (M.T @ B @ M) — a
-        # vectorized einsum sums in a different order, and a
-        # coefficient exactly on a .5 quantization boundary then
-        # rounds differently, breaking progressive==baseline bitwise
-        # (caught by the hypothesis property)
-        qz = np.empty((ny, nx, 64), dtype=np.int64)
-        for by in range(ny):
-            for bx in range(nx):
-                blk = p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                coef = _DCT_M.T @ blk @ _DCT_M
-                qz[by, bx] = np.round(coef / q).reshape(-1)
-        comp_zz.append(qz[:, :, _ZZ])
-    dc_codes = [_encode_codes(*_DC_LUMA), _encode_codes(*_DC_CHROMA)]
-    ac_codes = [_encode_codes(*_AC_LUMA), _encode_codes(*_AC_CHROMA)]
-
-    def sos(comps_in_scan, ss, se, ah, al):
-        payload = bytearray([len(comps_in_scan)])
-        for ci in comps_in_scan:
-            tid = 0 if ci == 0 else 1
-            payload += bytes([ci + 1, (tid << 4) | tid])
-        payload += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, bytes(payload))
-
-    def mcus():
-        """Lists of (comp_idx, by, bx) — one list per MCU, blocks in
-        T.81 interleaved order."""
-        if not sub2:
-            ny, nx = comp_zz[0].shape[:2]
-            for by in range(ny):
-                for bx in range(nx):
-                    yield [(ci, by, bx) for ci in range(c)]
-        else:
-            for my in range(ph // 16):
-                for mx in range(pw // 16):
-                    yield (
-                        [(0, my * 2 + by, mx * 2 + bx) for by in range(2) for bx in range(2)]
-                        + [(1, my, mx), (2, my, mx)]
-                    )
-
-    def rst_boundary(bw, st):
-        """Emit RSTn (flushing the bit buffer) every restart_interval
-        units; returns True when a marker was emitted so DC scans can
-        reset their predictors. Unit = MCU for interleaved scans,
-        block for non-interleaved AC scans (T.81 E.1.4)."""
-        fired = bool(restart_interval) and st["i"] > 0 and st["i"] % restart_interval == 0
-        if fired:
-            bw.flush()
-            bw.out += bytes([0xFF, 0xD0 + (st["rst"] % 8)])
-            st["rst"] += 1
-        st["i"] += 1
-        return fired
-
-    # scan 1: interleaved DC, Al=1 (coarse approximation)
-    out += sos(list(range(c)), 0, 0, 0, 1)
-    bw = _BitWriter()
-    pred = [0] * c
-    st = {"i": 0, "rst": 0}
-    for blocks in mcus():
-        if rst_boundary(bw, st):
-            pred = [0] * c
-        for ci, by, bx in blocks:
-            tid = 0 if ci == 0 else 1
-            dc = int(comp_zz[ci][by, bx, 0]) >> 1  # point transform Al=1
-            diff = dc - pred[ci]
-            pred[ci] = dc
-            t = abs(diff).bit_length()
-            code, length = dc_codes[tid][t]
-            bw.write(code, length)
-            if t:
-                v = diff if diff > 0 else diff + (1 << t) - 1
-                bw.write(v & ((1 << t) - 1), t)
-    bw.flush()
-    out += bw.out
-
-    # scan 2: DC refinement to Al=0 — one raw bit per block
-    out += sos(list(range(c)), 0, 0, 1, 0)
-    bw = _BitWriter()
-    st = {"i": 0, "rst": 0}
-    for blocks in mcus():
-        rst_boundary(bw, st)
-        for ci, by, bx in blocks:
-            bw.write(int(comp_zz[ci][by, bx, 0]) & 1, 1)
-    bw.flush()
-    out += bw.out
-
-    # scans 3..: per-component AC band 1..63 at Al=0 (EOB0 per block),
-    # non-interleaved raster over the component's REAL block grid
-    for ci in range(c):
-        tid = 0 if ci == 0 else 1
-        out += sos([ci], 1, 63, 0, 0)
-        bw = _BitWriter()
-        nr, nc_ = real_grid[ci]
-        st = {"i": 0, "rst": 0}
-        for by in range(nr):
-            for bx in range(nc_):
-                rst_boundary(bw, st)
-                zz = comp_zz[ci][by, bx]
-                run = 0
-                last_nz = np.nonzero(zz[1:])[0]
-                end = (last_nz[-1] + 2) if last_nz.size else 1
-                for k in range(1, end):
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, length = ac_codes[tid][0xF0]
-                        bw.write(code, length)
-                        run -= 16
-                    s = abs(v).bit_length()
-                    code, length = ac_codes[tid][(run << 4) | s]
-                    bw.write(code, length)
-                    mag = v if v > 0 else v + (1 << s) - 1
-                    bw.write(mag & ((1 << s) - 1), s)
-                    run = 0
-                if end < 64:
-                    code, length = ac_codes[tid][0x00]
-                    bw.write(code, length)
-        bw.flush()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    h, w, comps, qtabs, blocks = _quantized_blocks(arr, quality, subsampling, ("444", "420"))
+    out = _headers(0xC2, h, w, comps, qtabs, restart_interval)
+    cis = list(range(len(comps)))
+    script = [(cis, 0, 0, 0, 1), (cis, 0, 0, 1, 0)] + [([ci], 1, 63, 0, 0) for ci in cis]
+    for scan_cis, ss, se, ah, al in script:
+        _write_scan(out, h, w, comps, blocks, scan_cis, restart_interval, ss, se, ah, al)
+    return bytes(out + b"\xff\xd9")

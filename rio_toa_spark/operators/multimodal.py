@@ -86,11 +86,12 @@ def _fake_decode(payload: bytes) -> np.ndarray:
 
 # parse failures a corrupt payload can surface from the pure-numpy
 # codecs: ValueError (bad header / unsupported variant), KeyError
-# (missing huff/qt table id), IndexError (bad AC run), struct.error
-# (truncated segment), zlib.error (corrupt IDAT stream). All must fall
-# through to the stub — one bad payload must never kill the whole
-# Arrow batch (fuzz-tested in tests/test_multimodal.py)
-_PARSE_ERRORS = (ValueError, KeyError, IndexError, struct.error, zlib.error)
+# (missing huff/qt table id), IndexError (bad AC run), OverflowError
+# (a JPEG coefficient too large for the int32 coefficient store),
+# struct.error (truncated segment), zlib.error (corrupt IDAT stream).
+# All must fall through to the stub — one bad payload must never kill
+# the whole Arrow batch (fuzz-tested in tests/test_multimodal.py)
+_PARSE_ERRORS = (ValueError, KeyError, IndexError, OverflowError, struct.error, zlib.error)
 
 
 def _decode_still(p: bytes) -> tuple[np.ndarray, str] | None:

@@ -223,7 +223,10 @@ def knn_centroids(
     lat: str = "lat",
     point_key: str = "url",
 ) -> DataFrame:
-    """kNN against an arbitrary (tile_id, cx, cy) centroid table."""
+    """kNN against an arbitrary (tile_id, cx, cy) centroid table. A
+    point whose lon or lat is null has no neighbours under either
+    strategy: it is dropped before the strategy runs."""
+    points_df = points_df.where("%s IS NOT NULL AND %s IS NOT NULL" % (lon, lat))
     if strategy == "broadcast":
         return _knn_broadcast(points_df, centroids_df, k, lon, lat, point_key)
     if strategy == "cells":
@@ -306,12 +309,9 @@ def _knn_broadcast(points_df, tiles, k, lon, lat, point_key):
     # a Python kernel touches and would ship (and scan) every page column —
     # including the ~0.5 KB html payloads — through Arrow into Python
     # (guide rule; measured 2.1 s -> 1.0 s on the 400k-page bench).
-    # A point without coordinates has no neighbours, as in the cells
-    # strategy (its cell join drops it); the kernel reads the
-    # coordinates as null-free numpy views.
-    points_df = points_df.select(point_key, lon, lat).where(
-        "%s IS NOT NULL AND %s IS NOT NULL" % (lon, lat)
-    )
+    # knn_centroids dropped the points without coordinates, so the
+    # kernel reads them as null-free numpy views.
+    points_df = points_df.select(point_key, lon, lat)
     # Spark's ascending tile_id order, sorted on the driver: nulls
     # first, then code-point order (which is Spark's UTF-8 byte order)
     tile_rows = sorted(tiles.collect(), key=lambda r: (r.tile_id is not None, r.tile_id or ""))
@@ -363,12 +363,10 @@ def _knn_cells(points_df, tiles, k, level, radius, lon, lat, point_key):
     so a point's ring result is provably exact iff it found >= k
     candidates AND its kth distance < R*min(dx, dy). Points failing
     either condition (sparse regions — e.g. mid-ocean pages) are
-    rerouted through the exact broadcast kernel; the union is exact
-    for every point. One candidate shuffle + one window shuffle; the
+    rerouted through an exact cross-join pass; the union is exact for
+    every point. One candidate shuffle + one window shuffle; the
     straggler set is tiny by construction.
     """
-    from pyspark.sql.window import Window
-
     dx, dy = cell_mod.cell_size_degrees(level)
     guard = radius * min(dx, dy)
     n = 1 << level
@@ -382,20 +380,7 @@ def _knn_cells(points_df, tiles, k, level, radius, lon, lat, point_key):
         "GREATEST(%s - %d, 0)" % (gy, radius), "LEAST(%s + %d, %d)" % (gy, radius, n - 1),
     )
     cand = tiles.selectExpr("tile_id", "cx", "cy", "explode(%s) AS cell" % ring)
-    # rank on squared distance (same order as dist up to IEEE sqrt
-    # rounding collisions — d^2 is strictly more discriminating, and
-    # the broadcast kernel + SQL twin rank identically on d^2)
-    dist2 = (F.col(lon) - F.col("cx")) * (F.col(lon) - F.col("cx")) + (F.col(lat) - F.col("cy")) * (F.col(lat) - F.col("cy"))
-    w = Window.partitionBy(point_key).orderBy(F.col("dist2").asc(), F.col("tile_id").asc())
-    ranked = (
-        pts.join(cand, "cell")
-        .withColumn("dist2", dist2)
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("dist", F.sqrt(F.col("dist2")))
-        .drop("dist2")
-        .where(F.col("rank") <= k)
-        .select(point_key, "tile_id", "dist", F.col("rank").cast("int").alias("rank"))
-    )
+    ranked = _top_k(pts.join(cand, "cell"), k, lon, lat, point_key)
     complete_keys = (
         ranked.groupBy(point_key)
         .agg(F.count("*").alias("n"), F.max("dist").alias("kth"))
@@ -408,24 +393,24 @@ def _knn_cells(points_df, tiles, k, level, radius, lon, lat, point_key):
     # never _knn_broadcast, which collects the full centroid table to
     # the driver and would crash at exactly the scale that motivates
     # the 'cells' strategy. The straggler side is tiny by construction,
-    # so Spark broadcasts it and streams the centroid side map-side.
-    fallback = _knn_exact_shuffle(stragglers, tiles, k, lon, lat, point_key)
-    return exact_part.unionByName(fallback)
+    # so Spark broadcasts it and streams the centroid side map-side;
+    # the cost is |stragglers| x |centroids| scored rows.
+    pairs = stragglers.select(point_key, lon, lat).crossJoin(tiles.select("tile_id", "cx", "cy"))
+    return exact_part.unionByName(_top_k(pairs, k, lon, lat, point_key))
 
 
-def _knn_exact_shuffle(points_df, tiles, k, lon, lat, point_key):
-    """Exact kNN with no driver-side collect of either input: cross
-    join + per-point window top-k. Intended for small point sets (the
-    'cells' stragglers); cost is |points| x |centroids| scored rows,
-    all executor-side."""
+def _top_k(pairs, k, lon, lat, point_key):
+    """The k nearest of each point's (point, centroid) candidate pairs:
+    a per-point row_number window on (d^2, tile_id), then the distance
+    of the kept rows. Ranking on d^2 gives the order of dist up to IEEE
+    sqrt rounding collisions (d^2 is strictly more discriminating), and
+    the broadcast kernel and the SQL oracles rank on d^2 too."""
     from pyspark.sql.window import Window
 
     dist2 = (F.col(lon) - F.col("cx")) * (F.col(lon) - F.col("cx")) + (F.col(lat) - F.col("cy")) * (F.col(lat) - F.col("cy"))
     w = Window.partitionBy(point_key).orderBy(F.col("dist2").asc(), F.col("tile_id").asc())
     return (
-        points_df.select(point_key, lon, lat)
-        .crossJoin(tiles.select("tile_id", "cx", "cy"))
-        .withColumn("dist2", dist2)
+        pairs.withColumn("dist2", dist2)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(

@@ -1,13 +1,18 @@
-"""Pure-numpy baseline JPEG codec (functions/jpeg.py).
+"""Pure-numpy JPEG codec (functions/jpeg.py): baseline (SOF0) and
+progressive (SOF2) decode through one coefficient path, and the
+baseline and progressive encoders.
 
-The decoder is pinned by a SPEC-LEVEL fixture: a minimal grayscale
-JPEG hand-assembled from ITU-T T.81 (Annex K tables, hand-derived
-huffman bits), so an encoder bug cannot cancel a decoder bug. The
-encoder is then exercised via decode round-trips (PSNR — JPEG is
-lossy) and a bitstream-equality check against the hand-derived
-entropy bytes for a flat block.
+The decoder is pinned by SPEC-LEVEL fixtures: streams hand-assembled
+from ITU-T T.81 (Annex K tables, hand-derived huffman bits), so an
+encoder bug cannot cancel a decoder bug — a flat grayscale block,
+non-interleaved baseline scans, and progressive successive
+approximation / EOBRUN. The encoders are exercised via decode
+round-trips (PSNR — JPEG is lossy), a bitstream-equality check
+against the hand-derived entropy bytes for a flat block, and md5
+digests of their output bytes over a grid of shapes and options.
 """
 
+import hashlib
 import struct
 
 import numpy as np
@@ -47,6 +52,91 @@ def test_decode_spec_level_fixture():
     assert arr.shape == (8, 8, 1)
     assert arr.dtype == np.uint8
     assert (arr == 128).all()
+
+
+def _put(write, codes, run, value):
+    """Annex K symbol (run << 4 | size) then the value's size bits."""
+    size = abs(value).bit_length()
+    write(*codes[run << 4 | size])
+    if size:
+        write(value if value > 0 else value + (1 << size) - 1, size)
+
+
+def _baseline_block(write, dc_codes, ac_codes, diff, zz):
+    """One baseline block: DC difference, then AC runs + EOB."""
+    _put(write, dc_codes, 0, diff)
+    run = 0
+    for k in range(1, 64):
+        if zz[k] == 0:
+            run += 1
+            continue
+        while run > 15:
+            _put(write, ac_codes, 15, 0)
+            run -= 16
+        _put(write, ac_codes, run, int(zz[k]))
+        run = 0
+    if run:
+        _put(write, ac_codes, 0, 0)
+
+
+def _three_component_sof0(coefs, interleaved):
+    """A 16x16 YCbCr 4:4:4 SOF0 stream (qt all ones, Annex K luma
+    tables for every component) carrying zigzag coefficients
+    ``coefs[comp][by][bx]``: one interleaved scan, or one
+    non-interleaved full-band scan per component."""
+    dc = jpeg._encode_codes(*jpeg._DC_LUMA)
+    ac = jpeg._encode_codes(*jpeg._AC_LUMA)
+    out = bytearray(b"\xff\xd8")
+    out += _seg(0xDB, bytes([0]) + bytes([1] * 64))
+    frame = bytes([8]) + struct.pack(">HH", 16, 16) + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
+    out += _seg(0xC0, frame)
+    for th, (bits, values) in ((0x00, jpeg._DC_LUMA), (0x10, jpeg._AC_LUMA)):
+        out += _seg(0xC4, bytes([th]) + bytes(bits) + bytes(values))
+    scans = [[0, 1, 2]] if interleaved else [[0], [1], [2]]
+    for comps in scans:
+        header = bytes([len(comps)]) + b"".join(bytes([ci + 1, 0x00]) for ci in comps)
+        out += _seg(0xDA, header + bytes([0, 63, 0]))
+        bw = jpeg._BitWriter()
+        pred = [0, 0, 0]
+        for by in range(2):
+            for bx in range(2):
+                for ci in comps:
+                    zz = coefs[ci][by][bx]
+                    _baseline_block(bw.write, dc, ac, int(zz[0]) - pred[ci], zz)
+                    pred[ci] = int(zz[0])
+        bw.flush()
+        out += bw.out
+    return bytes(out + b"\xff\xd9")
+
+
+def _sof0_coefficients():
+    rng = np.random.default_rng(17)
+    coefs = np.zeros((3, 2, 2, 64), dtype=np.int64)
+    coefs[..., 0] = rng.integers(-300, 300, size=(3, 2, 2))
+    for k in (1, 2, 5, 9, 20, 40, 63):
+        coefs[..., k] = rng.integers(-40, 40, size=(3, 2, 2))
+    return coefs
+
+
+def test_decode_non_interleaved_baseline_scans():
+    """A legal SOF0 frame may code each component in its own
+    full-band scan (T.81 A.2.2); it must decode exactly like the
+    interleaved scan carrying the same coefficients."""
+    coefs = _sof0_coefficients()
+    interleaved = jpeg.decode_jpeg(_three_component_sof0(coefs, True))
+    separate = jpeg.decode_jpeg(_three_component_sof0(coefs, False))
+    assert interleaved.shape == (16, 16, 3)
+    assert np.array_equal(separate, interleaved)
+
+
+def test_baseline_scan_header_must_cover_full_band():
+    data = bytearray(_three_component_sof0(_sof0_coefficients(), True))
+    sos = data.find(b"\xff\xda")
+    se_at = sos + 4 + 1 + 2 * 3 + 1  # marker, length, Ns, 3 x (Cs, Td/Ta), Ss
+    assert data[se_at] == 63
+    data[se_at] = 5
+    with pytest.raises(ValueError, match="baseline scan"):
+        jpeg.decode_jpeg(bytes(data))
 
 
 def test_flat_rgb_block_entropy_bytes_match_hand_derivation():
@@ -381,3 +471,63 @@ def test_unsupported_sof_variants_rejected_explicitly():
         # strip the SOF segment entirely
         seg_len = int.from_bytes(good[sof_at + 2 : sof_at + 4], "big")
         jpeg.decode_jpeg(good[:sof_at] + good[sof_at + 2 + seg_len :])
+
+
+def _pinned_images():
+    y, x = np.indices((19, 23))
+    smooth = np.stack([(40 + 5 * x) % 256, (90 + 7 * y) % 256, (x * y) % 256], axis=2)
+    return {
+        "gray_1x1": np.array([[173]], np.uint8),
+        "gray_17x13": ((np.indices((17, 13)) * [[[37]], [[101]]]).sum(axis=0) % 256).astype(np.uint8),
+        "rgb_1x1": np.array([[[250, 3, 128]]], np.uint8),
+        "rgb_19x23": (smooth + (x * 13 + y * 29)[..., None] % 41).clip(0, 255).astype(np.uint8),
+    }
+
+
+# md5 over the concatenated bytes of every (subsampling, quality,
+# restart interval) combination below, per encoder and image. perfbench
+# and the tests mint their JPEG payloads with these encoders, so a
+# change in their output bytes changes those inputs.
+_PINNED_DIGESTS = {
+    ("encode_jpeg", "gray_17x13"): "d2aa6fbb3027d6dffa188b6e204f98f8",
+    ("encode_jpeg", "gray_1x1"): "c3d53793587e03e5a83c2d857b44bae5",
+    ("encode_jpeg", "rgb_19x23"): "bcd50621d1d43da4543d217f2d83109f",
+    ("encode_jpeg", "rgb_1x1"): "8db26d2969eab97f66fdd59035165be5",
+    ("encode_jpeg_progressive", "gray_17x13"): "b01901502d635a7afbba364fbc8efbc4",
+    ("encode_jpeg_progressive", "gray_1x1"): "b9a9ecb2ddfb8da652ff27a77a4fbb6f",
+    ("encode_jpeg_progressive", "rgb_19x23"): "9cc5dc83370b47f7d9003fb42ee3ba54",
+    ("encode_jpeg_progressive", "rgb_1x1"): "6023d9102937ca035fff3c7ad187258c",
+}
+
+
+def _encoded_digest(module, encoder, image):
+    layouts = ("444", "420", "422") if encoder == "encode_jpeg" else ("444", "420")
+    h = hashlib.md5()
+    for subsampling in layouts:
+        for quality in (1, 85, 100):
+            for restart_interval in (0, 1, 5):
+                h.update(
+                    getattr(module, encoder)(
+                        _pinned_images()[image], quality=quality,
+                        subsampling=subsampling, restart_interval=restart_interval,
+                    )
+                )
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("encoder,image", sorted(_PINNED_DIGESTS))
+def test_encoder_bytes_pinned(encoder, image):
+    assert _encoded_digest(jpeg, encoder, image) == _PINNED_DIGESTS[(encoder, image)]
+
+
+def test_zero_sampling_factor_rejected():
+    """A sampling factor of 0 in SOF is a parse error (ValueError, so
+    the media operators fall back to the stub), not a division by zero
+    in the block-grid geometry."""
+    good = jpeg.encode_jpeg(np.full((8, 8, 3), 90, np.uint8), quality=90)
+    hv_at = good.find(b"\xff\xc0") + 4 + 6 + 1  # marker, length, P Y X Nf, C1
+    for at, hv in ((hv_at, 0x01), (hv_at + 3, 0x10), (hv_at + 3, 0x00)):
+        bad = bytearray(good)
+        bad[at] = hv
+        with pytest.raises(ValueError, match="sampling factors"):
+            jpeg.decode_jpeg(bytes(bad))

@@ -222,18 +222,31 @@ def test_sample_video_frames_expands_rows(spark, media_df):
 def test_decode_image_corrupt_jpeg_falls_back(spark):
     # payloads that merely START with the JPEG signature must fall
     # through to the deterministic stub whatever parse error the codec
-    # hits (KeyError/IndexError/struct.error, not just ValueError) —
-    # one bad payload must never kill the Arrow batch
+    # hits (KeyError/IndexError/OverflowError/struct.error, not just
+    # ValueError) — one bad payload must never kill the Arrow batch
+    import numpy as np
+
+    from rio_toa_spark.functions.jpeg import encode_jpeg, encode_jpeg_progressive
+
     payloads = [
         b"\xff\xd8\xff" + bytes(range(64)),
         b"\xff\xd8\xff\xe0\x00",
         b"\xff\xd8\xff\xdb\x00\x04\x10" + b"\x00" * 3,
     ]
+    # a DC table whose one code ('0') means category 200, and zero
+    # entropy bytes: a 200-bit DC difference, out of any coefficient
+    # range (baseline and progressive take the same coefficient store)
+    dht = b"\xff\xc4\x00\x14\x00" + bytes([1] + [0] * 15) + bytes([200])
+    for encode in (encode_jpeg, encode_jpeg_progressive):
+        good = encode(np.full((8, 8), 90, np.uint8))
+        sos = good.find(b"\xff\xda")
+        sos_end = sos + 2 + int.from_bytes(good[sos + 2 : sos + 4], "big")
+        payloads.append(good[:sos] + dht + good[sos:sos_end] + bytes(40) + b"\xff\xd9")
     df = spark.createDataFrame(
         [(i, p) for i, p in enumerate(payloads)], "media_id long, payload binary"
     )
     rows = {r.media_id: bytes(r.pixels) for r in mm.decode_image(df).collect()}
-    assert len(rows) == 3
+    assert len(rows) == len(payloads)
     for i, p in enumerate(payloads):
         assert rows[i] == mm._fake_decode(p).tobytes()
 

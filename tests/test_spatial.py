@@ -233,13 +233,16 @@ def test_knn_broadcast_empty_centroids(spark):
     assert sj.knn_centroids(pts, cents, k=3, strategy="broadcast").count() == 0
 
 
-def test_knn_broadcast_skips_points_without_coordinates(spark):
+@pytest.mark.parametrize("strategy", ["broadcast", "cells"])
+def test_knn_skips_points_without_coordinates(spark, strategy):
+    """A point with a null lon or lat has no neighbours under either
+    strategy (no row, rather than a null-distance neighbour)."""
     pts = spark.createDataFrame(
         [("p", 0.0, 0.0), ("no_lon", None, 0.0), ("no_lat", 0.0, None)],
         "url string, lon double, lat double",
     )
     cents = spark.createDataFrame([("t0", 1.0, 0.0)], "tile_id string, cx double, cy double")
-    out = sj.knn_centroids(pts, cents, k=1, strategy="broadcast").collect()
+    out = sj.knn_centroids(pts, cents, k=1, strategy=strategy).collect()
     assert [(r.url, r.tile_id, r.dist) for r in out] == [("p", "t0", 1.0)]
 
 
