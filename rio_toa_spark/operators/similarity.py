@@ -1,23 +1,29 @@
 """Similarity search over embedding columns (array<float>).
 
-* cosine_topk       — exact brute-force top-k: native SQL dot product
-                      (zip_with + aggregate, codegen'd) + windowed
-                      row_number. The correctness baseline.
+* cosine_topk       — exact brute-force top-k: every corpus row is a
+                      candidate for every query. The correctness
+                      baseline.
 * cosine_topk_ivf   — IVF-style scale path: k-means-lite centroids
-                      (deterministic seeded sample, few Lloyd rounds on
-                      the driver over a sampled fraction); each vector
-                      assigned to its nearest centroid list; queries
-                      probe the closest n_probe lists only. Exactness
-                      is traded for a bounded candidate set — the ANN
+                      (a few Lloyd rounds on the driver over a capped,
+                      key-ordered sample); each vector is assigned to
+                      its nearest centroid list and each query scores
+                      only its n_probe closest lists. Exactness is
+                      traded for a bounded candidate set — the ANN
                       pattern that survives 10^12 rows.
 
-Deterministic tie-break everywhere: (distance DESC cosine, id ASC).
+Both run one scan (``_topk``): the queries are read on the driver and
+broadcast; the corpus streams through one numpy kernel that replays
+the SQL sequential-fold cosine (``cosine`` below, zip_with + aggregate)
+bit for bit and keeps each batch's top-k per query; one row_number
+window ranks the survivors. The IVF index only narrows each query's
+candidate rows. Both drop corpus rows whose vector is NULL.
+
+Deterministic tie-break everywhere: (cosine DESC, key ASC).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -127,31 +133,27 @@ def _list_matrix(col) -> np.ndarray:
     return flat.reshape(len(col), lens[0] if lens.size else 0)
 
 
-def _vectors_to_matrix(df: DataFrame, vec: str) -> np.ndarray:
-    """Driver-side (rows x dim) float64 matrix of an embedding column,
-    via the Arrow path instead of the row collect (measured 1.4 s vs
-    ~0.1 s at 80k x 64). Values and row order identical: Arrow
-    float32 -> float64 is the same exact widening as the per-row
-    python-float conversion."""
-    col = df.toArrow().column(vec).combine_chunks()
-    if len(col) == 0:
-        return np.zeros((0, 0))
-    return _list_matrix(col).astype(np.float64)
+def _arrow_matrix(df: DataFrame, key: str, vec: str):
+    """Driver-side (keys as an Arrow array, (rows x dim) float64 matrix)
+    of a small table's key and embedding columns: the query table and
+    the IVF sample. Read via Arrow, not a row collect (measured 1.4 s
+    vs ~0.1 s at 80k x 64); float32 -> float64 is the same exact
+    widening as the per-row python-float conversion."""
+    t = df.select(key, vec).toArrow()
+    keys, vecs = (t.column(c).combine_chunks() for c in (key, vec))
+    return keys, _list_matrix(vecs).astype(np.float64)
 
 
-def _collect_queries(queries_df: DataFrame, q_key: str, q_vec: str):
-    """Driver-side query table (queries are few — the same boundedness
-    contract as the broadcast join this replaces). Returns (ids as an
-    Arrow array, Q float64 matrix, per-query sequential-fold norms)."""
-    from pyspark.sql.pandas.types import to_arrow_type
+def _corpus(emb_df: DataFrame, key: str, vec: str) -> DataFrame:
+    """The searchable corpus: key and vector of every row whose vector
+    is not NULL (a NULL vector has no cosine, so it is never a
+    candidate). Ahead of both the scan and the IVF sample."""
+    return emb_df.select(key, vec).where(F.col(vec).isNotNull())
 
-    rows = queries_df.select(q_key, q_vec).collect()
-    ids = pa.array([r[0] for r in rows], to_arrow_type(queries_df.schema[q_key].dataType))
-    if not rows:
-        return ids, np.zeros((0, 0)), np.zeros(0)
-    Q = np.array([r[1] for r in rows], dtype=np.float64)
-    qn = np.sqrt(_seq_fold_sums(Q))
-    return ids, Q, qn
+
+def _check_width(Q: np.ndarray, dim: int) -> None:
+    if Q.shape[1] != dim:
+        raise ValueError("query width %d != corpus vector width %d" % (Q.shape[1], dim))
 
 
 def _key_order(col) -> tuple[np.ndarray, np.ndarray]:
@@ -164,6 +166,77 @@ def _key_order(col) -> tuple[np.ndarray, np.ndarray]:
     return by_key, ranks
 
 
+def _topk(emb_df, queries_df, k, key, vec, q_key, q_vec, centroids=None, n_probe=0):
+    """The one cosine top-k scan behind both searches. The query side
+    is read and broadcast (queries are few); the corpus streams
+    map-side through a numpy kernel that replays the SQL sequential-
+    fold cosine bit for bit (see _seq_fold_sums) and pre-prunes each
+    batch to its top-k per query, so the only shuffle — the per-query
+    top-k window — sees k rows per (query, batch) instead of the full
+    |corpus| x |queries| score table.
+
+    centroids: None scores every corpus row for every query (exact).
+    Otherwise an (n_centroids x dim) IVF list matrix: each row joins
+    the list of its nearest centroid, and each query scores only the
+    rows of its n_probe closest lists."""
+    q_ids, Q = _arrow_matrix(queries_df, q_key, q_vec)
+    qn = np.sqrt(_seq_fold_sums(Q))
+    C = probes = None
+    if centroids is not None:
+        # query -> its n_probe closest centroid lists (deterministic
+        # tie-break on list id via stable argsort)
+        C = centroids.T  # (dim, n_centroids)
+        if len(q_ids) and C.size:
+            _check_width(Q, C.shape[0])
+            probes = np.argsort(-(Q @ C), axis=1, kind="stable")[:, :n_probe]
+        else:
+            probes = np.zeros((len(q_ids), 0), dtype=np.int64)
+    bc = emb_df.sparkSession.sparkContext.broadcast((q_ids, Q, qn, C, probes))
+    out_schema = T.StructType(
+        [
+            T.StructField(q_key, queries_df.schema[q_key].dataType),
+            T.StructField(key, emb_df.schema[key].dataType),
+            T.StructField("cosine", T.DoubleType()),
+        ]
+    )
+
+    def score(batches):
+        q_ids_l, Q_l, qn_l, C_l, probes_l = bc.value
+        if not len(q_ids_l):
+            return
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            V32 = _list_matrix(batch.column(vec))
+            _check_width(Q_l, V32.shape[1])
+            by_key, ranks = _key_order(batch.column(key))
+            rows_per_q = None
+            if C_l is not None:
+                # the list assignment is a BLAS matmul over a whole
+                # Arrow batch, so its float sums depend on the batch's
+                # shape. Safe for the exact ann_ivf oracle: that
+                # variation is bounded far below the >=1e-6 assignment
+                # margin the fixture asserts at generation
+                # (sources/truth.py). argmax ties -> lowest list id.
+                assign = np.argmax(V32 @ C_l, axis=1)
+                rows_per_q = [np.nonzero(np.isin(assign, p))[0] for p in probes_l]
+            out_q, out_k, out_c = _batch_topk_scores(V32, ranks, Q_l, qn_l, k, rows_per_q)
+            if out_q:
+                yield {
+                    q_key: take(q_ids_l, np.concatenate(out_q)),
+                    key: take(batch.column(key), by_key[np.concatenate(out_k)]),
+                    "cosine": np.concatenate(out_c),
+                }
+
+    scored = map_arrow(_corpus(emb_df, key, vec), score, out_schema)
+    w = Window.partitionBy(q_key).orderBy(F.col("cosine").desc(), F.col(key).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(q_key, key, "cosine", F.col("rank").cast("int").alias("rank"))
+    )
+
+
 def cosine_topk(
     emb_df: DataFrame,
     queries_df: DataFrame,
@@ -173,60 +246,22 @@ def cosine_topk(
     q_key: str = "q_id",
     q_vec: str = "q_vec",
 ) -> DataFrame:
-    """Exact top-k by cosine for each query vector. The query side is
-    collected and broadcast (queries are few); the corpus streams
-    map-side through a numpy kernel that replays the SQL sequential-
-    fold cosine bit-for-bit (see _seq_fold_sums) and pre-prunes each
-    batch to its top-k per query, so the only shuffle — the per-query
-    top-k window — sees k rows per (query, batch) instead of the full
-    |corpus| x |queries| score table (measured 3.3 s -> 0.4 s on the
-    sf1.0 bench: the JVM higher-order-function fold evaluated 3
-    interpreted 64-element folds per scored pair)."""
-    spark = emb_df.sparkSession
-    q_ids, Q, qn = _collect_queries(queries_df, q_key, q_vec)
-    bc = spark.sparkContext.broadcast((q_ids, Q, qn))
-    q_key_dt = queries_df.schema[q_key].dataType
-    key_dt = emb_df.schema[key].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(q_key, q_key_dt),
-            T.StructField(key, key_dt),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        q_ids_l, Q_l, qn_l = bc.value
-        if not len(q_ids_l):
-            return
-        for batch in batches:
-            if batch.column(vec).null_count:
-                # a NULL vector scores NULL cosine in the SQL form and
-                # never outranks a real candidate; drop it here
-                batch = batch.filter(batch.column(vec).is_valid())
-            if not batch.num_rows:
-                continue
-            V32 = _list_matrix(batch.column(vec))
-            by_key, ranks = _key_order(batch.column(key))
-            out_q, out_k, out_c = _batch_topk_scores(V32, ranks, Q_l, qn_l, k)
-            if out_q:
-                yield {
-                    q_key: take(q_ids_l, np.concatenate(out_q)),
-                    key: take(batch.column(key), by_key[np.concatenate(out_k)]),
-                    "cosine": np.concatenate(out_c),
-                }
-
-    scored = map_arrow(emb_df.select(key, vec), score, out_schema)
-    w = Window.partitionBy(q_key).orderBy(F.col("cosine").desc(), F.col(key).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(q_key, key, "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    """Exact top-k by cosine for each query vector: one ``_topk`` scan
+    over every non-NULL corpus vector (measured 3.3 s -> 0.4 s on the
+    sf1.0 bench against the JVM higher-order-function fold, which
+    evaluated 3 interpreted 64-element folds per scored pair). Output
+    (q_key, key, cosine, rank), rank 1..k by (cosine DESC, key ASC)."""
+    return _topk(emb_df, queries_df, k, key, vec, q_key, q_vec)
 
 
-def _lloyd(sample: np.ndarray, n_centroids: int, iters: int = 5, seed: int = 13) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+# the IVF centroid build trains on at most this many corpus rows (the
+# smallest keys), starting Lloyd's from an rng seeded with _SEED
+_MAX_SAMPLE = 100_000
+_SEED = 13
+
+
+def _lloyd(sample: np.ndarray, n_centroids: int, iters: int = 5) -> np.ndarray:
+    rng = np.random.default_rng(_SEED)
     idx = rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
     centroids = sample[idx].copy()
     for _ in range(iters):
@@ -252,102 +287,30 @@ def cosine_topk_ivf(
     vec: str = "embedding",
     q_key: str = "q_id",
     q_vec: str = "q_vec",
-    sample_fraction: float = 1.0,
-    max_sample: int = 100_000,
-    seed: int = 13,
 ) -> DataFrame:
-    """IVF approximate top-k: centroids from a deterministic seeded
-    sample; corpus rows carry their nearest-centroid list id; each
-    query probes its n_probe closest lists. Scales as
-    O(rows/n_centroids * n_probe) per query instead of O(rows).
+    """IVF approximate top-k: the ``_topk`` scan of cosine_topk, with
+    each query restricted to the corpus rows of its n_probe closest
+    centroid lists. Scales as O(rows/n_centroids * n_probe) per query
+    instead of O(rows); with n_probe >= n_centroids it returns exactly
+    cosine_topk's rows.
 
-    The centroid build trains Lloyd's on a driver-side sample that is
-    HARD-CAPPED at ``max_sample`` rows — never an O(corpus) collect,
-    so the build path is safe at 10^9+ vectors; training k-means on a
-    bounded sample is the standard IVF procedure. Quality only needs
-    sample >> n_centroids. The cap takes the max_sample SMALLEST keys
-    (TakeOrderedAndProject: O(n log k) scan, bounded memory, no full
-    sort) rather than a bare limit(), whose row choice would depend on
-    partition layout and make centroids — and therefore query results —
-    nondeterministic across parallelism levels.
+    Lloyd's trains on a driver-side sample HARD-CAPPED at _MAX_SAMPLE
+    rows — never an O(corpus) collect, so the build path is safe at
+    10^9+ vectors; training k-means on a bounded sample is the
+    standard IVF procedure. Quality only needs sample >> n_centroids.
+    The cap takes the _MAX_SAMPLE SMALLEST keys (TakeOrderedAndProject:
+    O(n log k) scan, bounded memory, no full sort) rather than a bare
+    limit(), whose row choice would depend on partition layout and
+    make centroids — and therefore query results — nondeterministic
+    across parallelism levels.
 
-    List assignment, probe filtering and the sequential-fold cosine
-    scoring run FUSED in one numpy kernel over the corpus scan (the
-    former assign -> broadcast-join -> JVM fold chain materialized the
-    full candidate table and paid 3 interpreted 64-element folds per
-    scored pair); each batch emits only its per-query top-k survivors
-    into the final window (measured 4.6 s -> ~1 s at bench sf1.0, of
-    which the Arrow sample transfer replacing the row-path collect is
-    another ~1.2 s). Assignments, probes and cosines are computed with
-    the identical float64 arithmetic as before (f32->f64 casts are
-    exact; see _seq_fold_sums)."""
-    spark = emb_df.sparkSession
-    sample_df = (
-        emb_df.select(key, vec)
-        .sample(fraction=sample_fraction, seed=seed)
-        .orderBy(key)
-        .limit(max_sample)
-    )
-    sample = _vectors_to_matrix(sample_df, vec)
+    List assignment, probe filtering and scoring run fused in the one
+    scan kernel, and each batch emits only its per-query top-k
+    survivors into the window (measured 4.6 s -> ~1 s at bench sf1.0
+    against the former assign -> broadcast-join -> JVM fold chain)."""
+    sample_df = _corpus(emb_df, key, vec).orderBy(key).limit(_MAX_SAMPLE)
+    _, sample = _arrow_matrix(sample_df, key, vec)
     sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    centroids = _lloyd(sample, n_centroids, seed=seed)
-
-    # query -> its n_probe closest centroid lists (deterministic
-    # tie-break on list id via stable argsort) — driver-side; the
-    # query table is broadcast-sized by the same contract as before
-    q_ids, Q, qn = _collect_queries(queries_df, q_key, q_vec)
-    C = centroids.T  # (dim, n_centroids)
-    if len(q_ids) and C.size:
-        probes = np.argsort(-(Q @ C), axis=1, kind="stable")[:, :n_probe]
-    else:
-        probes = np.zeros((len(q_ids), 0), dtype=np.int64)
-    bc = spark.sparkContext.broadcast((q_ids, Q, qn, probes, C))
-
-    q_key_dt = queries_df.schema[q_key].dataType
-    key_dt = emb_df.schema[key].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(q_key, q_key_dt),
-            T.StructField(key, key_dt),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def assign_and_score(batches):
-        q_ids_l, Q_l, qn_l, probes_l, C_l = bc.value
-        if not len(q_ids_l):
-            return
-        # the list assignment below is a BLAS matmul over a whole Arrow
-        # batch, so its float sums depend on the batch's shape. Safe
-        # for the exact ann_ivf oracle: that variation is bounded far
-        # below the >=1e-6 assignment margin the fixture asserts at
-        # generation (sources/truth.py).
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            V32 = _list_matrix(batch.column(vec))
-            by_key, ranks = _key_order(batch.column(key))
-            # argmax of dot products; ties -> lowest list id (argmax
-            # first-occurrence), matching a deterministic assignment
-            assign = np.argmax(V32 @ C_l, axis=1)
-            rows_per_q = [
-                np.nonzero(np.isin(assign, probes_l[j]))[0]
-                for j in range(len(q_ids_l))
-            ]
-            out_q, out_k, out_c = _batch_topk_scores(
-                V32, ranks, Q_l, qn_l, k, per_query_rows=rows_per_q
-            )
-            if out_q:
-                yield {
-                    q_key: take(q_ids_l, np.concatenate(out_q)),
-                    key: take(batch.column(key), by_key[np.concatenate(out_k)]),
-                    "cosine": np.concatenate(out_c),
-                }
-
-    scored = map_arrow(emb_df.select(key, vec), assign_and_score, out_schema)
-    w = Window.partitionBy(q_key).orderBy(F.col("cosine").desc(), F.col(key).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(q_key, key, "cosine", F.col("rank").cast("int").alias("rank"))
+    return _topk(
+        emb_df, queries_df, k, key, vec, q_key, q_vec, _lloyd(sample, n_centroids), n_probe
     )

@@ -106,10 +106,11 @@ def language_scores(text_col: Column) -> Column:
     return F.map_from_entries(F.array(*entries))
 
 
-def detect_language(df: DataFrame, text: str = "text", out: str = "lang_pred") -> DataFrame:
-    """argmax over language_scores with deterministic lang-name
-    tie-break."""
-    scores = language_scores(F.col(text)).alias("_scores")
+def _argmax_lang(df: DataFrame, scores: Column, out: str) -> DataFrame:
+    """``out`` = the lang with the highest score in a lang -> score map.
+    array_max on (score, lang) structs orders by score, then lang:
+    deterministic, and on score ties the LARGEST lang name wins
+    (lexicographic)."""
     df = df.withColumn("_scores", scores)
     best = F.array_max(
         F.transform(
@@ -117,9 +118,13 @@ def detect_language(df: DataFrame, text: str = "text", out: str = "lang_pred") -
             lambda e: F.struct(e["value"].alias("score"), e["key"].alias("lang")),
         )
     )
-    # array_max on struct orders by (score, lang): deterministic, and
-    # on score ties the LARGEST lang name wins (lexicographic)
     return df.withColumn(out, best["lang"]).drop("_scores")
+
+
+def detect_language(df: DataFrame, text: str = "text", out: str = "lang_pred") -> DataFrame:
+    """argmax over language_scores with deterministic lang-name
+    tie-break."""
+    return _argmax_lang(df, language_scores(F.col(text)), out)
 
 
 # character-trigram profiles (high-frequency trigrams incl. word
@@ -167,14 +172,7 @@ def char_trigram_scores(text_col: Column) -> Column:
 def detect_language_ngram(df: DataFrame, text: str = "text", out: str = "lang_pred") -> DataFrame:
     """argmax over char_trigram_scores with the same deterministic
     largest-lang-name tie-break as detect_language."""
-    df = df.withColumn("_scores", char_trigram_scores(F.col(text)))
-    best = F.array_max(
-        F.transform(
-            F.map_entries(F.col("_scores")),
-            lambda e: F.struct(e["value"].alias("score"), e["key"].alias("lang")),
-        )
-    )
-    return df.withColumn(out, best["lang"]).drop("_scores")
+    return _argmax_lang(df, char_trigram_scores(F.col(text)), out)
 
 
 def doc_fingerprint(text_col: Column) -> Column:

@@ -292,12 +292,13 @@ def ann_truth(
 ) -> pa.Table:
     """Expected (q_id, vec_id, rank) of the IVF top-k pipeline,
     re-derived driver-side: the deterministic centroid build (all rows
-    in key order — sample(1.0) keeps every row — f64-normalized, 5
-    Lloyd rounds from the rng(seed) start), argmax list assignment,
+    in key order — the fixture is under the sample cap — f64-normalized,
+    5 Lloyd rounds from the rng(seed) start), argmax list assignment,
     stable-argsort probe selection, and the exact sequential-fold
     cosine with (cosine DESC, vec_id ASC) ranking. Every float op
-    replays the operator's op order (operators/similarity.py:84-178),
-    so the distributed result must match row-for-row."""
+    replays the operator's op order (operators/similarity.py: _lloyd,
+    _topk, _batch_topk_scores), so the distributed result must match
+    row-for-row."""
     ids = emb.column("vec_id").to_numpy()
     vecs = np.array(
         [np.asarray(v, dtype=np.float64) for v in emb.column("embedding").to_pylist()]

@@ -162,7 +162,64 @@ def test_ragged_embeddings_raise(spark):
         [(1, [1.0]), (2, [2.0, 3.0, 4.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="ragged"):
-        similarity._vectors_to_matrix(df, "embedding")
+        similarity._arrow_matrix(df, "vec_id", "embedding")
+
+
+# both searches, with the IVF one probing every list
+SEARCHES = {
+    "exact": lambda corpus, queries: similarity.cosine_topk(corpus, queries, k=5),
+    "ivf": lambda corpus, queries: similarity.cosine_topk_ivf(
+        corpus, queries, k=5, n_centroids=2, n_probe=2
+    ),
+}
+
+
+@pytest.mark.parametrize("search", SEARCHES.values(), ids=SEARCHES.keys())
+def test_null_vectors_are_not_candidates(spark, search):
+    """A corpus row with a NULL embedding is dropped by both searches,
+    ahead of the scan and of the IVF sample (which read it as a
+    zero-length row: "ragged embedding column")."""
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame([(10, [1.0, 0.5])], "q_id long, q_vec array<float>")
+    got = sorted((r.rank, r.vec_id) for r in search(corpus, queries).collect())
+    assert got == [(1, 4), (2, 1), (3, 3)]
+
+
+@pytest.mark.parametrize("q_vec", [[1.0, 0.5, 0.25], [1.0]], ids=["wider", "narrower"])
+@pytest.mark.parametrize("search", SEARCHES.values(), ids=SEARCHES.keys())
+def test_query_width_must_match_corpus(spark, search, q_vec):
+    """A query whose width differs from the corpus vectors' raises,
+    naming both widths, instead of scoring a prefix of the query (a
+    wider query) or failing on an index (a narrower one)."""
+    from pyspark.errors import PythonException
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(1, 5)], "vec_id long, embedding array<float>"
+    )
+    queries = spark.createDataFrame([(10, q_vec)], "q_id long, q_vec array<float>")
+    width = r"query width %d != corpus vector width 2" % len(q_vec)
+    with pytest.raises((ValueError, PythonException), match=width):
+        search(corpus, queries).collect()
+
+
+def test_ivf_probing_every_list_is_exact_search(spark, embs):
+    """cosine_topk_ivf is cosine_topk's scan with fewer candidates:
+    probing every list, it returns exactly cosine_topk's rows, cosines
+    bit for bit."""
+    queries = embs.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+
+    def rows(df):
+        return sorted((r.q_id, r.vec_id, r.cosine.hex(), r.rank) for r in df.collect())
+
+    exact = rows(similarity.cosine_topk(embs, queries, k=5))
+    ivf = rows(similarity.cosine_topk_ivf(embs, queries, k=5, n_centroids=8, n_probe=8))
+    assert len(exact) == 5 * queries.count()
+    assert ivf == exact
 
 
 def test_ivf_recall_reasonable(spark, embs):

@@ -248,6 +248,34 @@ def test_kernels_cross_into_python_as_arrow(spark, tiles_df, scenes_df, pages_df
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
+def test_ivf_centroid_sample_is_a_capped_top_n(spark, monkeypatch):
+    """The IVF centroid sample is the smallest keys of the non-NULL
+    corpus, read on the driver through one capped TakeOrderedAndProject:
+    no Sample node (a fraction-1.0 Sample is a no-op scan step), neither
+    in that read nor in the search plan."""
+    from rio_toa_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = emb.limit(2).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    read_plans = []
+    to_arrow = type(emb).toArrow
+
+    def spy(df):
+        read_plans.append(_plan(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(emb), "toArrow", spy)
+    out = similarity.cosine_topk_ivf(emb, queries, k=3, n_centroids=2, n_probe=1)
+    for plan in read_plans + [_plan(out)]:
+        assert "Sample" not in plan, plan
+    sample_plans = [p for p in read_plans if "TakeOrderedAndProject" in p]
+    assert len(sample_plans) == 1, read_plans
+    assert "isnotnull(embedding" in sample_plans[0], sample_plans[0]
+
+
 def test_map_arrow_cast_raises_on_overflow(spark):
     """map_arrow casts each yielded dict to the Spark schema with a
     checked cast: an int64 value that does not fit an IntegerType
